@@ -12,13 +12,26 @@ Scale notes (the point of each design):
   pairs found by banding the simhash into 4×16-bit keys (any equal
   16-bit band → candidate), same single-shuffle groupBy shape.
 - ngram-jaccard: verification metric on candidate pairs only.
+
+Construction rule: the LSH, simhash and pair-enumeration expressions
+are written as SQL text (``selectExpr`` / one ``F.expr`` per output
+column) rather than assembled from ``F.*``/``Column`` calls. In PySpark 4
+every such call costs py4j round trips to the driver JVM (reflection
+plus Python call-site capture): measured ``F.col`` = 13, an ``F.expr``
+= 3, a ``selectExpr`` of any width = 7. Per-bit and per-band Python
+loops multiply that: ``simhash64`` built from Column calls issued
+~8,100 round trips (≈1.1–1.3 s of driver time per plan, more than its
+executors spend on a 1,000-doc corpus); as SQL text the JVM parses
+each expression once and the build issues ~300. The parsed plans are
+the same trees the Column form produced. Column names that callers
+supply are backtick-quoted with :func:`_q`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from nebula_spark.functions.text import words
+from nebula_spark.functions.text import words_sql
 
 # Collision groups wider than this are skipped by the pair enumerators.
 # A band key with m colliding docs costs m(m-1)/2 pairs NO MATTER the
@@ -28,6 +41,17 @@ from nebula_spark.functions.text import words
 # Such keys are degenerate (empty-shingle docs, boilerplate): the right
 # response is to widen band_size or pre-filter, not to enumerate them.
 DEFAULT_MAX_GROUP = 10_000
+
+
+def _q(name: str) -> str:
+    """Backtick-quote a column name for SQL text (embedded backticks
+    doubled), so any name a caller passes parses as one identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lower_words(text_col: str) -> str:
+    """SQL text: the lower-cased words of the text column ``text_col``."""
+    return words_sql(f"lower({_q(text_col)})")
 
 
 def _bounded_groups(banded: DataFrame, group_cols: list[str], max_group: int | None) -> DataFrame:
@@ -51,13 +75,14 @@ def _bounded_groups(banded: DataFrame, group_cols: list[str], max_group: int | N
     # visibly worse at 32 (tiny tasks, more per-partition window
     # overhead for ~100k-row stages).
     n = banded.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(n, *[F.col(c) for c in group_cols])
-    w = Window.partitionBy(*group_cols)
-    sized = banded.withColumn("_gsz", F.count(F.lit(1)).over(w))
-    cond = F.col("_gsz") > 1
-    if max_group is not None:
-        cond = cond & (F.col("_gsz") <= max_group)
-    return sized.filter(cond).drop("_gsz")
+    keys = [_q(c) for c in group_cols]
+    banded = banded.repartition(n, *keys)
+    cond = "_gsz > 1" if max_group is None else f"_gsz > 1 AND _gsz <= {max_group}"
+    return (
+        banded.selectExpr("*", f"count(1) OVER (PARTITION BY {', '.join(keys)}) AS _gsz")
+        .filter(cond)
+        .drop("_gsz")
+    )
 
 
 def spread(df: DataFrame, factor: int = 1, check: bool = True) -> DataFrame:
@@ -101,30 +126,21 @@ def _enumerate_pairs(
     The per-chunk rows carry one copy of the group array each, i.e.
     O(group²/chunk) bytes per group streamed, vs O(group²) for the
     one-row-per-MEMBER streaming alternative."""
-    m = F.size(F.col(garr))
-    nchunks = F.ceil((m - 1) / F.lit(chunk)).cast("int")
-    chunked = grouped.select(
-        *grouped.columns, F.explode(F.sequence(F.lit(0), nchunks - 1)).alias("_c")
+    g = _q(garr)
+    m = f"size({g})"
+    chunked = grouped.selectExpr(
+        "*", f"explode(sequence(0, CAST(ceil(({m} - 1) / {chunk}) AS INT) - 1)) AS _c"
     )
-    jlo = F.col("_c") * chunk + 2  # 1-based partner positions in garr
-    jhi = F.least((F.col("_c") + 1) * F.lit(chunk) + 1, m)
-
+    jlo = f"_c * {chunk} + 2"  # 1-based partner positions in garr
+    jhi = f"least((_c + 1) * {chunk} + 1, {m})"
     # element_at instead of a prefix slice per j: the slice copies the
     # j-element prefix for EVERY partner position (O(group²) element
     # copies per group); indexed access builds each pair in O(1)
-    def _partners(j):
-        return F.transform(
-            F.sequence(F.lit(1), j - 1),
-            lambda i: F.struct(
-                F.element_at(F.col(garr), i).alias("_x"),
-                F.element_at(F.col(garr), j).alias("_y"),
-            ),
-        )
-
-    pair_structs = F.flatten(F.transform(F.sequence(jlo, jhi), _partners))
-    return chunked.select(F.explode(pair_structs).alias("_p")).select(
-        "_p._x", "_p._y"
+    pair_structs = (
+        f"flatten(transform(sequence({jlo}, {jhi}), _j -> transform(sequence(1, _j - 1), "
+        f"_i -> struct(element_at({g}, _i) AS _x, element_at({g}, _j) AS _y))))"
     )
+    return chunked.selectExpr(f"explode({pair_structs}) AS _p").selectExpr("_p._x", "_p._y")
 
 
 def content_hash(text: Column | str) -> Column:
@@ -146,43 +162,34 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def shingles_of_words(w: Column, n: int = 3) -> Column:
-    """n-word shingles (distinct) over an ALREADY-PROJECTED words
-    column. Callers must bind the tokenized words to a real column
-    first: referencing the split() expression inside the per-shingle
-    lambda re-evaluates the whole tokenization once per shingle (the
-    interpreted higher-order evaluator has no subexpression reuse) —
-    measured 2× on the shingling pass; a column reference is O(1)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, n)))
+def shingles_of_words(words_col: str, n: int = 3) -> str:
+    """SQL text: n-word shingles (distinct) over the ALREADY-PROJECTED
+    words column named ``words_col``. Callers must bind the tokenized
+    words to a real column first: referencing the split() expression
+    inside the per-shingle lambda re-evaluates the whole tokenization
+    once per shingle (the interpreted higher-order evaluator has no
+    subexpression reuse) — measured 2× on the shingling pass; a column
+    reference is O(1)."""
+    w = _q(words_col)
+    return (
+        f"array_distinct(transform(sequence(1, greatest(size({w}) - {n - 1}, 1)), "
+        f"_i -> concat_ws(' ', slice({w}, _i, {n}))))"
     )
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """n-word shingles as strings (distinct). Prefer projecting
-    ``words(lower(text))`` to a column and calling
-    :func:`shingles_of_words` — see its note."""
-    w = words(F.lower(F.col(text) if isinstance(text, str) else text))
-    return shingles_of_words(w, n)
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 8) -> Column:
-    """MinHash signature: per hash family i, min(md5(shingle || i)).
-    md5 exists verbatim in DuckDB, so the oracle reproduces signatures
-    exactly. Returns array<string> of n_hashes minima."""
+def minhash_signature(shingles: str, n_hashes: int = 8) -> str:
+    """SQL text: MinHash signature of the shingle-array SQL expression
+    ``shingles`` — per hash family i, min(md5(shingle || '#i')). md5
+    exists verbatim in DuckDB, so the oracle reproduces signatures
+    exactly. Evaluates to array<string> of n_hashes minima."""
     # single pass over the shingle array: fold a running elementwise
     # minimum of the n_hashes md5 values per shingle ('~' > 'f' is the
     # +inf sentinel). One O(|shingles|) traversal instead of n_hashes.
-    inf = F.array(*[F.lit("~") for _ in range(n_hashes)])
-    return F.aggregate(
-        shingles,
-        inf,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.array(*[F.md5(F.concat(s, F.lit(f"#{i}"))) for i in range(n_hashes)]),
-            lambda a, b: F.least(a, b),
-        ),
+    inf = ", ".join(["'~'"] * n_hashes)
+    md5s = ", ".join(f"md5(concat(_s, '#{i}'))" for i in range(n_hashes))
+    return (
+        f"aggregate({shingles}, array({inf}), "
+        f"(_acc, _s) -> zip_with(_acc, array({md5s}), (_a, _b) -> least(_a, _b)))"
     )
 
 
@@ -211,36 +218,30 @@ def minhash_lsh_candidates(
     materialize the whole group in one task's memory here — groups
     above the cap are skipped via a same-shuffle window count (see
     _bounded_groups; None disables)."""
+    idq = _q(id_col)
     n_bands = n_hashes // band_size
     # two-step projection: words bound to a column BEFORE the
     # per-shingle lambda (see shingles_of_words) — the single-
     # expression form re-tokenized the document once per shingle
-    wd = spread(df).select(
-        F.col(id_col), words(F.lower(F.col(text_col))).alias("_wd")
+    wd = spread(df).selectExpr(idq, f"{_lower_words(text_col)} AS _wd")
+    sig = minhash_signature(shingles_of_words("_wd", shingle_n), n_hashes)
+    bands = ", ".join(
+        f"struct({b} AS band, concat_ws('|', slice(_sig, {b * band_size + 1}, {band_size})) AS key)"
+        for b in range(n_bands)
     )
-    sig = minhash_signature(shingles_of_words(F.col("_wd"), shingle_n), n_hashes)
-    banded = wd.select(F.col(id_col), sig.alias("_sig")).select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws("|", F.slice(F.col("_sig"), b * band_size + 1, band_size)).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    banded = (
+        wd.selectExpr(idq, f"{sig} AS _sig")
+        .selectExpr(idq, f"explode(array({bands})) AS bk")
+        .selectExpr(idq, "bk.band AS band", "bk.key AS key")
+    )
     grouped = (
         _bounded_groups(banded, ["band", "key"], max_group)
         .groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("_ids"))
+        .agg(F.expr(f"array_sort(collect_list({idq})) AS _ids"))
     )
     return (
         _enumerate_pairs(grouped, "_ids")
-        .select(F.col("_x").alias("doc_a"), F.col("_y").alias("doc_b"))
+        .selectExpr("_x AS doc_a", "_y AS doc_b")
         .distinct()
     )
 
@@ -253,29 +254,26 @@ def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame, text_col="text", id_col=
     magnitude smaller than the corpus, so shingling everything (and
     caching it, as this used to) is exactly backwards. The per-side
     recompute over that small set is cheaper than a persisted cache."""
+    idq = _q(id_col)
     cand_ids = (
-        df_pairs.select(F.col("doc_a").alias(id_col))
-        .union(df_pairs.select(F.col("doc_b").alias(id_col)))
+        df_pairs.selectExpr(f"doc_a AS {idq}")
+        .union(df_pairs.selectExpr(f"doc_b AS {idq}"))
         .distinct()
     )
     sh = (
         spread(docs.join(cand_ids, on=id_col, how="left_semi"), check=False)
-        .select(F.col(id_col), words(F.lower(F.col(text_col))).alias("_wd"))
-        .select(F.col(id_col), shingles_of_words(F.col("_wd"), n).alias("sh"))
+        .selectExpr(idq, f"{_lower_words(text_col)} AS _wd")
+        .selectExpr(idq, f"{shingles_of_words('_wd', n)} AS sh")
     )
     a = sh.alias("sa")
     b = sh.alias("sb")
     return (
-        df_pairs.join(a, df_pairs.doc_a == F.col(f"sa.{id_col}"))
-        .join(b, df_pairs.doc_b == F.col(f"sb.{id_col}"))
-        .select(
+        df_pairs.join(a, df_pairs.doc_a == F.col(f"sa.{idq}"))
+        .join(b, df_pairs.doc_b == F.col(f"sb.{idq}"))
+        .selectExpr(
             "doc_a",
             "doc_b",
-            F.round(
-                F.size(F.array_intersect("sa.sh", "sb.sh"))
-                / F.size(F.array_union("sa.sh", "sb.sh")),
-                4,
-            ).alias("jaccard"),
+            "round(size(array_intersect(sa.sh, sb.sh)) / size(array_union(sa.sh, sb.sh)), 4) AS jaccard",
         )
     )
 
@@ -338,62 +336,51 @@ def near_dedup(
 _ODD_HEX = ("1", "3", "5", "7", "9", "b", "d", "f")  # doc: the parity set
 # the translate() in simhash64 encodes exactly this membership test
 
+# ONE translate maps each hex char to its parity bit ('0'/'1'), so the
+# 64 per-bit probes become substring == '1' instead of substring IN (8
+# odd hex chars) — identical votes (char odd ⟺ parity '1'), measured
+# ~25% off the vote aggregation, which dominates simhash64
+_SIMHASH_PARITY = (
+    "translate(concat(md5(_w), md5(concat(_w, '#1'))), "
+    "'0123456789abcdef', '0101010101010101') AS _hh"
+)
+_SIMHASH_VOTES = [
+    f"sum(CASE WHEN substring(_hh, {j + 1}, 1) = '1' THEN 1 ELSE -1 END) AS _b{j}"
+    for j in range(64)
+]
+_SIMHASH_BITS = [f"CAST(_b{j} > 0 AS BIGINT)" for j in range(64)]
+# j=63 wraps to the sign bit — intended
+_SIMHASH_FOLD = (
+    "CAST(0 AS BIGINT) + "
+    + " + ".join(f"shiftleft({b}, {j})" for j, b in enumerate(_SIMHASH_BITS))
+    + " AS simhash"
+)
+_SIMHASH_SIMBITS = (
+    "concat(" + ", ".join(f"CAST({b} AS STRING)" for b in _SIMHASH_BITS) + ") AS simbits"
+)
 
-def simhash64(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: str = "md5"
-) -> DataFrame:
+
+def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash per document: majority vote per bit over word
-    hashes. Default word bits come from md5 (two md5s = 64 hex chars,
-    bit j = parity of char j) so the DuckDB oracle re-derives the exact
-    hashes — the same trick minhash_signature uses. ``bits='xxhash64'``
-    is the throughput variant (one 64-bit JVM hash per word, ~2×
-    cheaper, no SQL twin) for production runs where cross-engine
-    verification isn't needed. Either way the plan is explode →
+    hashes. Word bits come from md5 (two md5s = 64 hex chars, bit j =
+    parity of char j) so the DuckDB oracle re-derives the exact hashes
+    — the same trick minhash_signature uses. The plan is explode →
     hash-aggregate with 64 codegen'd SUMs (partial agg map-side; one
     shuffle keyed by doc) — the scan shape that survives 10^9
-    documents, instead of 64 array traversals per row.
+    documents, instead of 64 array traversals per row. A doc whose
+    text is null has no words and no output row.
 
     Output: (id, simhash long — Spark-internal bit ops, e.g. banding /
     xor-popcount; simbits string — the 64-char '0'/'1' form the oracle
     compares)."""
-    c = F.col(text_col)
-    df = spread(df)
-    w = F.col("_w")
-    exploded = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(words(F.lower(c)))).alias("_w"),
+    idq = _q(id_col)
+    exploded = (
+        spread(df)
+        .selectExpr(idq, f"explode(array_distinct({_lower_words(text_col)})) AS _w")
+        .selectExpr(idq, _SIMHASH_PARITY)
     )
-    if bits == "xxhash64":
-        exploded = exploded.select(F.col(id_col), F.xxhash64(w).alias("_h"))
-        bit_j = lambda j: F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1)) == 1  # noqa: E731
-    else:
-        # ONE translate maps each hex char to its parity bit ('0'/'1'),
-        # so the 64 per-bit probes become substring == '1' instead of
-        # substring IN (8 odd hex chars) — identical votes (char odd ⟺
-        # parity '1'), measured ~25% off the vote aggregation, which
-        # dominates this operator
-        exploded = exploded.select(
-            F.col(id_col),
-            F.translate(
-                F.concat(F.md5(w), F.md5(F.concat(w, F.lit("#1")))),
-                "0123456789abcdef",
-                "0101010101010101",
-            ).alias("_hh"),
-        )
-        bit_j = lambda j: F.substring(F.col("_hh"), j + 1, 1) == "1"  # noqa: E731
-    votes = [
-        F.sum(F.when(bit_j(j), 1).otherwise(-1)).alias(f"_b{j}")
-        for j in range(64)
-    ]
-    agg = exploded.groupBy(id_col).agg(*votes)
-    bit_cols = [(F.col(f"_b{j}") > 0).cast("long") for j in range(64)]
-    out = F.lit(0).cast("long")
-    for j, b in enumerate(bit_cols):
-        out = out + F.shiftleft(b, j)  # j=63 wraps to the sign bit — intended
-    simbits = F.concat(*[b.cast("string") for b in bit_cols])
-    return agg.select(
-        F.col(id_col), out.alias("simhash"), simbits.alias("simbits")
-    )
+    agg = exploded.groupBy(idq).agg(*[F.expr(v) for v in _SIMHASH_VOTES])
+    return agg.selectExpr(idq, _SIMHASH_FOLD, _SIMHASH_SIMBITS)
 
 
 def simhash_near_pairs(
@@ -411,32 +398,18 @@ def simhash_near_pairs(
     the old self-join recomputed the full 64-sum simhash aggregation
     for BOTH sides (or needed a leaked persist to avoid it).
     ``max_group`` skips degenerate collision groups exactly as there."""
-    bands = sim.select(
-        F.col(id_col),
-        F.col(hash_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col(hash_col), b * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, hash_col, "bk.band", "bk.key")
+    idq, h = _q(id_col), _q(hash_col)
+    bands = ", ".join(
+        f"struct({b} AS band, shiftright({h}, {b * 16}) & 65535 AS key)" for b in range(4)
+    )
+    banded = sim.selectExpr(idq, h, f"explode(array({bands})) AS bk").selectExpr(
+        idq, h, "bk.band", "bk.key"
+    )
     grouped = (
-        _bounded_groups(bands, ["band", "key"], max_group)
+        _bounded_groups(banded, ["band", "key"], max_group)
         .groupBy("band", "key")
-        .agg(
-            # sorted by id (first struct field) → doc_a < doc_b for free
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col), F.col(hash_col)))
-            ).alias("_g")
-        )
+        # sorted by id (first struct field) → doc_a < doc_b for free
+        .agg(F.expr(f"array_sort(collect_list(struct({idq}, {h}))) AS _g"))
     )
     # NOTE: a "first matching band only" pair filter would remove the
     # distinct's duplicated shuffle, but it changes the result set the
@@ -445,12 +418,10 @@ def simhash_near_pairs(
     # a later band) — rejected to keep the operator's output identical.
     return (
         _enumerate_pairs(grouped, "_g")
-        .select(
-            F.col("_x")[id_col].alias("doc_a"),
-            F.col("_y")[id_col].alias("doc_b"),
-            F.bit_count(
-                F.col("_x")[hash_col].bitwiseXOR(F.col("_y")[hash_col])
-            ).alias("hamming"),
+        .selectExpr(
+            f"_x.{idq} AS doc_a",
+            f"_y.{idq} AS doc_b",
+            f"bit_count(_x.{h} ^ _y.{h}) AS hamming",
         )
         .distinct()
     )

@@ -86,20 +86,25 @@ def hyperplane_signs(
     ]
 
 
-def hyperplane_bucket(vec: Column, n_planes: int = 8, seed: int = 42, dim: int = 64) -> Column:
-    """Sign-bit LSH bucket key: char i = sign(<v, h_i>) over the
-    deterministic hyperplanes above; returned as an n_planes-char
-    '0'/'1' string (equi-joinable, engine-portable)."""
+def hyperplane_bucket(vec_col: str, n_planes: int = 8, seed: int = 42, dim: int = 64) -> Column:
+    """Sign-bit LSH bucket key of the vector column named ``vec_col``:
+    char i = sign(<v, h_i>) over the deterministic hyperplanes above;
+    returned as an n_planes-char '0'/'1' string (equi-joinable,
+    engine-portable). Built as ONE SQL expression, each plane one array
+    literal: the Column-API form cost ~3,100 py4j round trips per build
+    (see the construction rule in dedupe.py)."""
+    from nebula_spark.functions.dedupe import _q
+
+    v = _q(vec_col)
     bits = []
     for signs in hyperplane_signs(n_planes, seed, dim):
-        plane = F.array(*[F.lit(s) for s in signs])
-        proj = F.aggregate(
-            F.zip_with(vec, plane, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        plane = ", ".join(f"{s}D" for s in signs)
+        proj = (
+            f"aggregate(zip_with({v}, array({plane}), (_x, _s) -> CAST(_x AS DOUBLE) * _s), "
+            "0.0D, (_acc, _p) -> _acc + _p)"
         )
-        bits.append(F.when(proj > 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+        bits.append(f"CASE WHEN {proj} > 0 THEN '1' ELSE '0' END")
+    return F.expr(f"concat({', '.join(bits)})")
 
 
 def embedding_near_dups(
@@ -131,7 +136,7 @@ def embedding_near_dups(
     b = spread(corpus).select(
         F.col(id_col),
         F.col(vec_col).alias("_v"),
-        hyperplane_bucket(F.col(vec_col), n_planes, dim=dim).alias("_bkt"),
+        hyperplane_bucket(vec_col, n_planes, dim=dim).alias("_bkt"),
     )
     grouped = (
         _bounded_groups(b, ["_bkt"], max_group)
@@ -313,12 +318,12 @@ def lsh_topk(
     ).select(
         "neighbor_id",
         "_cv",
-        hyperplane_bucket(F.col("_cv"), n_planes, dim=dim).alias("_bkt"),
+        hyperplane_bucket("_cv", n_planes, dim=dim).alias("_bkt"),
     )
     qb = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        hyperplane_bucket(F.col(vec_col), n_planes, dim=dim).alias("_bkt"),
+        hyperplane_bucket(vec_col, n_planes, dim=dim).alias("_bkt"),
     )
     # broadcast the query side explicitly — same BuildLeft hazard as
     # ivf_topk: letting the planner broadcast the corpus side computes

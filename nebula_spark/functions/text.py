@@ -22,6 +22,12 @@ def words(text: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
+def words_sql(text: str) -> str:
+    """:func:`words` as SQL text over the SQL expression ``text`` —
+    the same split(trim(...)) tree once the JVM parses it."""
+    return f"split(trim({text}), '\\\\s+')"
+
+
 def token_count(text: Column | str) -> Column:
     """Whitespace token count — the cheap n_tok estimator."""
     return F.size(words(text))

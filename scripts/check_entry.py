@@ -14,7 +14,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entry
-from nebula_spark.session import get_spark
+from nebula_spark.session import default_parallelism, get_spark
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -30,7 +30,7 @@ def norm(v):
 
 
 def main(sf_dir: str, only: list[str]):
-    spark = get_spark("check-entry", parallelism=8)
+    spark = get_spark("check-entry", parallelism=default_parallelism())
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
