@@ -54,18 +54,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the rows of a small-file scan across the session's
-    cores BEFORE the per-row heavy expressions are projected (a compact
-    parquet is one input split, so regex/tokenize/Arrow work would
-    otherwise run in a single task). No-op when the scan is already
-    parallel; never changes any query's result — every consumer below
-    is row-wise or partitioning-agnostic by construction."""
-    from nebula_spark.functions.dedupe import spread
-
-    return spread(df)
-
-
 def _changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → CDC change feed (SURVEY §1.2 event model)."""
     ev = _t(spark, sf_dir, "events")
@@ -606,6 +594,7 @@ def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nebula_spark.functions.dedupe import spread
     from nebula_spark.functions.text import (
         bpe_ish_token_count,
         fingerprint,
@@ -613,7 +602,7 @@ def _text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count,
     )
 
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     return d.select(
         "doc_id",
         token_count("text").alias("n_words"),
@@ -626,9 +615,10 @@ def _text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _derived_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (doc_id, tokens array<int>) with token ids = word
     lengths: deterministic, SQL-twinnable token payloads."""
+    from nebula_spark.functions.dedupe import spread
     from nebula_spark.functions.text import words
 
-    return _spread(_t(spark, sf_dir, "documents")).select(
+    return spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.transform(words("text"), lambda w: F.length(w)).alias("tokens"),
     )
@@ -742,10 +732,11 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nebula_spark.functions.dedupe import spread
     from nebula_spark.functions.text import words
     from nebula_spark.functions.tokens import pack_sequences
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.transform(words("text"), lambda w: F.length(w)).alias("tokens"),
         # stored length column (size(transform(x, f)) == size(x), so
@@ -771,9 +762,10 @@ def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing through mapInPandas: documents as fake media
     payloads (UTF-8 bytes), features fingerprinted back to the sha256
     bytes both engines can derive."""
+    from nebula_spark.functions.dedupe import spread
     from nebula_spark.functions.multimodal import extract_features
 
-    media = _spread(_t(spark, sf_dir, "documents")).select(
+    media = spread(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").cast("string").alias("media_id"),
         F.when(F.length("text") % 2 == 0, F.lit("image"))
         .otherwise(F.lit("audio"))
@@ -827,9 +819,10 @@ def _sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _word_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nebula_spark.functions.dedupe import spread
     from nebula_spark.functions.text import words
 
-    d = _spread(_t(spark, sf_dir, "documents"))
+    d = spread(_t(spark, sf_dir, "documents"))
     return (
         d.select(F.explode(words(F.lower(F.col("text")))).alias("word"))
         .groupBy("word")
@@ -839,9 +832,10 @@ def _word_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nebula_spark.functions.dedupe import spread
     from nebula_spark.functions.text import quality_score
 
-    return _spread(_t(spark, sf_dir, "documents")).select(
+    return spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", quality_score("text").alias("quality")
     )
 

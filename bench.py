@@ -12,7 +12,10 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      BENCH_REPS interleaved repetitions per query (default 3; per-query
      value reported is BEST-OF, with every round's time in
      query_rounds — single runs are meaningless under this host's
-     documented ~10× CPU-steal variance).
+     documented ~10× CPU-steal variance),
+     NEBULA_MERGE_MODE / NEBULA_DEDUP_HOW / NEBULA_RESOLVE_STRATEGY pick
+     the replay table's merge mode and apply_changes' dedup_how /
+     resolve_strategy (default cow / auto / auto).
 
 Scaling-efficiency evidence (N vs 4N cores) is produced by
 scripts/scaling_bench.py → BENCH/BASELINE.md; this file reports the
@@ -49,6 +52,10 @@ def run_cdc_replay(spark, sf: float, cpus: int, workdir: str, warm: bool = True)
     n_docs = max(int(os.environ.get("BENCH_DOCS", n_events // 2)), 100)
     n_batches = int(os.environ.get("BENCH_BATCHES", 3))
     max_tok = int(os.environ.get("BENCH_MAX_TOK", 256))
+    policy = {
+        "dedup_how": os.environ.get("NEBULA_DEDUP_HOW", "auto"),
+        "resolve_strategy": os.environ.get("NEBULA_RESOLVE_STRATEGY", "auto"),
+    }
 
     # BENCH_BUCKET_ALIGNED: producer-side bucket alignment (16 residues,
     # fixed across parallelism levels) — pairs with the map-only merge
@@ -119,7 +126,7 @@ def run_cdc_replay(spark, sf: float, cpus: int, workdir: str, warm: bool = True)
             # (map-only) is valid only on merge-on-read tables
             properties={"merge_mode": os.environ.get("NEBULA_MERGE_MODE", "cow")},
         )
-        apply_changes(spark, wt, gen_binlog(spark, 2000, 500, seed=7), epoch=0)
+        apply_changes(spark, wt, gen_binlog(spark, 2000, 500, seed=7), epoch=0, **policy)
         shutil.rmtree(warm_dir, ignore_errors=True)
 
     per_chunk_events = n_events / n_batches
@@ -127,7 +134,7 @@ def run_cdc_replay(spark, sf: float, cpus: int, workdir: str, warm: bool = True)
     batch_secs: list[float] = []
     for i, chunk in enumerate(chunks):
         tb = time.time()
-        apply_changes(spark, table, spark.read.parquet(chunk), epoch=i)
+        apply_changes(spark, table, spark.read.parquet(chunk), epoch=i, **policy)
         batch_secs.append(time.time() - tb)
     dt = time.time() - t0
     # sustained = steady-state rate (first batch carries JVM/codegen

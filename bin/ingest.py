@@ -533,7 +533,11 @@ def main(argv=None):
     rp.add_argument("--table", required=True)
     rp.add_argument("--dlq", required=True)
     rp.add_argument("--reasons", default="failed-")
-    rp.add_argument("--conflict", default=None)
+    rp.add_argument(
+        "--conflict",
+        choices=["last_write_wins", "first_write_wins", "merge", "reject"],
+        default="last_write_wins",
+    )
     rp.set_defaults(fn=cmd_reprocess)
 
     rs = sub.add_parser("rescale")

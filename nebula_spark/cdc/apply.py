@@ -15,7 +15,6 @@ It runs identically as a batch call or inside
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -55,8 +54,8 @@ def apply_changes(
     evolution_policy: str = "default",
     renames: dict[str, str] | None = None,
     dedup_how: str = "auto",
-    resolve_strategy: str | None = None,
-    conflict: str | None = None,
+    resolve_strategy: str = "auto",
+    conflict: str = "last_write_wins",
     dlq_table: LakeTable | None = None,
     dlq_ns: str = "",
     count_inputs: bool = False,
@@ -177,10 +176,9 @@ def apply_changes(
         table,
         df,
         epoch=epoch,
-        dedup_how=os.environ.get("NEBULA_DEDUP_HOW", dedup_how),
-        resolve_strategy=resolve_strategy
-        or os.environ.get("NEBULA_RESOLVE_STRATEGY", "auto"),
-        conflict=conflict or os.environ.get("NEBULA_CONFLICT", "last_write_wins"),
+        dedup_how=dedup_how,
+        resolve_strategy=resolve_strategy,
+        conflict=conflict,
         on_rejected=_route_rejected if dlq_table is not None else None,
     )
     if dlq_table is not None:

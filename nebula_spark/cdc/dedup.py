@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-STRATEGIES = ("agg", "window", "salted", "join")
+STRATEGIES = ("agg", "window", "salted")
 
 
 def lww_dedup(
@@ -58,16 +58,6 @@ def lww_dedup(
             .filter(F.col("_rn") == 1)
             .select(*cols)
         )
-
-    if how == "join":
-        # fat-batch path: max(seq) is a primitive-typed HashAggregate
-        # (whole-stage codegen, no object hash map of array payloads),
-        # then a semi-join picks the winner rows. Two codegen'd hash
-        # ops instead of one object-hash agg — wins when the batch has
-        # millions of keys with wide payloads.
-        agg_fn = F.min if first_writer_wins else F.max
-        winners = df.groupBy(key).agg(agg_fn(seq).alias(seq))
-        return df.join(winners, on=[key, seq], how="leftsemi").select(*cols)
 
     payload = [c for c in cols if c != key]
     # struct ordered by seq first => max == latest event, deterministically

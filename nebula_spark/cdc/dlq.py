@@ -47,17 +47,7 @@ def reprocess_dlq(
     epochs used. ``apply_kwargs`` pass through to apply_changes (e.g. a
     corrected event_filter/transforms — the reason the batch poisoned
     in the first place is usually fixed by one of these)."""
-    # resolve the EFFECTIVE conflict the same way apply_changes does —
-    # with no explicit kwarg it falls back to NEBULA_CONFLICT, and an
-    # env value of 'reject' would hit the same loss scenario the guard
-    # below describes (replayed events re-rejected while their originals
-    # are tombstoned from the DLQ)
-    import os
-
-    effective_conflict = apply_kwargs.get("conflict") or os.environ.get(
-        "NEBULA_CONFLICT", "last_write_wins"
-    )
-    if effective_conflict == "reject":
+    if apply_kwargs.get("conflict") == "reject":
         raise ValueError(
             "reprocessing with conflict='reject' would re-reject the very "
             "events being replayed and tombstone them from the DLQ — they'd "

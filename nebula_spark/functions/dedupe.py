@@ -226,17 +226,17 @@ def minhash_lsh_candidates(
     wd = spread(df).selectExpr(idq, f"{_lower_words(text_col)} AS _wd")
     sig = minhash_signature(shingles_of_words("_wd", shingle_n), n_hashes)
     bands = ", ".join(
-        f"struct({b} AS band, concat_ws('|', slice(_sig, {b * band_size + 1}, {band_size})) AS key)"
+        f"struct({b} AS _band, concat_ws('|', slice(_sig, {b * band_size + 1}, {band_size})) AS _key)"
         for b in range(n_bands)
     )
     banded = (
         wd.selectExpr(idq, f"{sig} AS _sig")
-        .selectExpr(idq, f"explode(array({bands})) AS bk")
-        .selectExpr(idq, "bk.band AS band", "bk.key AS key")
+        .selectExpr(idq, f"explode(array({bands})) AS _bk")
+        .selectExpr(idq, "_bk._band", "_bk._key")
     )
     grouped = (
-        _bounded_groups(banded, ["band", "key"], max_group)
-        .groupBy("band", "key")
+        _bounded_groups(banded, ["_band", "_key"], max_group)
+        .groupBy("_band", "_key")
         .agg(F.expr(f"array_sort(collect_list({idq})) AS _ids"))
     )
     return (
@@ -400,14 +400,14 @@ def simhash_near_pairs(
     ``max_group`` skips degenerate collision groups exactly as there."""
     idq, h = _q(id_col), _q(hash_col)
     bands = ", ".join(
-        f"struct({b} AS band, shiftright({h}, {b * 16}) & 65535 AS key)" for b in range(4)
+        f"struct({b} AS _band, shiftright({h}, {b * 16}) & 65535 AS _key)" for b in range(4)
     )
-    banded = sim.selectExpr(idq, h, f"explode(array({bands})) AS bk").selectExpr(
-        idq, h, "bk.band", "bk.key"
+    banded = sim.selectExpr(idq, h, f"explode(array({bands})) AS _bk").selectExpr(
+        idq, h, "_bk._band", "_bk._key"
     )
     grouped = (
-        _bounded_groups(banded, ["band", "key"], max_group)
-        .groupBy("band", "key")
+        _bounded_groups(banded, ["_band", "_key"], max_group)
+        .groupBy("_band", "_key")
         # sorted by id (first struct field) → doc_a < doc_b for free
         .agg(F.expr(f"array_sort(collect_list(struct({idq}, {h}))) AS _g"))
     )

@@ -68,7 +68,17 @@ def _bucket_aligned_shuffle(spark: SparkSession, n_buckets: int):
     by the local core count, and AQE's partition coalescing still
     merges undersized partitions when a small batch meets a wide
     table. ``NEBULA_SHUFFLE_PARTITIONS`` (the scaling-run pin: N and 4N
-    cores must shuffle identically) takes precedence when set."""
+    cores must shuffle identically) takes precedence when set.
+
+    The conf is set on ``spark``, the caller's session, so it reaches
+    only plans of frames that belong to that session. Inside
+    ``foreachBatch`` the batch frame belongs to the stream's cloned
+    session: there the stats job and the whole merge-on-read write plan
+    at that session's default width (16 shuffle partitions on a
+    4-core ``get_spark`` session with 4 buckets), and only the
+    copy-on-write resolve, built on the target read through ``spark``,
+    gets ``n_buckets``. Direct ``merge_into`` calls on frames of
+    ``spark`` get ``n_buckets`` throughout."""
     key = "spark.sql.shuffle.partitions"
     if os.environ.get("NEBULA_SHUFFLE_PARTITIONS"):
         yield
@@ -109,19 +119,21 @@ def _resolve(
     affected: list[int],
     op_col: str,
     seq_col: str,
-    strategy: str = "broadcast",
+    strategy: str,
     fww: bool = False,
     fieldmerge: bool = False,
     exclude_paths: dict[int, set[str]] | None = None,
     target_version: int | None = None,
 ) -> DataFrame:
-    """Order-independent LWW resolution of batch vs target.
+    """Order-independent LWW resolution of batch vs target with one of
+    the resolve strategies ``unionagg``, ``join`` or ``fullouter``.
 
-    Every outcome is a row (DELETE → tombstone), so the whole
-    matched-side resolution is ONE projection after ONE broadcast
-    left-outer join — the wide target scan is never recomputed and
-    never shuffled. Inserts need target *keys* only, which is a
-    column-pruned scan (parquet reads just the key + _seq columns).
+    Every outcome is a row (DELETE → tombstone). Under ``join`` the
+    whole matched-side resolution is ONE projection after ONE left-outer
+    join — AQE broadcasts a small batch, so the wide target scan is
+    never recomputed and never shuffled. Inserts need target *keys*
+    only, which is a column-pruned scan (parquet reads just the key +
+    _seq columns).
 
     A batch event wins a matched key iff its op_sequence is strictly
     greater than the stored row's _seq — so replayed/out-of-order
@@ -152,10 +164,6 @@ def _resolve(
         )
 
     if strategy == "unionagg":
-        if fieldmerge:
-            # field-level merge needs both row images side by side; the
-            # single-agg reduction can't coalesce across rows
-            raise ValueError("conflict='merge' requires a join-family resolve strategy")
         # one hash aggregation over (target ∪ batch): per key keep the
         # row with max _seq — identical LWW semantics, single shuffle,
         # partial agg combines map-side. Fewer stages than the join
@@ -206,11 +214,10 @@ def _resolve(
         ]
         return table.bucket_of(f.select(*cols))
 
-    # 'broadcast' forces the hint (known-small batches); 'join' lets
-    # AQE pick BHJ/SMJ from runtime sizes — forcing a broadcast of a
-    # fat batch stalls the driver for tens of seconds.
-    b_side = F.broadcast(b_a) if strategy == "broadcast" else b_a
-    joined = t_a.join(b_side, F.col(f"t.{key}") == F.col(f"b.{key}"), "left")
+    # 'join': AQE picks BHJ/SMJ from runtime sizes (a small batch
+    # broadcasts); forcing a broadcast of a fat batch would stall the
+    # driver for tens of seconds.
+    joined = t_a.join(b_a, F.col(f"t.{key}") == F.col(f"b.{key}"), "left")
     b_wins = F.col(f"b.{SEQ_COL}").isNotNull() & (
         F.lit(False)
         if fww
@@ -229,19 +236,135 @@ def _resolve(
     # inserts: batch keys absent from the touched buckets (key-only
     # scan; pruned files can't hold a batch key, so skipping them keeps
     # the anti-join complete)
-    t_keys = table.read(
-        spark,
-        buckets=affected,
-        include_internal=True,
-        exclude_paths=exclude_paths,
-        version=target_version,
-    ).select(key)
-    inserts = b.join(t_keys, on=key, how="left_anti")
+    inserts = b.join(target.select(key), on=key, how="left_anti")
 
     return table.bucket_of(resolved.unionByName(inserts))
 
 
 CONFLICT_STRATEGIES = ("last_write_wins", "first_write_wins", "merge", "reject")
+DEDUP_CHOICES = ("auto", "agg", "window", "salted", "none")
+RESOLVE_CHOICES = ("auto", "unionagg", "join", "fullouter")
+
+# the thresholds of the ``auto`` choices (measured at 1M-event batches,
+# BENCH/): a copy-on-write merge resolves with ``unionagg`` while the
+# touched buckets hold less than UNIONAGG_MAX_BYTES, else with ``join``
+# below JOIN_MAX_KEYS batch keys, else with ``fullouter``; the in-batch
+# dedup is ``window`` from WINDOW_DEDUP_MIN_EVENTS batch events, else
+# ``agg``
+UNIONAGG_MAX_BYTES = 256 * 1024 * 1024
+JOIN_MAX_KEYS = 200_000
+WINDOW_DEDUP_MIN_EVENTS = 500_000
+
+
+def plan_merge(
+    *,
+    merge_mode: str,
+    conflict: str,
+    dedup_how: str,
+    resolve_strategy: str,
+    already_deduped: bool,
+    events_in: int,
+    keys_touched: int,
+    touched_bytes: int | None,
+    mor_conflict: str | None = None,
+) -> tuple[str | None, str | None]:
+    """The merge policy, decided once from the caller's choices and the
+    batch's statistics: ``(dedup, resolve)`` — the ``lww_dedup``
+    strategy, or None to take the batch as it is, and the resolve
+    strategy against the target, or None for a merge-on-read append.
+    Raises ValueError for a combination the merge cannot run, before
+    any write job.
+
+    ``touched_bytes`` (stored bytes of the touched buckets) is read only
+    by a copy-on-write ``auto`` resolve; ``mor_conflict`` (the table's
+    read-time fold) only on a merge-on-read table."""
+    for name, value, choices in (
+        ("conflict", conflict, CONFLICT_STRATEGIES),
+        ("dedup", dedup_how, DEDUP_CHOICES),
+        ("resolve", resolve_strategy, RESOLVE_CHOICES),
+    ):
+        if value not in choices:
+            raise ValueError(f"unknown {name} strategy {value!r}; one of {choices}")
+    mor = merge_mode == "mor"
+    if dedup_how == "none" and not mor:
+        raise ValueError(
+            "dedup_how='none' (map-only merge) requires a "
+            "merge-on-read table: copy-on-write resolution needs a "
+            "key-unique batch"
+        )
+    if mor and conflict != mor_conflict:
+        raise ValueError(
+            f"this merge-on-read table resolves "
+            f"conflict={mor_conflict!r} at read time; a merge "
+            f"with conflict={conflict!r} would append rows the read "
+            "fold interprets under the other rule. last_write_wins "
+            "and first_write_wins are read-time folds chosen by the "
+            "table's 'conflict' property at create; reject/merge "
+            "need the pre-merge target state and stay CoW-only"
+        )
+
+    if mor:
+        resolve = None
+    elif resolve_strategy != "auto":
+        resolve = resolve_strategy
+    # three regimes: small touched data → one hash-agg, fewest stages;
+    # huge table, small batch → join, the batch broadcasts and the
+    # table side never shuffles; huge table, fat batch → one full-outer
+    # SMJ covers matched + both unmatched sides in a single pass (the
+    # left-join plan would shuffle the table AND scan it twice)
+    elif touched_bytes < UNIONAGG_MAX_BYTES and conflict != "merge":
+        resolve = "unionagg"
+    elif keys_touched < JOIN_MAX_KEYS:
+        resolve = "join"
+    else:
+        resolve = "fullouter"
+    if resolve == "unionagg" and conflict == "merge":
+        # field-level merge needs both row images side by side; the
+        # single-agg reduction can't coalesce across rows
+        raise ValueError("conflict='merge' requires a join-family resolve strategy")
+
+    if already_deduped or dedup_how == "none":
+        # 'none' is the MAP-ONLY merge (MoR only): the read-time fold
+        # already resolves EVERY version of a key, so within-batch
+        # duplicates change nothing but appended bytes. What it buys at
+        # scale: the dedup exchange is the ONE all-to-all shuffle in the
+        # MoR write path, and on multi-executor topologies it moves the
+        # full token payload through serde+network (measured 3.2× cost
+        # at 4 executor JVMs, BENCH/BASELINE.md round 4). With it gone
+        # the whole merge is scan → project → partitioned write: zero
+        # exchanges. Best used with a bucket-aligned change feed
+        # (write_binlog_chunks(bucket_key=...)) so each input split
+        # holds few buckets and the file count stays at one per (task,
+        # bucket).
+        dedup = None
+    elif dedup_how != "auto":
+        dedup = dedup_how
+    elif resolve == "unionagg" and conflict == "last_write_wins":
+        # the unionagg resolve IS a LWW max-per-key fold over (target ∪
+        # batch): folding the raw batch directly returns the same
+        # winners as dedup-then-fold (max over a set == max over its
+        # per-key maxima), so a separate in-batch dedup just shuffles
+        # the full payload one extra time (guide §2.4). Ties: when the
+        # batch holds two events with the same (key, op_sequence) —
+        # outside op_sequence's total-order contract — lww_dedup picks
+        # between the raw batch rows, while the fold compares their
+        # table projections (delete payloads nulled, _pri added), so
+        # the surviving image can differ from an explicit dedup_how.
+        # LWW only: the FWW fold keeps target rows but takes the
+        # MAX-seq batch row per key, so FWW still needs its min-seq
+        # in-batch dedup. Never on MoR (its resolve is None): there the
+        # skip would make the append map-only. Explicit dedup_how
+        # requests are honored.
+        dedup = None
+    else:
+        # measured (BENCH/BASELINE.md round 2): for fat batches the
+        # window dedup (partial+final WindowGroupLimit) leaves its
+        # output hash-partitioned AND key-sorted, so the downstream SMJ
+        # re-sorts nothing — 2 exchanges total vs 4 for the agg shape,
+        # ~35% faster at 1M+ events. Small micro-batches keep the
+        # one-agg plan (fewest stages).
+        dedup = "window" if events_in >= WINDOW_DEDUP_MIN_EVENTS else "agg"
+    return dedup, resolve
 
 
 @dataclass
@@ -325,6 +448,10 @@ def merge_into(
     plus ``op_col``/``seq_col`` (and optionally ``partition_col`` for
     per-source-partition lineage offsets).
 
+    Three steps: plan (the stats job, then ``plan_merge``), write (the
+    merge-on-read append or the copy-on-write resolve and rewrite), and
+    one table commit.
+
     ``conflict`` mirrors the reference's four resolver strategies
     (internal/pipeline/cdc.go:197-221):
 
@@ -355,28 +482,19 @@ def merge_into(
     """
     from nebula_spark.cdc.dedup import lww_dedup  # lazy: avoids lake<->cdc cycle
 
-    if conflict not in CONFLICT_STRATEGIES:
-        raise ValueError(
-            f"unknown conflict strategy {conflict!r}; one of {CONFLICT_STRATEGIES}"
-        )
     t0 = time.time()
     res = MergeResult(epoch=epoch)
+    if epoch is not None and table.epoch_applied(epoch):
+        res.skipped = True
+        return res
     key = table.key_col
     nb = table.n_buckets  # layout this merge is computed under; the
     # commit re-checks it so a concurrent rescale conflicts cleanly
 
-    if epoch is not None and table.epoch_applied(epoch):
-        res.skipped = True
-        return res
-
-    deduped = None
-    needs_persist = False
-    _aligned = _bucket_aligned_shuffle(spark, nb)
-    _aligned.__enter__()
-    try:
-        # job 1 (cheap, column-pruned: key/op/seq/partition only — no
-        # dedup, no arrays): touched buckets, event counters, and
-        # per-source-partition high-water marks for lineage.
+    with _bucket_aligned_shuffle(spark, nb):
+        # --- plan. The stats job (cheap, column-pruned: key/op/seq/
+        # partition only — no dedup, no arrays): touched buckets, event
+        # counters, and per-source-partition high-water marks for lineage.
         grain = [bucket_expr(key, nb).alias("_bucket")] + (
             [F.col(partition_col)] if partition_col and partition_col in batch.columns else []
         )
@@ -407,132 +525,51 @@ def merge_into(
         res.rows_upserted = res.events_in - res.rows_deleted
         # approx distinct keys, free in the same agg; summed per stats
         # cell it can double-count a key spanning source partitions, so
-        # it stays a (tight) upper bound — good as the broadcast
-        # threshold, honest as a metric
-        res.keys_touched = min(
-            int(sum(r["nk"] for r in stats)), res.events_in
-        )
+        # it stays a (tight) upper bound — good as the join threshold,
+        # honest as a metric
+        res.keys_touched = min(int(sum(r["nk"] for r in stats)), res.events_in)
         res.buckets_touched = len(affected)
-
         if len(grain) > 1:
             for r in stats:
                 pid = str(r[partition_col])
                 res.partitions[pid] = max(res.partitions.get(pid, -1), int(r["mx"]))
 
-        applied_update = None
-        if epoch is not None:
-            applied_update = {
-                str(epoch): {"partitions": res.partitions, "events": res.events_in}
-            }
-
-        if not affected:
-            # empty batch: still record the epoch in the manifest
-            snap = table.commit(
-                applied_update=applied_update,
-                summary={"operation": "merge-empty", "epoch": epoch},
-                expect_n_buckets=nb,
-            )
-            res.version = snap.version
-            return res
-
-        strategy = resolve_strategy
-        if strategy == "auto":
-            # three regimes (measured at 1M-event batches, BENCH/):
-            # - small touched data → unionagg: one hash-agg, fewest stages
-            # - huge table, small batch → join: batch broadcasts, the
-            #   table side never shuffles
-            # - huge table, fat batch → fullouter: one SMJ covers
-            #   matched + both unmatched sides in a single pass (the
-            #   left-join plan would shuffle the table AND scan it twice)
-            limit = int(os.environ.get("NEBULA_UNIONAGG_MAX_BYTES", 256 * 1024 * 1024))
-            small_batch = int(os.environ.get("NEBULA_BROADCAST_MAX_KEYS", 200_000))
-            if table.bucket_bytes(affected) < limit and conflict != "merge":
-                strategy = "unionagg"
-            elif res.keys_touched < small_batch:
-                strategy = "join"
-            else:
-                strategy = "fullouter"
-
-        fww = conflict == "first_write_wins"
-        how = dedup_how
-        if how == "none":
-            # MAP-ONLY merge (MoR only): skip the in-batch dedup
-            # entirely — the read-time fold already resolves EVERY
-            # version of a key, so within-batch duplicates change
-            # nothing but appended bytes. What it buys at scale: the
-            # dedup exchange is the ONE all-to-all shuffle in the MoR
-            # write path, and on multi-executor topologies it moves the
-            # full token payload through serde+network (measured 3.2×
-            # cost at 4 executor JVMs, BENCH/BASELINE.md round 4). With
-            # it gone the whole merge is scan → project → partitioned
-            # write: zero exchanges, bytes never leave the executor
-            # that read them. Best used with a bucket-aligned change
-            # feed (write_binlog_chunks(bucket_key=...)) so each input
-            # split holds few buckets and the file count stays at one
-            # per (task, bucket).
-            if table.merge_mode != "mor":
-                raise ValueError(
-                    "dedup_how='none' (map-only merge) requires a "
-                    "merge-on-read table: copy-on-write resolution needs a "
-                    "key-unique batch"
-                )
-            how = None
-        if how == "auto":
-            # measured (BENCH/BASELINE.md round 2): for fat batches the
-            # window dedup (partial+final WindowGroupLimit) leaves its
-            # output hash-partitioned AND key-sorted, so the downstream
-            # SMJ re-sorts nothing — 2 exchanges total vs 4 for the
-            # agg/semijoin shapes, ~35% faster at 1M+ events. Small
-            # micro-batches keep the one-agg plan (fewest stages).
-            big = int(os.environ.get("NEBULA_WINDOW_DEDUP_MIN_EVENTS", 500_000))
-            how = "window" if res.events_in >= big else "agg"
-        if (
-            strategy == "unionagg"
-            and table.merge_mode != "mor"  # MoR appends never reach the
-            # unionagg resolve; skipping ITS dedup would silently turn
-            # the merge map-only (more appended bytes, non-key-unique
-            # files, costlier reads)
-            and conflict == "last_write_wins"
-            and how is not None
-            and dedup_how == "auto"
-        ):
-            # the unionagg resolve IS a LWW max-per-key fold over
-            # (target ∪ batch): folding the raw batch directly returns
-            # the same winners as dedup-then-fold (max over a set ==
-            # max over its per-key maxima), so a separate in-batch
-            # dedup just shuffles the full payload one extra time
-            # (guide §2.4 — two operations keyed the same way should
-            # share one exchange; here the second op subsumes the
-            # first). LWW only: the FWW fold keeps target rows but
-            # takes the MAX-seq batch row per key, so FWW still needs
-            # its min-seq in-batch dedup. Explicit dedup_how requests
-            # are honored unchanged.
-            how = None
-        deduped = (
-            batch
-            if already_deduped or how is None
-            else lww_dedup(
-                batch, key=key, seq=seq_col, how=how, first_writer_wins=fww
-            )
+        mode = table.merge_mode
+        dedup, resolve = plan_merge(
+            merge_mode=mode,
+            conflict=conflict,
+            dedup_how=dedup_how,
+            resolve_strategy=resolve_strategy,
+            already_deduped=already_deduped,
+            events_in=res.events_in,
+            keys_touched=res.keys_touched,
+            # one snapshot parse, paid only where the choice reads it
+            touched_bytes=(
+                table.bucket_bytes(affected)
+                if mode != "mor" and resolve_strategy == "auto"
+                else None
+            ),
+            mor_conflict=table.mor_conflict if mode == "mor" else None,
         )
-        if table.merge_mode == "mor":
-            # merge-on-read: APPEND the deduped batch rows to the
-            # touched buckets — no target scan, no join, no bucket
-            # rewrite, so per-batch cost is flat in table size (the
-            # copy-on-write path rewrites every touched bucket, which
-            # for key-spread change streams approaches a full-table
-            # rewrite per batch as the table grows). Readers resolve
-            # LWW per key (LakeTable.read); compaction folds versions.
-            if conflict != table.mor_conflict:
-                raise ValueError(
-                    f"this merge-on-read table resolves "
-                    f"conflict={table.mor_conflict!r} at read time; a merge "
-                    f"with conflict={conflict!r} would append rows the read "
-                    "fold interprets under the other rule. last_write_wins "
-                    "and first_write_wins are read-time folds chosen by the "
-                    "table's 'conflict' property at create; reject/merge "
-                    "need the pre-merge target state and stay CoW-only"
-                )
+        fww = conflict == "first_write_wins"
+        deduped = batch if dedup is None else lww_dedup(
+            batch, key=key, seq=seq_col, how=dedup, first_writer_wins=fww
+        )
+
+        # --- write
+        new_files, replace = None, {}
+        summary = {"operation": "merge-empty", "epoch": epoch}
+        if affected:
+            summary.update(keys=res.keys_touched, buckets=res.buckets_touched)
+        if affected and mode == "mor":
+            # merge-on-read: APPEND the batch rows to the touched
+            # buckets — no target scan, no join, no bucket rewrite, so
+            # per-batch cost is flat in table size (the copy-on-write
+            # path rewrites every touched bucket, which for key-spread
+            # change streams approaches a full-table rewrite per batch
+            # as the table grows). Readers resolve per key
+            # (LakeTable.read); compaction folds versions.
+            summary["operation"] = "merge-append"
             rows = table.bucket_of(_as_table_rows(deduped, table, op_col, seq_col))
             commit_dir = table.new_commit_dir()
             rows.write.partitionBy("_bucket").mode("append").parquet(commit_dir)
@@ -540,99 +577,109 @@ def merge_into(
             # write files that may hold several versions of a key — mark
             # them so the read fold never plain-scans them
             new_files = LakeTable.list_written_files(
-                commit_dir,
-                key_unique=already_deduped or how is not None,
-                key_col=key,
+                commit_dir, key_unique=already_deduped or dedup is not None, key_col=key
             )
-            snap = table.commit(
-                new_files_by_bucket=new_files,
-                applied_update=applied_update,
-                summary={
-                    "operation": "merge-append",
-                    "epoch": epoch,
-                    "keys": res.keys_touched,
-                    "buckets": res.buckets_touched,
-                },
-                expect_n_buckets=nb,
+        elif affected:
+            summary["operation"] = "merge"
+            new_files, replace, summary["files_kept"] = _rewrite_buckets(
+                spark, table, deduped, res, key, affected, key_bounds, resolve,
+                conflict, on_rejected, op_col, seq_col,
             )
-            res.version = snap.version
-            return res
-        # FILE pruning (CoW only): a live file whose recorded key range
-        # misses the batch's per-bucket key span is left out of the
-        # target scan AND kept (unrewritten) in the commit — sound
-        # because a bucket's live files are key-disjoint under CoW, so
-        # a pruned file can hold no matched key and hide no insert.
-        # Biggest win on monotonic-PK feeds, where a fresh batch never
-        # touches old id ranges; uniform random keys prune nothing and
-        # fall back to the full-bucket rewrite.
-        #
-        # The whole resolve/prune/replace cycle is pinned to ONE
-        # snapshot version: pruning decisions, the target scans, and
-        # the commit's kept-file list must all describe the same file
-        # set, and with FILE-level replace a concurrent rewrite (e.g.
-        # an external compaction) landing between plan and commit is
-        # NOT content-preserving the way a bucket-level replace is —
-        # the merge output lacks the pruned files' rows, so silently
-        # replacing the compacted file would lose them. base_version
-        # makes that window a clean ConcurrentBucketConflict instead.
-        pin = table.snapshot()
-        pruned = table.prunable_files(
-            affected, key_bounds, version=pin.version
-        )
-        if conflict == "reject":
-            # conflict = key already live in the target: surface those
-            # events instead of applying them; the remainder merges
-            # normally (tombstoned keys still respect LWW vs the
-            # tombstone's _seq). Materialized eagerly — after the
-            # commit the target state changes and a lazy plan would
-            # recompute a different set.
-            live = (
-                table.read(
-                    spark,
-                    buckets=affected,
-                    include_internal=True,
-                    exclude_paths=pruned,
-                    version=pin.version,
-                )
-                .filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-                .select(key)
-            )
-            rejected = deduped.join(live, on=key, how="leftsemi").persist()
-            res.rows_rejected = rejected.count()
-            # rejected events never reach the table — keep the applied
-            # counter honest (they're reported on rows_rejected instead)
-            res.rows_upserted = max(0, res.rows_upserted - res.rows_rejected)
-            if on_rejected is not None:
-                try:
-                    if res.rows_rejected:
-                        on_rejected(rejected)
-                finally:
-                    rejected.unpersist()
-            else:
-                res.rejected = rejected
-            deduped = deduped.join(live, on=key, how="leftanti")
-        deduped = table.bucket_of(deduped)
-        # the join/broadcast plans reference the batch twice (matched +
-        # inserts); single-pass plans (unionagg/fullouter) keep it lazy
-        # so dedup fuses straight into the resolve+write job
-        needs_persist = strategy in ("join", "broadcast")
-        if needs_persist:
-            deduped = deduped.persist()
+        # an empty batch commits too: its epoch is recorded in the manifest
 
+        # --- commit
+        applied_update = None
+        if epoch is not None:
+            applied_update = {
+                str(epoch): {"partitions": res.partitions, "events": res.events_in}
+            }
+        snap = table.commit(
+            new_files_by_bucket=new_files,
+            applied_update=applied_update,
+            summary=summary,
+            expect_n_buckets=nb,
+            **replace,
+        )
+    res.version = snap.version
+    res.seconds = time.time() - t0
+    return res
+
+
+def _rewrite_buckets(
+    spark: SparkSession, table: LakeTable, deduped: DataFrame, res: MergeResult,
+    key: str, affected: list[int], key_bounds: dict[int, tuple], resolve: str,
+    conflict: str, on_rejected, op_col: str, seq_col: str,
+) -> tuple[dict, dict, int]:
+    """Copy-on-write write of ``merge_into``: resolve the batch against
+    the touched buckets and write their new files. Returns (new files
+    by bucket, the commit's replace arguments, files kept unrewritten).
+
+    FILE pruning: a live file whose recorded key range misses the
+    batch's per-bucket key span is left out of the target scan AND kept
+    (unrewritten) in the commit — sound because a bucket's live files
+    are key-disjoint under CoW, so a pruned file can hold no matched key
+    and hide no insert. Biggest win on monotonic-PK feeds, where a fresh
+    batch never touches old id ranges; uniform random keys prune nothing
+    and fall back to the full-bucket rewrite.
+
+    The whole resolve/prune/replace cycle is pinned to ONE snapshot
+    version: pruning decisions, the target scans, and the commit's
+    kept-file list must all describe the same file set, and with
+    FILE-level replace a concurrent rewrite (e.g. an external
+    compaction) landing between plan and commit is NOT
+    content-preserving the way a bucket-level replace is — the merge
+    output lacks the pruned files' rows, so silently replacing the
+    compacted file would lose them. base_version makes that window a
+    clean ConcurrentBucketConflict instead."""
+    pin = table.snapshot()
+    pruned = table.prunable_files(affected, key_bounds, version=pin.version)
+    if conflict == "reject":
+        # conflict = key already live in the target: surface those
+        # events instead of applying them; the remainder merges
+        # normally (tombstoned keys still respect LWW vs the
+        # tombstone's _seq). Materialized eagerly — after the commit
+        # the target state changes and a lazy plan would recompute a
+        # different set.
+        live = (
+            table.read(
+                spark,
+                buckets=affected,
+                include_internal=True,
+                exclude_paths=pruned,
+                version=pin.version,
+            )
+            .filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+            .select(key)
+        )
+        rejected = deduped.join(live, on=key, how="leftsemi").persist()
+        res.rows_rejected = rejected.count()
+        # rejected events never reach the table — keep the applied
+        # counter honest (they're reported on rows_rejected instead)
+        res.rows_upserted = max(0, res.rows_upserted - res.rows_rejected)
+        if on_rejected is not None:
+            try:
+                if res.rows_rejected:
+                    on_rejected(rejected)
+            finally:
+                rejected.unpersist()
+        else:
+            res.rejected = rejected
+        deduped = deduped.join(live, on=key, how="leftanti")
+    deduped = table.bucket_of(deduped)
+    # the join plan references the batch twice (matched + inserts);
+    # single-pass plans (unionagg/fullouter) keep it lazy so dedup
+    # fuses straight into the resolve+write job
+    needs_persist = resolve == "join"
+    if needs_persist:
+        deduped = deduped.persist()
+    try:
         merged = _resolve(
-            spark,
-            table,
-            deduped,
-            affected,
-            op_col,
-            seq_col,
-            strategy,
-            fww=fww,
+            spark, table, deduped, affected, op_col, seq_col, resolve,
+            fww=conflict == "first_write_wins",
             fieldmerge=conflict == "merge",
             exclude_paths=pruned,
             target_version=pin.version,
         )
-
         commit_dir = table.new_commit_dir()
         # NO repartition before the write: the resolve plans leave data
         # hash-partitioned by key (or file-partitioned per bucket), and
@@ -640,44 +687,27 @@ def merge_into(
         # hold few buckets each. partitionBy splits the dirs; compaction
         # consolidates stragglers.
         merged.write.partitionBy("_bucket").mode("append").parquet(commit_dir)
-
-        new_files = LakeTable.list_written_files(commit_dir, key_col=key)
-        if pruned:
-            # file-level replace: rewrite exactly the scanned files of
-            # the PINNED snapshot, keep the key-disjoint ones; the
-            # commit's base_version guard turns any intervening commit
-            # into a clean conflict (see the pin comment above)
-            pin_files = pin.files_for(affected)  # O(touched segments)
-            replace_kw = {
-                "replaced_files": {
-                    b: [
-                        e["path"]
-                        for e in pin_files.get(b, [])
-                        if e["path"] not in pruned.get(b, set())
-                    ]
-                    for b in affected
-                },
-                "base_version": pin.version,
-            }
-        else:
-            replace_kw = {"replaced_buckets": affected}
-        snap = table.commit(
-            new_files_by_bucket=new_files,
-            applied_update=applied_update,
-            summary={
-                "operation": "merge",
-                "epoch": epoch,
-                "keys": res.keys_touched,
-                "buckets": res.buckets_touched,
-                "files_kept": sum(len(v) for v in pruned.values()),
-            },
-            expect_n_buckets=nb,
-            **replace_kw,
-        )
-        res.version = snap.version
-        return res
     finally:
-        _aligned.__exit__(None, None, None)
-        if needs_persist and deduped is not None:
+        if needs_persist:
             deduped.unpersist()
-        res.seconds = time.time() - t0
+
+    replace: dict = {"replaced_buckets": affected}
+    if pruned:
+        # file-level replace: rewrite exactly the scanned files of the
+        # PINNED snapshot, keep the key-disjoint ones; the commit's
+        # base_version guard turns any intervening commit into a clean
+        # conflict (see the pin note above)
+        pin_files = pin.files_for(affected)  # O(touched segments)
+        replace = {
+            "replaced_files": {
+                b: [
+                    e["path"]
+                    for e in pin_files.get(b, [])
+                    if e["path"] not in pruned.get(b, set())
+                ]
+                for b in affected
+            },
+            "base_version": pin.version,
+        }
+    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
+    return new_files, replace, sum(len(v) for v in pruned.values())

@@ -47,7 +47,7 @@ def run_stream(
     event_filter: EventFilter | None = None,
     evolution_policy: str = "default",
     renames: dict[str, str] | None = None,
-    conflict: str | None = None,
+    conflict: str = "last_write_wins",
     dedup_how: str = "auto",
     dlq_table: LakeTable | None = None,
     available_now: bool = True,
@@ -191,8 +191,6 @@ def run_stream(
         else:
             metrics["events"] += res.merge.events_in
         if auto_compact_files and not res.merge.skipped:
-            import os
-
             from nebula_spark.lake.maintenance import compact
 
             # cluster mode counts only files OUTSIDE the ideal sorted
@@ -221,10 +219,7 @@ def run_stream(
                     # see the docstring: requires per-partition-ordered
                     # delivery; refused under first-write-wins (a FWW
                     # tombstone beats ANY later seq and must persist)
-                    effective_conflict = conflict or os.environ.get(
-                        "NEBULA_CONFLICT", "last_write_wins"
-                    )
-                    fww = effective_conflict == "first_write_wins" or (
+                    fww = conflict == "first_write_wins" or (
                         table.merge_mode == "mor"
                         and table.mor_conflict == "first_write_wins"
                     )
@@ -315,7 +310,7 @@ class TableRoute:
     transforms: list[Transform] = field(default_factory=list)
     evolution_policy: str = "default"
     renames: dict[str, str] | None = None
-    conflict: str | None = None
+    conflict: str = "last_write_wins"
     # payload projection: restrict this table to a column subset of the
     # (union-schema) stream — the per-table column filter. Envelope
     # columns are always kept.

@@ -37,7 +37,7 @@ def _fresh(tmp_path, name):
 def test_conflict_merge_field_level(spark, tmp_path):
     """conflict='merge': a winning batch event updates matched rows
     column-by-column — null batch fields keep the stored value."""
-    for strat in ("join", "fullouter", "broadcast"):
+    for strat in ("join", "fullouter"):
         table = _fresh(tmp_path, f"m_{strat}")
         merge_into(
             spark,
@@ -189,7 +189,7 @@ def test_unionagg_seq_tie_keeps_target(spark, tmp_path):
     """A re-sent event with the SAME op_sequence but a different image
     must not flip the stored row (target outranks batch on ties) —
     uniform across every resolve strategy."""
-    for strat in ("unionagg", "join", "broadcast", "fullouter"):
+    for strat in ("unionagg", "join", "fullouter"):
         table = _fresh(tmp_path, f"tie_{strat}")
         merge_into(
             spark,

@@ -10,7 +10,11 @@ import pytest
 from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql.types import StringType, StructField, StructType
 
-from nebula_spark.functions.dedupe import minhash_lsh_candidates, simhash64
+from nebula_spark.functions.dedupe import (
+    minhash_lsh_candidates,
+    simhash64,
+    simhash_near_pairs,
+)
 from nebula_spark.functions.similarity import hyperplane_bucket
 
 ID, TEXT = "doc`id", "body text"  # the first needs backtick quoting
@@ -72,33 +76,51 @@ def _minhash_pairs_ref(corpus, n_hashes, band_size, shingle_n):
     return {p for ids in groups.values() for p in combinations(sorted(ids), 2)}
 
 
-@pytest.fixture()
-def docs(spark):
-    schema = StructType([StructField(ID, StringType()), StructField(TEXT, StringType())])
+def _simhash_pairs_ref(hashes):
+    """Pairs sharing any 16-bit band of their simhash, with the Hamming
+    distance."""
+    out = set()
+    for (a, ha), (b, hb) in combinations(sorted(hashes.items()), 2):
+        if any((ha >> s) & 0xFFFF == (hb >> s) & 0xFFFF for s in (0, 16, 32, 48)):
+            out.add((a, b, bin((ha ^ hb) & (1 << 64) - 1).count("1")))
+    return out
+
+
+def _docs(spark, id_col):
+    schema = StructType([StructField(id_col, StringType()), StructField(TEXT, StringType())])
     return spark.createDataFrame(CORPUS, schema)
 
 
-def test_simhash64_matches_hashlib_reference(docs):
-    got = {
-        r[ID]: (r["simhash"], r["simbits"])
-        for r in simhash64(docs, text_col=TEXT, id_col=ID).collect()
-    }
+# "band" and "key" are named like the banding steps' own columns
+@pytest.mark.parametrize("id_col", [pytest.param(ID, id="quoted"), "band", "key"])
+def test_simhash64_matches_hashlib_reference(spark, id_col):
+    sim = simhash64(_docs(spark, id_col), text_col=TEXT, id_col=id_col)
+    got = {r[id_col]: (r["simhash"], r["simbits"]) for r in sim.collect()}
     want = {d: _simhash_ref(t) for d, t in CORPUS if t is not None}
     assert got == want  # the null-text doc has no words, hence no row
+    pairs = {tuple(r) for r in simhash_near_pairs(sim, id_col=id_col).collect()}
+    assert pairs == _simhash_pairs_ref({d: h for d, (h, _) in want.items()})
 
 
 @pytest.mark.parametrize(
-    "n_hashes,band_size,shingle_n", [(8, 2, 3), (4, 2, 2), (6, 3, 1)]
+    "n_hashes,band_size,shingle_n,id_col",
+    [
+        pytest.param(8, 2, 3, ID, id="8-2-3"),
+        pytest.param(4, 2, 2, ID, id="4-2-2"),
+        pytest.param(6, 3, 1, ID, id="6-3-1"),
+        pytest.param(8, 2, 3, "band", id="8-2-3-band"),
+        pytest.param(8, 2, 3, "key", id="8-2-3-key"),
+    ],
 )
 def test_minhash_lsh_candidates_match_hashlib_reference(
-    docs, n_hashes, band_size, shingle_n
+    spark, n_hashes, band_size, shingle_n, id_col
 ):
     got = {
         (r["doc_a"], r["doc_b"])
         for r in minhash_lsh_candidates(
-            docs,
+            _docs(spark, id_col),
             text_col=TEXT,
-            id_col=ID,
+            id_col=id_col,
             n_hashes=n_hashes,
             band_size=band_size,
             shingle_n=shingle_n,

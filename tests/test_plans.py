@@ -35,7 +35,7 @@ def test_small_batch_merge_broadcasts(spark, tmp_path):
     merge_into(spark, table, gen_binlog(spark, 2000, 200, seed=2), epoch=0)
     tiny = lww_dedup(gen_binlog(spark, 50, 200, seed=3), key="doc_id")
     tiny = table.bucket_of(tiny)
-    merged = _resolve(spark, table, tiny, [0, 1, 2, 3], "op", "op_sequence", "broadcast")
+    merged = _resolve(spark, table, tiny, [0, 1, 2, 3], "op", "op_sequence", "join")
     assert "BroadcastHashJoin" in _plan(merged)
 
 
@@ -118,7 +118,7 @@ def test_conflict_merge_join_still_broadcasts(spark, tmp_path):
     tiny = lww_dedup(gen_binlog(spark, 50, 200, seed=22), key="doc_id")
     merged = _resolve(
         spark, table, table.bucket_of(tiny), [0, 1, 2, 3], "op", "op_sequence",
-        "broadcast", fieldmerge=True,
+        "join", fieldmerge=True,
     )
     assert "BroadcastHashJoin" in _plan(merged)
 

@@ -18,11 +18,9 @@ def test_dedup_strategies_agree(spark):
     log = gen_binlog(spark, 5000, 300, seed=7, hot_frac=0.3, n_hot=2)
     frames = {
         how: lww_dedup(log, how=how).orderBy("doc_id").collect()
-        for how in ("window", "agg", "salted", "join")
+        for how in ("window", "agg", "salted")
     }
-    assert (
-        frames["window"] == frames["agg"] == frames["salted"] == frames["join"]
-    )
+    assert frames["window"] == frames["agg"] == frames["salted"]
     # one row per key, and it's the max op_sequence
     agg = lww_dedup(log, how="agg")
     assert agg.count() == agg.select("doc_id").distinct().count()
@@ -67,21 +65,19 @@ def test_multi_batch_replay_matches_oracle(spark, tmp_path):
 
 
 def test_resolve_strategies_equivalent(spark, tmp_path):
-    """unionagg / join / broadcast / fullouter produce identical final
+    """unionagg / join / fullouter produce identical final
     state — they are physical plans for one logical MERGE."""
     logs = [gen_binlog(spark, 3000, 150, seed=s) for s in (41, 43)]
     logs[1] = logs[1].withColumn("op_sequence", F.col("op_sequence") + 5000)
     states = {}
-    for strat in ("unionagg", "join", "broadcast", "fullouter"):
+    for strat in ("unionagg", "join", "fullouter"):
         table = LakeTable.create(
             str(tmp_path / f"t_{strat}"), SEQUENCE_SCHEMA, "doc_id", n_buckets=4
         )
         for i, log in enumerate(logs):
             merge_into(spark, table, log, epoch=i, resolve_strategy=strat)
         states[strat] = sorted(tuple(r) for r in table.read(spark).collect())
-    assert (
-        states["unionagg"] == states["join"] == states["broadcast"] == states["fullouter"]
-    )
+    assert states["unionagg"] == states["join"] == states["fullouter"]
 
 
 def test_first_write_wins_merge(spark, tmp_path):

@@ -431,24 +431,6 @@ def test_dlq_reprocess_malformed_by_inclusion(spark, tmp_path):
     ] == 0
 
 
-def test_dlq_reprocess_rejects_reject_mode_via_env(spark, tmp_path, monkeypatch):
-    """The reject guard must also catch the NEBULA_CONFLICT env fallback
-    apply_changes would use when no explicit kwarg is given."""
-    import pytest
-    from pyspark.sql import types as T
-
-    from nebula_spark.cdc.dlq import reprocess_dlq
-
-    table = LakeTable.create(str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=2)
-    dlq_schema = T.StructType(
-        list(BINLOG_SCHEMA.fields) + [T.StructField("event_key", T.StringType(), False)]
-    )
-    dlq = LakeTable.create(str(tmp_path / "dlq"), dlq_schema, "event_key", n_buckets=2)
-    monkeypatch.setenv("NEBULA_CONFLICT", "reject")
-    with pytest.raises(ValueError, match="reject"):
-        reprocess_dlq(spark, dlq, table)
-
-
 def test_adaptive_trigger_shrinks_and_grows(spark, tmp_path):
     """Adaptive trigger sizing (the reference's backpressure controller
     mapped to maxFilesPerTrigger): batches slower than the target halve
