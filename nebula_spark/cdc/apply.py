@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from nebula_spark.cdc.filters import EventFilter
 from nebula_spark.cdc.transforms import Transform
 from nebula_spark.evolution import evolve_schema
+from nebula_spark.functions.dedupe import _q
 from nebula_spark.lake.merge import MergeResult, merge_into
 from nebula_spark.lake.table import LakeTable
 
@@ -38,9 +39,12 @@ class ApplyResult:
     schema_changes: int = 0
 
 
-def payload_schema(batch: DataFrame, table: LakeTable) -> T.StructType:
-    keep = [c for c in batch.columns if c not in ENVELOPE_COLS or c == table.key_col]
-    return T.StructType([f for f in batch.schema.fields if f.name in keep])
+def payload_schema(schema: T.StructType, key_col: str) -> T.StructType:
+    """The payload fields of a batch ``schema``: every field but the
+    change envelope's (the key stays, whatever its name)."""
+    return T.StructType(
+        [f for f in schema.fields if f.name not in ENVELOPE_COLS or f.name == key_col]
+    )
 
 
 def apply_changes(
@@ -73,15 +77,19 @@ def apply_changes(
     manifest and every later route's quarantined rows for that
     micro-batch silently skip as already-applied — data loss in the
     safety path. run_multi_stream passes ``f"{route}:"``."""
-    if epoch is not None and table.epoch_applied(epoch):
+    # one snapshot read for the epoch check, key and schema; merge_into
+    # reads its own, after any schema-evolution commit below
+    snap = table.snapshot()
+    if epoch is not None and snap.epoch_applied(epoch):
         return ApplyResult(merge=MergeResult(skipped=True, epoch=epoch))
+    key = snap.key_col
 
     res = ApplyResult(merge=MergeResult())
     # DDL marker rows (op='DDL', from a binlog QueryEvent) carry no
     # payload — evolution is driven by the batch *schema*; drop them
     # before the data path (reference reloads schemas on QueryEvent,
     # pkg/cdc/mysql.go:701-723)
-    df = batch.filter(F.col("op") != "DDL") if "op" in batch.columns else batch
+    df = batch.filter("op <> 'DDL'") if "op" in batch.columns else batch
     if count_inputs:
         res.events_in = df.count()
     if event_filter is not None:
@@ -93,15 +101,15 @@ def apply_changes(
         res.events_filtered = res.events_in - kept
 
     # malformed events → dead-letter table instead of poisoning the merge
-    # (reference DLQ: pkg/cdc/stream.go:857-959)
-    bad = (
-        F.col(table.key_col).isNull()
-        | F.col("op").isNull()
-        | ~F.col("op").isin("INSERT", "UPDATE", "DELETE")
-        | ((F.col("op") != "DELETE") & F.col("tokens").isNull())
-        if "tokens" in df.columns
-        else (F.col(table.key_col).isNull() | F.col("op").isNull())
-    )
+    # (reference DLQ: pkg/cdc/stream.go:857-959); SQL text over one
+    # schema fetch
+    schema = df.schema
+    bad = f"{_q(key)} IS NULL OR op IS NULL"
+    if "tokens" in schema.fieldNames():
+        bad += (
+            " OR NOT (op IN ('INSERT', 'UPDATE', 'DELETE'))"
+            " OR (op <> 'DELETE' AND tokens IS NULL)"
+        )
     if dlq_table is not None:
         from nebula_spark.lake.merge import append_into
 
@@ -120,17 +128,17 @@ def apply_changes(
         append_into(
             spark, dlq_table, dlq_rows, epoch=f"{dlq_ns}{epoch}", summary_op="dlq"
         )
-    df = df.filter(~bad)
+    df = df.filter(f"NOT ({bad})")
 
     # schema evolution: batch payload vs table user schema (merge-on-write)
     from nebula_spark.lake.table import INTERNAL_COLS, INTERNAL_FIELDS
 
-    bad_cols = [c for c in df.columns if c in INTERNAL_COLS]
+    bad_cols = [c for c in schema.fieldNames() if c in INTERNAL_COLS]
     if bad_cols:
         raise ValueError(f"batch uses reserved columns {bad_cols}")
     new_user, changes = evolve_schema(
-        table.user_schema,
-        payload_schema(df, table),
+        snap.user_schema,
+        payload_schema(schema, key),
         policy=evolution_policy,
         renames=renames,
     )

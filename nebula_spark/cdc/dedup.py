@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from nebula_spark.functions.dedupe import _q
+
 STRATEGIES = ("agg", "window", "salted")
 
 
@@ -59,20 +61,26 @@ def lww_dedup(
             .select(*cols)
         )
 
+    if how == "agg":
+        # SQL text: one F.expr for the aggregate and one selectExpr
+        # instead of a Column call per payload column; the struct is
+        # ordered by seq first => max == latest event, deterministically
+        fn = "min" if first_writer_wins else "max"
+        packed = ", ".join(_q(c) for c in [seq] + [c for c in cols if c not in (key, seq)])
+        reduced = df.groupBy(_q(key)).agg(F.expr(f"{fn}(struct({packed})) AS _e"))
+        return reduced.selectExpr(
+            *[_q(c) if c == key else f"_e.{_q(c)} AS {_q(c)}" for c in cols]
+        )
+
+    # salted two-phase
     payload = [c for c in cols if c != key]
-    # struct ordered by seq first => max == latest event, deterministically
     packed = F.struct(F.col(seq), *[F.col(c) for c in payload if c != seq])
     agg_fn = F.min if first_writer_wins else F.max
-
-    if how == "agg":
-        reduced = df.groupBy(key).agg(agg_fn(packed).alias("_e"))
-    else:  # salted two-phase
-        salt = F.pmod(F.xxhash64(F.col(seq)), F.lit(salt_buckets))
-        phase1 = (
-            df.withColumn("_salt", salt)
-            .groupBy(key, "_salt")
-            .agg(agg_fn(packed).alias("_e"))
-        )
-        reduced = phase1.groupBy(key).agg(agg_fn("_e").alias("_e"))
-
+    salt = F.pmod(F.xxhash64(F.col(seq)), F.lit(salt_buckets))
+    phase1 = (
+        df.withColumn("_salt", salt)
+        .groupBy(key, "_salt")
+        .agg(agg_fn(packed).alias("_e"))
+    )
+    reduced = phase1.groupBy(key).agg(agg_fn("_e").alias("_e"))
     return reduced.select(F.col(key), F.col("_e.*")).select(*cols)

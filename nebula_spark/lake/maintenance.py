@@ -33,7 +33,9 @@ def compact(
     max_file_rows: int | None = None,
 ) -> dict:
     """Rewrite buckets into one file each; optionally purge tombstones.
-    Returns a summary dict. Atomic (one snapshot commit).
+    Returns a summary dict. Atomic (one snapshot commit); the read,
+    the layout and the commit's expected bucket count all come from one
+    snapshot read.
 
     ``cluster_by_key`` + ``max_file_rows``: key-CLUSTERED compaction —
     Iceberg's sort-ordered RewriteDataFiles instead of its bin-pack.
@@ -59,8 +61,8 @@ def compact(
     snap = table.snapshot()
     if (
         purge_tombstone_watermark is not None
-        and table.merge_mode == "mor"
-        and table.mor_conflict == "first_write_wins"
+        and snap.merge_mode == "mor"
+        and snap.mor_conflict == "first_write_wins"
     ):
         raise ValueError(
             "first_write_wins tombstones never expire by seq watermark: "
@@ -72,14 +74,14 @@ def compact(
     if not chosen:
         return {"buckets": 0, "seconds": 0.0}
 
-    df = table.read(spark, buckets=chosen, include_internal=True)
+    df = table.read(spark, buckets=chosen, version=snap, include_internal=True)
     if purge_all_tombstones:
         df = df.filter(~F.col(DELETED_COL))
     elif purge_tombstone_watermark is not None:
         df = df.filter(
             ~(F.col(DELETED_COL) & (F.col(SEQ_COL) < F.lit(purge_tombstone_watermark)))
         )
-    df = table.bucket_of(df)
+    df = table.bucket_of(df, snap)
 
     commit_dir = table.new_commit_dir()
     # repartition by the KEY into exactly n_buckets partitions: Spark's
@@ -88,22 +90,22 @@ def compact(
     # rolled) file per bucket. Hashing the _bucket VALUE instead lands
     # several buckets per task and leaves ~1/e of tasks empty
     # (guide §2.5, synthetic keys with too few distinct values).
-    df = df.repartition(snap.raw["n_buckets"], F.col(table.key_col))
+    df = df.repartition(snap.n_buckets, F.col(snap.key_col))
     if cluster_by_key:
         # a task holds exactly one bucket now, but sorting by
         # (_bucket, key) stays correct if a future layout ever changes
         # that — every rolled file is a sorted contiguous key range
-        df = df.sortWithinPartitions("_bucket", table.key_col)
+        df = df.sortWithinPartitions("_bucket", snap.key_col)
     writer = df.write.partitionBy("_bucket").mode("append")
     if max_file_rows is not None:
         writer = writer.option("maxRecordsPerFile", int(max_file_rows))
     writer.parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=table.key_col)
+    new_files = LakeTable.list_written_files(commit_dir, key_col=snap.key_col)
     new_snap = table.commit(
         new_files_by_bucket=new_files,
         replaced_buckets=chosen,
         summary={"operation": "compact", "buckets": len(chosen)},
-        expect_n_buckets=snap.raw["n_buckets"],
+        expect_n_buckets=snap.n_buckets,
     )
     return {
         "buckets": len(chosen),

@@ -36,18 +36,20 @@ exactly-once rather than at-least-once.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from nebula_spark.functions.dedupe import _q
 from nebula_spark.lake.table import (
     DELETED_COL,
     SEQ_COL,
     LakeTable,
+    Snapshot,
     align_to_schema,
-    bucket_expr,
 )
 
 DELETE_OP = "DELETE"
@@ -55,12 +57,12 @@ DELETE_OP = "DELETE"
 
 @contextmanager
 def _bucket_aligned_shuffle(spark: SparkSession, n_buckets: int):
-    """Run a merge's jobs with shuffle width == the table's bucket
-    count (Iceberg's ``write.distribution-mode=hash``): ``bucket_expr``
-    is pmod over the SAME Murmur3 hash HashPartitioning uses, so with
-    the widths equal every shuffle output partition holds exactly ONE
-    bucket — each write task streams one bucket directory, producing
-    one well-sized file per bucket per commit instead of
+    """Run a copy-on-write merge's jobs with shuffle width == the
+    table's bucket count (Iceberg's ``write.distribution-mode=hash``):
+    ``bucket_expr`` is pmod over the SAME Murmur3 hash HashPartitioning
+    uses, so with the widths equal every shuffle output partition holds
+    exactly ONE bucket — each write task streams one bucket directory,
+    producing one well-sized file per bucket per commit instead of
     (shuffle.partitions / n_buckets) fragments, and the dedup/fold/join
     exchanges all land directly on the write layout (no residual
     repartition, fewer+larger shuffle blocks, guide §2.2). This is
@@ -73,12 +75,12 @@ def _bucket_aligned_shuffle(spark: SparkSession, n_buckets: int):
     The conf is set on ``spark``, the caller's session, so it reaches
     only plans of frames that belong to that session. Inside
     ``foreachBatch`` the batch frame belongs to the stream's cloned
-    session: there the stats job and the whole merge-on-read write plan
-    at that session's default width (16 shuffle partitions on a
-    4-core ``get_spark`` session with 4 buckets), and only the
-    copy-on-write resolve, built on the target read through ``spark``,
-    gets ``n_buckets``. Direct ``merge_into`` calls on frames of
-    ``spark`` get ``n_buckets`` throughout."""
+    session: there the stats job plans at that session's default width,
+    and only the resolve, built on the target read through ``spark``,
+    gets ``n_buckets``. A merge-on-read append does not run under this
+    block: it sets its width itself, with one ``repartition(n_buckets,
+    key)`` in front of its in-batch dedup, so it writes one file per
+    bucket in any session."""
     key = "spark.sql.shuffle.partitions"
     if os.environ.get("NEBULA_SHUFFLE_PARTITIONS"):
         yield
@@ -92,24 +94,26 @@ def _bucket_aligned_shuffle(spark: SparkSession, n_buckets: int):
             spark.conf.set(key, prev)
 
 
-def _as_table_rows(batch: DataFrame, table: LakeTable, op_col: str, seq_col: str) -> DataFrame:
-    """Project a deduped change batch onto the storage schema: payload
-    columns (nulled for deletes), _seq = op_sequence, _deleted flag."""
-    user_fields = table.user_schema.fields
-    is_del = F.col(op_col) == DELETE_OP
+def _as_table_rows(batch: DataFrame, snap: Snapshot, op_col: str, seq_col: str) -> DataFrame:
+    """Project a deduped change batch onto the storage schema of
+    ``snap``: payload columns (nulled for deletes), _seq = op_sequence,
+    _deleted flag. Built as SQL text over one ``batch.schema`` fetch; a
+    column already of its table type is not cast."""
+    have = {f.name: f.dataType for f in batch.schema.fields}
+    is_del = f"{_q(op_col)} = '{DELETE_OP}'"
     cols = []
-    for f in user_fields:
-        if f.name == table.key_col:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        elif f.name in batch.columns:
-            cols.append(
-                F.when(is_del, F.lit(None)).otherwise(F.col(f.name)).cast(f.dataType).alias(f.name)
-            )
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    cols.append(F.col(seq_col).cast("long").alias(SEQ_COL))
-    cols.append(is_del.alias(DELETED_COL))
-    return batch.select(*cols)
+    for f in snap.user_schema.fields:
+        name, typ = _q(f.name), f.dataType.simpleString()
+        if f.name not in have:
+            cols.append(f"CAST(NULL AS {typ}) AS {name}")
+            continue
+        v = name if f.name == snap.key_col else f"CASE WHEN {is_del} THEN NULL ELSE {name} END"
+        if have[f.name] != f.dataType:
+            v = f"CAST({v} AS {typ})"
+        cols.append(f"{v} AS {name}")
+    cols.append(f"CAST({_q(seq_col)} AS BIGINT) AS {SEQ_COL}")
+    cols.append(f"{is_del} AS {DELETED_COL}")
+    return batch.selectExpr(*cols)
 
 
 def _resolve(
@@ -123,7 +127,7 @@ def _resolve(
     fww: bool = False,
     fieldmerge: bool = False,
     exclude_paths: dict[int, set[str]] | None = None,
-    target_version: int | None = None,
+    target_version: int | Snapshot | None = None,
 ) -> DataFrame:
     """Order-independent LWW resolution of batch vs target with one of
     the resolve strategies ``unionagg``, ``join`` or ``fullouter``.
@@ -138,15 +142,18 @@ def _resolve(
     A batch event wins a matched key iff its op_sequence is strictly
     greater than the stored row's _seq — so replayed/out-of-order
     batches converge to the same final state in any delivery order.
+    ``target_version`` (a version or an already-read Snapshot, default
+    HEAD) is the one snapshot the resolve reads.
     """
-    key = table.key_col
-    b = _as_table_rows(deduped, table, op_col, seq_col)
+    snap = table._pinned(target_version)
+    key = snap.key_col
+    b = _as_table_rows(deduped, snap, op_col, seq_col)
     target = table.read(
         spark,
         buckets=affected,
         include_internal=True,
         exclude_paths=exclude_paths,
-        version=target_version,
+        version=snap,
     )
 
     def winner_col(c: str):
@@ -187,7 +194,7 @@ def _resolve(
         )
         reduced = everything.groupBy(key).agg(F.max(packed).alias("_e"))
         resolved = reduced.select(F.col(key), F.col("_e.*")).select(*b.columns)
-        return table.bucket_of(resolved)
+        return table.bucket_of(resolved, snap)
 
     t_a, b_a = target.alias("t"), b.alias("b")
 
@@ -212,7 +219,7 @@ def _resolve(
             else F.when(b_wins, winner_col(c)).otherwise(F.col(f"t.{c}")).alias(c)
             for c in b.columns
         ]
-        return table.bucket_of(f.select(*cols))
+        return table.bucket_of(f.select(*cols), snap)
 
     # 'join': AQE picks BHJ/SMJ from runtime sizes (a small batch
     # broadcasts); forcing a broadcast of a fat batch would stall the
@@ -238,7 +245,7 @@ def _resolve(
     # the anti-join complete)
     inserts = b.join(target.select(key), on=key, how="left_anti")
 
-    return table.bucket_of(resolved.unionByName(inserts))
+    return table.bucket_of(resolved.unionByName(inserts), snap)
 
 
 CONFLICT_STRATEGIES = ("last_write_wins", "first_write_wins", "merge", "reject")
@@ -263,8 +270,8 @@ def plan_merge(
     dedup_how: str,
     resolve_strategy: str,
     already_deduped: bool,
-    events_in: int,
-    keys_touched: int,
+    events_in: int | None,
+    keys_touched: int | None,
     touched_bytes: int | None,
     mor_conflict: str | None = None,
 ) -> tuple[str | None, str | None]:
@@ -275,9 +282,12 @@ def plan_merge(
     Raises ValueError for a combination the merge cannot run, before
     any write job.
 
-    ``touched_bytes`` (stored bytes of the touched buckets) is read only
-    by a copy-on-write ``auto`` resolve; ``mor_conflict`` (the table's
-    read-time fold) only on a merge-on-read table."""
+    The batch statistics are read only on a copy-on-write table:
+    ``touched_bytes`` (stored bytes of the touched buckets) and
+    ``keys_touched`` by an ``auto`` resolve, ``events_in`` by an
+    ``auto`` dedup. A merge-on-read merge plans before its write job,
+    which is where it counts its batch, and passes None for all three;
+    ``mor_conflict`` (the table's read-time fold) is read only there."""
     for name, value, choices in (
         ("conflict", conflict, CONFLICT_STRATEGIES),
         ("dedup", dedup_how, DEDUP_CHOICES),
@@ -362,8 +372,12 @@ def plan_merge(
         # output hash-partitioned AND key-sorted, so the downstream SMJ
         # re-sorts nothing — 2 exchanges total vs 4 for the agg shape,
         # ~35% faster at 1M+ events. Small micro-batches keep the
-        # one-agg plan (fewest stages).
-        dedup = "window" if events_in >= WINDOW_DEDUP_MIN_EVENTS else "agg"
+        # one-agg plan (fewest stages). The sorted output pays off only
+        # in front of a copy-on-write join: a merge-on-read append
+        # always takes the agg.
+        dedup = (
+            "window" if not mor and events_in >= WINDOW_DEDUP_MIN_EVENTS else "agg"
+        )
     return dedup, resolve
 
 
@@ -396,15 +410,16 @@ def append_into(
     """Idempotent append (no key matching) — used for the bootstrap
     snapshot load and the dead-letter table. Returns the new snapshot
     version, or -1 if the epoch was already applied / batch empty."""
-    if epoch is not None and table.epoch_applied(epoch):
+    snap = table.snapshot()
+    if epoch is not None and snap.epoch_applied(epoch):
         return -1
-    nb = table.n_buckets  # layout this append is computed under
+    nb, key = snap.n_buckets, snap.key_col  # layout this append is computed under
     if SEQ_COL not in df.columns:
         df = df.withColumn(SEQ_COL, F.lit(-1).cast("long"))
     if DELETED_COL not in df.columns:
         df = df.withColumn(DELETED_COL, F.lit(False))
-    aligned = align_to_schema(df, table.schema)
-    out = table.bucket_of(aligned)
+    aligned = align_to_schema(df, snap.schema)
+    out = table.bucket_of(aligned, snap)
     commit_dir = table.new_commit_dir()
     # repartition by the KEY into exactly n_buckets partitions: Spark's
     # HashPartitioning uses the same Murmur3 hash as bucket_expr, so
@@ -413,20 +428,19 @@ def append_into(
     # ≤ n_buckets distinct bucket VALUES into the session shuffle width
     # (guide §2.5, synthetic keys with too few distinct values): ~1/e
     # of tasks empty, others writing several buckets.
-    out.repartition(nb, F.col(table.key_col)).write.partitionBy("_bucket").mode(
+    out.repartition(nb, F.col(key)).write.partitionBy("_bucket").mode(
         "append"
     ).parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=table.key_col)
+    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
     applied = {str(epoch): {"partitions": {}, "events": None}} if epoch is not None else None
     if not new_files and applied is None:
         return -1
-    snap = table.commit(
+    return table.commit(
         new_files_by_bucket=new_files,
         applied_update=applied,
         summary={"operation": summary_op, "epoch": epoch},
         expect_n_buckets=nb,
-    )
-    return snap.version
+    ).version
 
 
 def merge_into(
@@ -448,9 +462,12 @@ def merge_into(
     plus ``op_col``/``seq_col`` (and optionally ``partition_col`` for
     per-source-partition lineage offsets).
 
-    Three steps: plan (the stats job, then ``plan_merge``), write (the
-    merge-on-read append or the copy-on-write resolve and rewrite), and
-    one table commit.
+    Three steps over ONE snapshot read: plan (``plan_merge``; on a
+    copy-on-write table after the stats job), write (the merge-on-read
+    append or the copy-on-write resolve and rewrite), and one table
+    commit. A merge-on-read merge runs no stats job: its counters,
+    touched buckets and lineage offsets come from the write job (see
+    ``_append_rows``).
 
     ``conflict`` mirrors the reference's four resolver strategies
     (internal/pipeline/cdc.go:197-221):
@@ -484,131 +501,218 @@ def merge_into(
 
     t0 = time.time()
     res = MergeResult(epoch=epoch)
-    if epoch is not None and table.epoch_applied(epoch):
+    # the one snapshot read: every choice below (key, layout, mode,
+    # fold, schema, lineage) describes this version, and the commit
+    # re-checks its bucket count so a concurrent rescale conflicts
+    snap = table.snapshot()
+    if epoch is not None and snap.epoch_applied(epoch):
         res.skipped = True
         return res
-    key = table.key_col
-    nb = table.n_buckets  # layout this merge is computed under; the
-    # commit re-checks it so a concurrent rescale conflicts cleanly
+    key, nb, mor = snap.key_col, snap.n_buckets, snap.merge_mode == "mor"
+    lineage = partition_col if partition_col in batch.columns else None
+    fww = conflict == "first_write_wins"
+    replace: dict = {}
 
-    with _bucket_aligned_shuffle(spark, nb):
-        # --- plan. The stats job (cheap, column-pruned: key/op/seq/
-        # partition only — no dedup, no arrays): touched buckets, event
-        # counters, and per-source-partition high-water marks for lineage.
-        grain = [bucket_expr(key, nb).alias("_bucket")] + (
-            [F.col(partition_col)] if partition_col and partition_col in batch.columns else []
+    if mor:
+        dedup, _ = plan_merge(
+            merge_mode="mor", conflict=conflict, dedup_how=dedup_how,
+            resolve_strategy=resolve_strategy, already_deduped=already_deduped,
+            events_in=None, keys_touched=None, touched_bytes=None,
+            mor_conflict=snap.mor_conflict,
         )
-        stats = batch.groupBy(*grain).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col(op_col) == DELETE_OP).cast("long")).alias("n_del"),
-            F.max(seq_col).alias("mx"),
-            F.approx_count_distinct(key).alias("nk"),
-            F.min(key).alias("kmin"),
-            F.max(key).alias("kmax"),
-        ).collect()
-        affected = sorted({int(r["_bucket"]) for r in stats})
-        # per-bucket key span of the batch — drives merge-time file
-        # pruning (free: same shuffle as the counters above)
-        key_bounds: dict[int, tuple] = {}
-        for r in stats:
-            kb = int(r["_bucket"])
-            kmn, kmx = r["kmin"], r["kmax"]
-            cur = key_bounds.get(kb)
-            if kmn is None or kmx is None or (cur is not None and cur[0] is None):
-                key_bounds[kb] = (None, None)
-            elif cur is None:
-                key_bounds[kb] = (kmn, kmx)
-            else:
-                key_bounds[kb] = (min(cur[0], kmn), max(cur[1], kmx))
-        res.events_in = int(sum(r["n"] for r in stats))
-        res.rows_deleted = int(sum(r["n_del"] for r in stats))
-        res.rows_upserted = res.events_in - res.rows_deleted
-        # approx distinct keys, free in the same agg; summed per stats
-        # cell it can double-count a key spanning source partitions, so
-        # it stays a (tight) upper bound — good as the join threshold,
-        # honest as a metric
-        res.keys_touched = min(int(sum(r["nk"] for r in stats)), res.events_in)
-        res.buckets_touched = len(affected)
-        if len(grain) > 1:
+        new_files = _append_rows(
+            table, snap, batch, res, dedup, fww, already_deduped, lineage,
+            op_col, seq_col,
+        )
+        summary = {"operation": "merge-append" if new_files else "merge-empty"}
+    else:
+        with _bucket_aligned_shuffle(spark, nb):
+            # --- plan. The stats job (cheap, column-pruned: key/op/seq/
+            # partition only — no dedup, no arrays): touched buckets,
+            # event counters, per-source-partition high-water marks for
+            # lineage, and per-bucket key bounds for file pruning.
+            grain = [f"pmod(hash({_q(key)}), {nb}) AS _bucket"] + (
+                [_q(lineage)] if lineage else []
+            )
+            stats = batch.groupBy(*[F.expr(g) for g in grain]).agg(*[
+                F.expr(e) for e in (
+                    "count(1) AS n",
+                    f"sum(CAST({_q(op_col)} = '{DELETE_OP}' AS BIGINT)) AS n_del",
+                    f"max({_q(seq_col)}) AS mx",
+                    f"approx_count_distinct({_q(key)}) AS nk",
+                    f"min({_q(key)}) AS kmin",
+                    f"max({_q(key)}) AS kmax",
+                )
+            ]).collect()
+            affected = sorted({int(r["_bucket"]) for r in stats})
+            key_bounds: dict[int, tuple] = {}
             for r in stats:
-                pid = str(r[partition_col])
-                res.partitions[pid] = max(res.partitions.get(pid, -1), int(r["mx"]))
+                kb = int(r["_bucket"])
+                kmn, kmx = r["kmin"], r["kmax"]
+                cur = key_bounds.get(kb)
+                if kmn is None or kmx is None or (cur is not None and cur[0] is None):
+                    key_bounds[kb] = (None, None)
+                elif cur is None:
+                    key_bounds[kb] = (kmn, kmx)
+                else:
+                    key_bounds[kb] = (min(cur[0], kmn), max(cur[1], kmx))
+            res.events_in = int(sum(r["n"] for r in stats))
+            res.rows_deleted = int(sum(r["n_del"] for r in stats))
+            res.rows_upserted = res.events_in - res.rows_deleted
+            # approx distinct keys, free in the same agg; summed per
+            # stats cell it can double-count a key spanning source
+            # partitions, so it stays a (tight) upper bound — good as
+            # the join threshold, honest as a metric
+            res.keys_touched = min(int(sum(r["nk"] for r in stats)), res.events_in)
+            res.buckets_touched = len(affected)
+            if lineage:
+                for r in stats:
+                    pid = str(r[lineage])
+                    res.partitions[pid] = max(res.partitions.get(pid, -1), int(r["mx"]))
 
-        mode = table.merge_mode
-        dedup, resolve = plan_merge(
-            merge_mode=mode,
-            conflict=conflict,
-            dedup_how=dedup_how,
-            resolve_strategy=resolve_strategy,
-            already_deduped=already_deduped,
-            events_in=res.events_in,
-            keys_touched=res.keys_touched,
-            # one snapshot parse, paid only where the choice reads it
-            touched_bytes=(
-                table.bucket_bytes(affected)
-                if mode != "mor" and resolve_strategy == "auto"
-                else None
-            ),
-            mor_conflict=table.mor_conflict if mode == "mor" else None,
-        )
-        fww = conflict == "first_write_wins"
-        deduped = batch if dedup is None else lww_dedup(
-            batch, key=key, seq=seq_col, how=dedup, first_writer_wins=fww
-        )
-
-        # --- write
-        new_files, replace = None, {}
-        summary = {"operation": "merge-empty", "epoch": epoch}
-        if affected:
-            summary.update(keys=res.keys_touched, buckets=res.buckets_touched)
-        if affected and mode == "mor":
-            # merge-on-read: APPEND the batch rows to the touched
-            # buckets — no target scan, no join, no bucket rewrite, so
-            # per-batch cost is flat in table size (the copy-on-write
-            # path rewrites every touched bucket, which for key-spread
-            # change streams approaches a full-table rewrite per batch
-            # as the table grows). Readers resolve per key
-            # (LakeTable.read); compaction folds versions.
-            summary["operation"] = "merge-append"
-            rows = table.bucket_of(_as_table_rows(deduped, table, op_col, seq_col))
-            commit_dir = table.new_commit_dir()
-            rows.write.partitionBy("_bucket").mode("append").parquet(commit_dir)
-            # map-only appends (dedup skipped, caller did not pre-dedup)
-            # write files that may hold several versions of a key — mark
-            # them so the read fold never plain-scans them
-            new_files = LakeTable.list_written_files(
-                commit_dir, key_unique=already_deduped or dedup is not None, key_col=key
+            dedup, resolve = plan_merge(
+                merge_mode=snap.merge_mode,
+                conflict=conflict,
+                dedup_how=dedup_how,
+                resolve_strategy=resolve_strategy,
+                already_deduped=already_deduped,
+                events_in=res.events_in,
+                keys_touched=res.keys_touched,
+                # metadata only, paid only where the choice reads it
+                touched_bytes=(
+                    table.bucket_bytes(affected, snap)
+                    if resolve_strategy == "auto"
+                    else None
+                ),
             )
-        elif affected:
-            summary["operation"] = "merge"
-            new_files, replace, summary["files_kept"] = _rewrite_buckets(
-                spark, table, deduped, res, key, affected, key_bounds, resolve,
-                conflict, on_rejected, op_col, seq_col,
+            deduped = batch if dedup is None else lww_dedup(
+                batch, key=key, seq=seq_col, how=dedup, first_writer_wins=fww
             )
-        # an empty batch commits too: its epoch is recorded in the manifest
+            new_files, summary = None, {"operation": "merge-empty"}
+            if affected:
+                summary["operation"] = "merge"
+                new_files, replace, summary["files_kept"] = _rewrite_buckets(
+                    spark, table, snap, deduped, res, affected, key_bounds,
+                    resolve, conflict, on_rejected, op_col, seq_col,
+                )
+    # an empty batch commits too: its epoch is recorded in the manifest
+    summary["epoch"] = epoch
+    if res.buckets_touched:
+        summary.update(keys=res.keys_touched, buckets=res.buckets_touched)
 
-        # --- commit
-        applied_update = None
-        if epoch is not None:
-            applied_update = {
-                str(epoch): {"partitions": res.partitions, "events": res.events_in}
-            }
-        snap = table.commit(
-            new_files_by_bucket=new_files,
-            applied_update=applied_update,
-            summary=summary,
-            expect_n_buckets=nb,
-            **replace,
-        )
-    res.version = snap.version
+    # --- commit
+    applied_update = None
+    if epoch is not None:
+        applied_update = {
+            str(epoch): {"partitions": res.partitions, "events": res.events_in}
+        }
+    new_snap = table.commit(
+        new_files_by_bucket=new_files,
+        applied_update=applied_update,
+        summary=summary,
+        expect_n_buckets=nb,
+        **replace,
+    )
+    res.version = new_snap.version
     res.seconds = time.time() - t0
     return res
 
 
+def _append_rows(
+    table: LakeTable, snap: Snapshot, batch: DataFrame, res: MergeResult,
+    dedup: str | None, fww: bool, already_deduped: bool, lineage: str | None,
+    op_col: str, seq_col: str,
+) -> dict:
+    """Merge-on-read write of ``merge_into``: APPEND the batch rows to
+    the touched buckets — no target scan, no join, no bucket rewrite, so
+    per-batch cost is flat in table size (the copy-on-write path
+    rewrites every touched bucket, which for key-spread change streams
+    approaches a full-table rewrite per batch as the table grows).
+    Readers resolve per key (LakeTable.read); compaction folds versions.
+    Returns the written files by bucket, and fills ``res``.
+
+    ONE job writes and counts: the write carries a ``DataFrame.observe``
+    of the batch's event/delete/approx-key counters, of max(seq) for
+    each source partition ``snap`` already knows, and of the count of
+    rows from partitions it has not seen. The touched buckets are the
+    written ones. Only a batch that brings an unseen partition pays a
+    second, grouped query for its offsets — after the write, so the
+    lineage offsets stay exact.
+
+    The in-batch dedup runs behind one ``repartition(n_buckets, key)``:
+    partition id == bucket id (the same Murmur3 as ``bucket_expr``), the
+    dedup needs no exchange of its own, and each write task streams one
+    bucket directory — one file per bucket per commit, in the caller's
+    session or a ``foreachBatch`` one alike. A batch taken as it is
+    (``dedup_how='none'``, ``already_deduped``) stays exchange-free."""
+    from nebula_spark.cdc.dedup import lww_dedup  # lazy: avoids lake<->cdc cycle
+
+    key, seq = snap.key_col, _q(seq_col)
+    known = sorted(snap.partition_offsets()) if lineage else []
+    metrics = [
+        "count(1) AS n",
+        f"count_if({_q(op_col)} = '{DELETE_OP}') AS n_del",
+        f"approx_count_distinct({_q(key)}) AS nk",
+    ]
+    if lineage:
+        pid = f"CAST({_q(lineage)} AS STRING)"
+        seen = "false"
+        if known:
+            # one array of per-partition maxima: one expression to build
+            metrics.append("array(" + ", ".join(
+                f"max(CASE WHEN {pid} = {_str_lit(p)} THEN {seq} END)" for p in known
+            ) + ") AS offsets")
+            seen = f"{pid} IN ({', '.join(map(_str_lit, known))})"
+        metrics.append(f"count_if({pid} IS NULL OR NOT ({seen})) AS unseen")
+    obs = Observation()
+    rows = batch.observe(obs, *[F.expr(m) for m in metrics])
+    if dedup is not None:
+        rows = lww_dedup(
+            rows.repartition(snap.n_buckets, F.col(key)),
+            key=key, seq=seq_col, how=dedup, first_writer_wins=fww,
+        )
+    rows = table.bucket_of(_as_table_rows(rows, snap, op_col, seq_col), snap)
+    commit_dir = table.new_commit_dir()
+    rows.write.partitionBy("_bucket").mode("append").parquet(commit_dir)
+    # map-only appends (dedup skipped, caller did not pre-dedup) write
+    # files that may hold several versions of a key — mark them so the
+    # read fold never plain-scans them
+    new_files = LakeTable.list_written_files(
+        commit_dir, key_unique=already_deduped or dedup is not None, key_col=key
+    )
+    if not new_files:
+        # every event writes a row (a delete its tombstone), so no file
+        # means an empty batch: nothing to count, and no metrics to read
+        # (Spark reports none when its adaptive plan drops the empty
+        # input stage)
+        shutil.rmtree(commit_dir, ignore_errors=True)
+        return new_files
+    m = obs.get
+    res.events_in = int(m["n"])
+    res.rows_deleted = int(m["n_del"])
+    res.rows_upserted = res.events_in - res.rows_deleted
+    res.keys_touched = min(int(m["nk"]), res.events_in)
+    res.buckets_touched = len(new_files)
+    for p, mx in zip(known, m.get("offsets") or ()):
+        if mx is not None:
+            res.partitions[p] = int(mx)
+    if lineage and m["unseen"]:
+        for r in batch.groupBy(_q(lineage)).agg(F.expr(f"max({seq}) AS mx")).collect():
+            if r["mx"] is not None:
+                p = str(r[lineage])
+                res.partitions[p] = max(res.partitions.get(p, -1), int(r["mx"]))
+    return new_files
+
+
+def _str_lit(s: str) -> str:
+    """A SQL string literal for ``s``."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _rewrite_buckets(
-    spark: SparkSession, table: LakeTable, deduped: DataFrame, res: MergeResult,
-    key: str, affected: list[int], key_bounds: dict[int, tuple], resolve: str,
-    conflict: str, on_rejected, op_col: str, seq_col: str,
+    spark: SparkSession, table: LakeTable, pin: Snapshot, deduped: DataFrame,
+    res: MergeResult, affected: list[int], key_bounds: dict[int, tuple],
+    resolve: str, conflict: str, on_rejected, op_col: str, seq_col: str,
 ) -> tuple[dict, dict, int]:
     """Copy-on-write write of ``merge_into``: resolve the batch against
     the touched buckets and write their new files. Returns (new files
@@ -623,7 +727,7 @@ def _rewrite_buckets(
     and fall back to the full-bucket rewrite.
 
     The whole resolve/prune/replace cycle is pinned to ONE snapshot
-    version: pruning decisions, the target scans, and the commit's
+    version, ``pin`` (the merge's one read): pruning decisions, the target scans, and the commit's
     kept-file list must all describe the same file set, and with
     FILE-level replace a concurrent rewrite (e.g. an external
     compaction) landing between plan and commit is NOT
@@ -631,8 +735,8 @@ def _rewrite_buckets(
     output lacks the pruned files' rows, so silently replacing the
     compacted file would lose them. base_version makes that window a
     clean ConcurrentBucketConflict instead."""
-    pin = table.snapshot()
-    pruned = table.prunable_files(affected, key_bounds, version=pin.version)
+    key = pin.key_col
+    pruned = table.prunable_files(affected, key_bounds, version=pin)
     if conflict == "reject":
         # conflict = key already live in the target: surface those
         # events instead of applying them; the remainder merges
@@ -646,7 +750,7 @@ def _rewrite_buckets(
                 buckets=affected,
                 include_internal=True,
                 exclude_paths=pruned,
-                version=pin.version,
+                version=pin,
             )
             .filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
             .select(key)
@@ -665,7 +769,7 @@ def _rewrite_buckets(
         else:
             res.rejected = rejected
         deduped = deduped.join(live, on=key, how="leftanti")
-    deduped = table.bucket_of(deduped)
+    deduped = table.bucket_of(deduped, pin)
     # the join plan references the batch twice (matched + inserts);
     # single-pass plans (unionagg/fullouter) keep it lazy so dedup
     # fuses straight into the resolve+write job
@@ -678,7 +782,7 @@ def _rewrite_buckets(
             fww=conflict == "first_write_wins",
             fieldmerge=conflict == "merge",
             exclude_paths=pruned,
-            target_version=pin.version,
+            target_version=pin,
         )
         commit_dir = table.new_commit_dir()
         # NO repartition before the write: the resolve plans leave data

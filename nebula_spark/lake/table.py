@@ -50,6 +50,8 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from nebula_spark.functions.dedupe import _q
+
 META_DIR = "_nl"
 HEAD_FILE = "HEAD"
 SNAP_FMT = "snap-%012d.json"
@@ -82,8 +84,10 @@ def bucket_expr(key_col: str, n_buckets: int):
     transform. Uses Spark's Murmur3 `hash` — the SAME function
     HashPartitioning uses — so when a merge's shuffle partition count
     equals n_buckets, every shuffle output partition holds exactly one
-    bucket and the pre-write repartition exchange disappears."""
-    return F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    bucket and the pre-write repartition exchange disappears. Built as
+    SQL text: one ``F.expr`` instead of five Column calls, each a py4j
+    round trip."""
+    return F.expr(f"pmod(hash({_q(key_col)}), {int(n_buckets)})")
 
 
 # ---- driver-side Murmur3 x86_32 (Spark's `hash()`, seed 42) ----
@@ -289,6 +293,100 @@ class Snapshot:
         """historical column name -> current name (chains collapsed)"""
         return self.raw.get("renames", {})
 
+    @property
+    def user_schema(self) -> T.StructType:
+        return T.StructType(
+            [f for f in self.schema.fields if f.name not in INTERNAL_COLS]
+        )
+
+    @property
+    def key_col(self) -> str:
+        return self.raw["key_col"]
+
+    @property
+    def n_buckets(self) -> int:
+        return self.raw["n_buckets"]
+
+    @property
+    def merge_mode(self) -> str:
+        """'cow' (default): a merge rewrites every touched bucket —
+        reads are plain scans, writes pay rewrite amplification that
+        grows with table size for key-spread batches. 'mor'
+        (merge-on-read): a merge APPENDS the deduped batch rows to the
+        touched buckets — write cost is flat in table size; reads
+        resolve last-writer-wins per key (one hash aggregation), and
+        compaction folds the versions back down. The same trade Iceberg
+        exposes as copy-on-write vs merge-on-read."""
+        return self.raw.get("properties", {}).get("merge_mode", "cow")
+
+    @property
+    def mor_conflict(self) -> str:
+        """The conflict strategy a merge-on-read table resolves at READ
+        time — a TABLE property, not a per-merge argument, because every
+        appended row version is folded by one rule when scanned:
+        'last_write_wins' keeps the max-_seq version per key,
+        'first_write_wins' the min (an earliest tombstone wins forever;
+        a bootstrap row at _seq=-1 beats any later event — it *was*
+        first). Writers must merge with the matching conflict; readers
+        pick the fold from here. reject/merge need the pre-image target
+        state and stay CoW-only."""
+        return self.raw.get("properties", {}).get("conflict", "last_write_wins")
+
+    def epoch_applied(self, epoch) -> bool:
+        """True iff this epoch was already applied — present in the
+        recent ``applied`` map, or (bare numeric) at/below the folded
+        ``applied_watermark``, or (prefixed, e.g. DLQ-class ``f12`` /
+        reprocess ``rp7``) with its numeric suffix at/below that
+        namespace's entry in ``applied_watermarks``."""
+        s = str(epoch)
+        if s in self.applied:
+            return True
+        m = re.match(r"^(.*?)(-?\d+)$", s)
+        if not m:
+            return False
+        pre, n = m.group(1), int(m.group(2))
+        if pre:
+            wm = self.raw.get("applied_watermarks", {}).get(pre)
+            hit = wm is not None and n <= int(wm)
+            if hit and n < int(wm):
+                # the namespace fold has no contiguity rule — it relies
+                # on each namespace having ONE producer with monotonic
+                # suffixes. A suffix strictly below the folded max is
+                # normal only for a crash-redelivery of an OLD epoch;
+                # if the streaming checkpoint was deleted/reset, batch
+                # ids restarted at 0 and this skip silently drops the
+                # redelivered batch's data. Surface it.
+                import logging
+
+                logging.getLogger(__name__).warning(
+                    "epoch %r skipped via namespace watermark %s<=%s; if "
+                    "the stream's checkpoint was reset (batch ids "
+                    "restarted), this skip loses data — use a fresh "
+                    "epoch namespace (dlq_ns/route) after a checkpoint "
+                    "reset",
+                    s,
+                    n,
+                    int(wm),
+                )
+            return hit
+        # absent ≠ -1: a fresh table has no watermark, and the bootstrap
+        # epoch IS -1 — the default value must not claim it applied
+        wm = self.raw.get("applied_watermark")
+        return wm is not None and n <= int(wm)
+
+    def partition_offsets(self) -> dict[str, int]:
+        """Per-source-partition high-water marks (max op_sequence applied),
+        folded over all commits — the lineage offsets of the north rule."""
+        # folded epochs' offsets live in the lineage summary
+        offsets: dict[str, int] = {
+            pid: int(seq) for pid, seq in self.raw.get("lineage", {}).items()
+        }
+        for entry in self.applied.values():
+            for pid, seq in entry.get("partitions", {}).items():
+                if seq is not None:
+                    offsets[pid] = max(offsets.get(pid, -1), int(seq))
+        return offsets
+
 
 class ConcurrentBucketConflict(RuntimeError):
     """Two writers rewrote the same bucket concurrently — the loser must
@@ -321,46 +419,25 @@ class LakeTable:
 
     @property
     def user_schema(self) -> T.StructType:
-        return T.StructType(
-            [f for f in self.schema.fields if f.name not in INTERNAL_COLS]
-        )
+        return self.snapshot().user_schema
 
     @property
     def key_col(self) -> str:
-        return self.snapshot().raw["key_col"]
+        return self.snapshot().key_col
 
     @property
     def merge_mode(self) -> str:
-        """'cow' (default): a merge rewrites every touched bucket —
-        reads are plain scans, writes pay rewrite amplification that
-        grows with table size for key-spread batches. 'mor'
-        (merge-on-read): a merge APPENDS the deduped batch rows to the
-        touched buckets — write cost is flat in table size; reads
-        resolve last-writer-wins per key (one hash aggregation), and
-        compaction folds the versions back down. The same trade Iceberg
-        exposes as copy-on-write vs merge-on-read."""
-        return self.snapshot().raw.get("properties", {}).get("merge_mode", "cow")
+        """See :attr:`Snapshot.merge_mode`."""
+        return self.snapshot().merge_mode
 
     @property
     def mor_conflict(self) -> str:
-        """The conflict strategy a merge-on-read table resolves at READ
-        time — a TABLE property, not a per-merge argument, because every
-        appended row version is folded by one rule when scanned:
-        'last_write_wins' keeps the max-_seq version per key,
-        'first_write_wins' the min (an earliest tombstone wins forever;
-        a bootstrap row at _seq=-1 beats any later event — it *was*
-        first). Writers must merge with the matching conflict; readers
-        pick the fold from here. reject/merge need the pre-image target
-        state and stay CoW-only."""
-        return (
-            self.snapshot()
-            .raw.get("properties", {})
-            .get("conflict", "last_write_wins")
-        )
+        """See :attr:`Snapshot.mor_conflict`."""
+        return self.snapshot().mor_conflict
 
     @property
     def n_buckets(self) -> int:
-        return self.snapshot().raw["n_buckets"]
+        return self.snapshot().n_buckets
 
     def schema_history(self, include_internal: bool = False) -> list[T.StructType]:
         """Every schema version this table has had, oldest first — the
@@ -384,61 +461,13 @@ class LakeTable:
         return set(self.snapshot().applied.keys())
 
     def epoch_applied(self, epoch) -> bool:
-        """True iff this epoch was already applied — present in the
-        recent ``applied`` map, or (bare numeric) at/below the folded
-        ``applied_watermark``, or (prefixed, e.g. DLQ-class ``f12`` /
-        reprocess ``rp7``) with its numeric suffix at/below that
-        namespace's entry in ``applied_watermarks``."""
-        snap = self.snapshot()
-        s = str(epoch)
-        if s in snap.applied:
-            return True
-        m = re.match(r"^(.*?)(-?\d+)$", s)
-        if not m:
-            return False
-        pre, n = m.group(1), int(m.group(2))
-        if pre:
-            wm = snap.raw.get("applied_watermarks", {}).get(pre)
-            hit = wm is not None and n <= int(wm)
-            if hit and n < int(wm):
-                # the namespace fold has no contiguity rule — it relies
-                # on each namespace having ONE producer with monotonic
-                # suffixes. A suffix strictly below the folded max is
-                # normal only for a crash-redelivery of an OLD epoch;
-                # if the streaming checkpoint was deleted/reset, batch
-                # ids restarted at 0 and this skip silently drops the
-                # redelivered batch's data. Surface it.
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "epoch %r skipped via namespace watermark %s<=%s; if "
-                    "the stream's checkpoint was reset (batch ids "
-                    "restarted), this skip loses data — use a fresh "
-                    "epoch namespace (dlq_ns/route) after a checkpoint "
-                    "reset",
-                    s,
-                    n,
-                    int(wm),
-                )
-            return hit
-        # absent ≠ -1: a fresh table has no watermark, and the bootstrap
-        # epoch IS -1 — the default value must not claim it applied
-        wm = snap.raw.get("applied_watermark")
-        return wm is not None and n <= int(wm)
+        """See :meth:`Snapshot.epoch_applied`; covers epochs folded into
+        the watermarks, unlike :meth:`applied_epochs`."""
+        return self.snapshot().epoch_applied(epoch)
 
     def partition_offsets(self, version: int | None = None) -> dict[str, int]:
-        """Per-source-partition high-water marks (max op_sequence applied),
-        folded over all commits — the lineage offsets of the north rule."""
-        snap = self.snapshot(version)
-        # folded epochs' offsets live in the lineage summary
-        offsets: dict[str, int] = {
-            pid: int(seq) for pid, seq in snap.raw.get("lineage", {}).items()
-        }
-        for entry in snap.applied.values():
-            for pid, seq in entry.get("partitions", {}).items():
-                if seq is not None:
-                    offsets[pid] = max(offsets.get(pid, -1), int(seq))
-        return offsets
+        """See :meth:`Snapshot.partition_offsets`."""
+        return self.snapshot(version).partition_offsets()
 
     def low_water_mark(self, version: int | None = None) -> int | None:
         """min over source partitions of the lineage offsets: every
@@ -616,7 +645,7 @@ class LakeTable:
         raw["files_segmented"] = {"width": width, "segments": new_map}
         raw["removed_segments"] = sorted(removed_segs + pre_removed)
 
-    def _buckets_changed_by(self, version: int) -> set[int]:
+    def _buckets_changed_by(self, version: "int | Snapshot") -> set[int]:
         """Buckets whose file list differs between snapshot ``version``
         and its parent — the conflict footprint of that commit.
 
@@ -625,7 +654,7 @@ class LakeTable:
         identical buckets, which only costs a redundant re-check) —
         the manifest-diff walk below remains as the fallback for
         snapshots written before the field existed."""
-        snap = self.snapshot(version)
+        snap = self._pinned(version)
         recorded = snap.raw.get("changed_buckets")
         if recorded is not None:
             return {int(b) for b in recorded}
@@ -1092,12 +1121,6 @@ class LakeTable:
             return None, None, None, None
 
     @staticmethod
-    def _seq_stats(path: str) -> tuple[int | None, int | None]:
-        """Back-compat shim: (min,max) of the _seq column only."""
-        mn, mx, _, _ = LakeTable._file_stats(path)
-        return mn, mx
-
-    @staticmethod
     def list_written_files(
         commit_dir: str,
         key_unique: bool = True,
@@ -1145,7 +1168,7 @@ class LakeTable:
         self,
         buckets: Iterable[int],
         key_bounds: dict[int, tuple],
-        version: int | None = None,
+        version: "int | Snapshot | None" = None,
     ) -> dict[int, set[str]]:
         """Per bucket: the live file paths whose recorded [min_key,
         max_key] PROVABLY misses ``key_bounds[bucket]`` = (lo, hi) —
@@ -1162,7 +1185,7 @@ class LakeTable:
         monotonic primary keys of a typical CDC feed — where old
         generations cover old id ranges a fresh batch never touches."""
         out: dict[int, set[str]] = {}
-        files = self.snapshot(version).files_for(buckets)
+        files = self._pinned(version).files_for(buckets)
         for b in {int(x) for x in buckets}:
             lo_hi = key_bounds.get(b)
             if lo_hi is None or lo_hi[0] is None or lo_hi[1] is None:
@@ -1214,10 +1237,12 @@ class LakeTable:
                 overlapped[i] = overlapped[i - 1] = True
         return loose + sum(overlapped)
 
-    def bucket_bytes(self, buckets: Iterable[int]) -> int:
+    def bucket_bytes(
+        self, buckets: Iterable[int], version: "int | Snapshot | None" = None
+    ) -> int:
         """Total stored bytes of the given buckets (from the snapshot) —
         drives the merge-strategy choice."""
-        files = self.snapshot().files_for(buckets)
+        files = self._pinned(version).files_for(buckets)
         return sum(
             int(e.get("size", 0))
             for entries in files.values()
@@ -1228,7 +1253,7 @@ class LakeTable:
         self,
         spark: SparkSession,
         buckets: Iterable[int] | None = None,
-        version: int | None = None,
+        version: "int | Snapshot | None" = None,
         include_internal: bool = False,
         min_seq_exclusive: int | None = None,
         exclude_paths: dict[int, set[str]] | None = None,
@@ -1236,6 +1261,9 @@ class LakeTable:
     ) -> DataFrame:
         """Scan the table (optionally bucket-pruned / time-travelled),
         aligning every file group to the snapshot's current schema.
+        ``version`` is a snapshot version, or a :class:`Snapshot` the
+        caller already read (a merge pins one snapshot for all its
+        reads).
 
         Files are grouped by the schema version that wrote them; each
         group is read with its own (exact) schema then cast/padded to
@@ -1269,11 +1297,11 @@ class LakeTable:
         only one. After compaction every bucket is a single key-unique
         file: a fully compacted MoR table reads exactly like a CoW
         one."""
-        snap = self.snapshot(version)
+        snap = self._pinned(version)
         cur_schema = snap.schema
-        mor = self.merge_mode == "mor"
+        mor = snap.merge_mode == "mor"
         if min_seq_exclusive is not None and mor and (
-            self.mor_conflict == "first_write_wins"
+            snap.mor_conflict == "first_write_wins"
         ):
             raise ValueError(
                 "min_seq_exclusive pruning is unsound under the "
@@ -1395,7 +1423,7 @@ class LakeTable:
                 others = [c for c in folded.columns if c not in (key, SEQ_COL)]
                 packed = F.struct(F.col(SEQ_COL), *[F.col(c) for c in others])
                 fold = (
-                    F.min if self.mor_conflict == "first_write_wins" else F.max
+                    F.min if snap.mor_conflict == "first_write_wins" else F.max
                 )
                 folded = (
                     folded.groupBy(key)
@@ -1507,8 +1535,16 @@ class LakeTable:
             key_in=list(keys),
         )
 
-    def bucket_of(self, df: DataFrame) -> DataFrame:
-        return df.withColumn("_bucket", bucket_expr(self.key_col, self.n_buckets))
+    def bucket_of(
+        self, df: DataFrame, version: "int | Snapshot | None" = None
+    ) -> DataFrame:
+        snap = self._pinned(version)
+        return df.withColumn("_bucket", bucket_expr(snap.key_col, snap.n_buckets))
+
+    def _pinned(self, version: "int | Snapshot | None") -> Snapshot:
+        """``version`` as a Snapshot: an already-read one as it is, else
+        read from disk (None = HEAD)."""
+        return version if isinstance(version, Snapshot) else self.snapshot(version)
 
 
 def align_to_schema(

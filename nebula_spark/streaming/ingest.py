@@ -207,7 +207,7 @@ def run_stream(
             # segmented manifests; a bucket never touched again never
             # re-fats, so nothing is missed)
             snap = table.snapshot()
-            recent = table._buckets_changed_by(snap.version)
+            recent = table._buckets_changed_by(snap)
             fat = [
                 b
                 for b, fs in snap.files_for(recent).items()
@@ -220,8 +220,8 @@ def run_stream(
                     # delivery; refused under first-write-wins (a FWW
                     # tombstone beats ANY later seq and must persist)
                     fww = conflict == "first_write_wins" or (
-                        table.merge_mode == "mor"
-                        and table.mor_conflict == "first_write_wins"
+                        snap.merge_mode == "mor"
+                        and snap.mor_conflict == "first_write_wins"
                     )
                     purge_wm = None if fww else table.low_water_mark()
                 compact(
