@@ -50,8 +50,31 @@ _OP_SQL = (
 _STOPWORDS_SQL = "['the','and','of','to','in','is','a','for','with','data']"
 
 
+# each table's schema exactly as spark.read.parquet infers it (toDDL);
+# a read that names its schema runs no schema-inference job
+_SCHEMAS = {
+    "customer": "c_custkey BIGINT,c_name STRING,c_nationkey INT,c_acctbal DOUBLE,c_mktsegment STRING",
+    "documents": "doc_id BIGINT,text STRING,lang STRING,source STRING,n_chars BIGINT",
+    "embeddings": "vec_id BIGINT,embedding ARRAY<FLOAT>,label INT",
+    "events": "event_id BIGINT,ts TIMESTAMP_NTZ,user_id BIGINT,event_type STRING,value DOUBLE,props STRING",
+    "lineitem": (
+        "l_orderkey BIGINT,l_partkey BIGINT,l_suppkey BIGINT,l_linenumber INT,l_quantity DOUBLE,"
+        "l_extendedprice DOUBLE,l_discount DOUBLE,l_tax DOUBLE,l_returnflag STRING,"
+        "l_linestatus STRING,l_shipdate TIMESTAMP_NTZ"
+    ),
+    "nation": "n_nationkey INT,n_name STRING,n_regionkey INT",
+    "orders": (
+        "o_orderkey BIGINT,o_custkey BIGINT,o_orderstatus STRING,o_totalprice DOUBLE,"
+        "o_orderdate TIMESTAMP_NTZ,o_orderpriority STRING"
+    ),
+    "part": "p_partkey BIGINT,p_name STRING,p_brand STRING,p_type STRING,p_size INT,p_retailprice DOUBLE",
+    "region": "r_regionkey INT,r_name STRING",
+    "supplier": "s_suppkey BIGINT,s_name STRING,s_nationkey INT,s_acctbal DOUBLE",
+}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.schema(_SCHEMAS[name]).parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _changelog(spark: SparkSession, sf_dir: str) -> DataFrame:

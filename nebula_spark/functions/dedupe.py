@@ -12,6 +12,13 @@ Scale notes (the point of each design):
   pairs found by banding the simhash into 4×16-bit keys (any equal
   16-bit band → candidate), same single-shuffle groupBy shape.
 - ngram-jaccard: verification metric on candidate pairs only.
+- near-dedup removal: the minhash-LSH band groups carry each doc's
+  shingle array beside its id, so candidate pairs are verified inside
+  the group that found them and the only join is the final anti-join —
+  one lazy plan, no job before the caller's write, at the price of
+  shuffling n_bands copies of every doc's shingles.
+- ``spread`` decides whether to round-robin a small scan from the
+  optimized logical plan, so building any of these submits no job.
 
 Construction rule: the LSH, simhash and pair-enumeration expressions
 are written as SQL text (``selectExpr`` / one ``F.expr`` per output
@@ -28,6 +35,8 @@ supply are backtick-quoted with :func:`_q`.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -85,23 +94,75 @@ def _bounded_groups(banded: DataFrame, group_cols: list[str], max_group: int | N
     )
 
 
-def spread(df: DataFrame, factor: int = 1, check: bool = True) -> DataFrame:
+# unary logical operators that keep their child's partitioning: a
+# plan made of these over one leaf has the leaf's partition count
+_NARROW = frozenset({"Project", "Filter", "Generate", "Sample"})
+
+
+def _file_splits(files: int, size: int, max_bytes: int, open_cost: int, min_parts: int) -> int:
+    """Input partitions of a scan over ``files`` files totalling
+    ``size`` bytes, as Spark's ``FilePartition`` packs them when the
+    files are of equal size: split size min(maxPartitionBytes,
+    max(openCost, bytes per core)), each file cut into pieces of at
+    most that size, and pieces packed greedily into partitions with
+    the open cost charged per piece."""
+    if files == 0:
+        return 0
+    split = min(max_bytes, max(open_cost, (size + files * open_cost) // min_parts))
+    pieces = max(1, math.ceil(size / files / split))
+    piece = size / files / pieces
+    per_part = 1 + max(0, int((split - piece) // (piece + open_cost)))
+    return math.ceil(files * pieces / per_part)
+
+
+def _input_splits(df: DataFrame, n: int) -> int:
+    """The partition count ``df``'s one leaf yields, read off the
+    optimized logical plan (no physical planning, no job): a file scan
+    estimated by :func:`_file_splits` from its file count and bytes, a
+    ``range`` by its slice count. ``n`` is the session's default
+    parallelism, which both stand in for when unset (this engine sets
+    neither ``spark.sql.files.minPartitionNum`` nor
+    ``spark.sql.leafNodeDefaultParallelism``). 0 for any other plan — a
+    join, a union, a shuffle, a local relation."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    name = node.nodeName()
+    while name in _NARROW:
+        node = node.child()
+        name = node.nodeName()
+    if name == "Range":
+        slices = node.numSlices()
+        return slices.get() if slices.isDefined() else n
+    if name != "LogicalRelation" or node.relation().getClass().getSimpleName() != "HadoopFsRelation":
+        return 0
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    index = node.relation().location()
+    return _file_splits(
+        len(index.inputFiles()),
+        index.sizeInBytes(),
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
+        n,
+    )
+
+
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the session's parallelism — small
     single-file corpora otherwise run CPU-heavy expressions in ONE task
-    (a 5k-row parquet is one input split). SKIPPED when the plan
-    already provides at least that many partitions: a real corpus
+    (a 5k-row parquet is one input split). SKIPPED when the plan's scan
+    already yields at least that many partitions: a real corpus
     arrives in many input splits, and an unconditional repartition
     there is a full extra shuffle of the payload for nothing
     (guide §2.4 — remove shuffles outright). Row placement never
     affects these operators' results, so the skip is semantics-free.
 
-    ``check=False`` repartitions unconditionally: the partition-count
-    probe converts the plan to an RDD, and on a plan containing a
-    broadcast join that EXECUTES the broadcast build as a job right
-    then (and again in the real query) — callers spreading a join
-    output must opt out of the probe."""
-    n = df.sparkSession.sparkContext.defaultParallelism * factor
-    if check and df.rdd.getNumPartitions() >= n:
+    The decision reads the optimized logical plan (:func:`_input_splits`)
+    and submits no job: asking the plan's RDD for its partition count
+    instead costs a physical planning pass per call, and on a plan
+    holding a broadcast join it EXECUTES the broadcast build then and
+    again in the real query. A plan whose partitioning is not one
+    leaf's (a join, a shuffle, a local relation) always repartitions."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if _input_splits(df, n) >= n:
         return df
     return df.repartition(n)
 
@@ -193,6 +254,50 @@ def minhash_signature(shingles: str, n_hashes: int = 8) -> str:
     )
 
 
+def _minhash_band_groups(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n_hashes: int,
+    band_size: int,
+    shingle_n: int,
+    max_group: int | None,
+    with_shingles: bool = False,
+) -> DataFrame:
+    """The banded-MinHash collision groups: one row per (band, key)
+    group of 1 < size ≤ max_group docs, its members sorted in ``_g``.
+    A member is the doc id, or with ``with_shingles`` the struct
+    (id, _sh) carrying the doc's shingle array, so a pair found in a
+    group can be verified where it is found."""
+    idq = _q(id_col)
+    n_bands = n_hashes // band_size
+    # two-step projection: words bound to a column BEFORE the
+    # per-shingle lambda (see shingles_of_words) — the single-
+    # expression form re-tokenized the document once per shingle
+    wd = spread(df).selectExpr(idq, f"{_lower_words(text_col)} AS _wd")
+    sh = shingles_of_words("_wd", shingle_n)
+    carry, member = [], idq
+    if with_shingles:
+        # bound once: the signature and the verification both read it
+        wd = wd.selectExpr(idq, f"{sh} AS _sh")
+        sh, carry, member = "_sh", ["_sh"], f"struct({idq}, _sh)"
+    bands = ", ".join(
+        f"struct({b} AS _band, concat_ws('|', slice(_sig, {b * band_size + 1}, {band_size})) AS _key)"
+        for b in range(n_bands)
+    )
+    banded = (
+        wd.selectExpr(idq, *carry, f"{minhash_signature(sh, n_hashes)} AS _sig")
+        .selectExpr(idq, *carry, f"explode(array({bands})) AS _bk")
+        .selectExpr(idq, *carry, "_bk._band", "_bk._key")
+    )
+    return (
+        _bounded_groups(banded, ["_band", "_key"], max_group)
+        .groupBy("_band", "_key")
+        # sorted by id (a struct's first field) → pairs come out (lower, higher)
+        .agg(F.expr(f"array_sort(collect_list({member})) AS _g"))
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -218,32 +323,14 @@ def minhash_lsh_candidates(
     materialize the whole group in one task's memory here — groups
     above the cap are skipped via a same-shuffle window count (see
     _bounded_groups; None disables)."""
-    idq = _q(id_col)
-    n_bands = n_hashes // band_size
-    # two-step projection: words bound to a column BEFORE the
-    # per-shingle lambda (see shingles_of_words) — the single-
-    # expression form re-tokenized the document once per shingle
-    wd = spread(df).selectExpr(idq, f"{_lower_words(text_col)} AS _wd")
-    sig = minhash_signature(shingles_of_words("_wd", shingle_n), n_hashes)
-    bands = ", ".join(
-        f"struct({b} AS _band, concat_ws('|', slice(_sig, {b * band_size + 1}, {band_size})) AS _key)"
-        for b in range(n_bands)
+    grouped = _minhash_band_groups(
+        df, text_col, id_col, n_hashes, band_size, shingle_n, max_group
     )
-    banded = (
-        wd.selectExpr(idq, f"{sig} AS _sig")
-        .selectExpr(idq, f"explode(array({bands})) AS _bk")
-        .selectExpr(idq, "_bk._band", "_bk._key")
-    )
-    grouped = (
-        _bounded_groups(banded, ["_band", "_key"], max_group)
-        .groupBy("_band", "_key")
-        .agg(F.expr(f"array_sort(collect_list({idq})) AS _ids"))
-    )
-    return (
-        _enumerate_pairs(grouped, "_ids")
-        .selectExpr("_x AS doc_a", "_y AS doc_b")
-        .distinct()
-    )
+    return _enumerate_pairs(grouped).selectExpr("_x AS doc_a", "_y AS doc_b").distinct()
+
+
+# the exact n-gram Jaccard of two shingle arrays, rounded to 4 places
+_JACCARD = "round(size(array_intersect({a}, {b})) / size(array_union({a}, {b})), 4)"
 
 
 def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame, text_col="text", id_col="doc_id", n=3) -> DataFrame:
@@ -261,7 +348,7 @@ def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame, text_col="text", id_col=
         .distinct()
     )
     sh = (
-        spread(docs.join(cand_ids, on=id_col, how="left_semi"), check=False)
+        spread(docs.join(cand_ids, on=id_col, how="left_semi"))
         .selectExpr(idq, f"{_lower_words(text_col)} AS _wd")
         .selectExpr(idq, f"{shingles_of_words('_wd', n)} AS sh")
     )
@@ -273,7 +360,7 @@ def ngram_jaccard(df_pairs: DataFrame, docs: DataFrame, text_col="text", id_col=
         .selectExpr(
             "doc_a",
             "doc_b",
-            "round(size(array_intersect(sa.sh, sb.sh)) / size(array_union(sa.sh, sb.sh)), 4) AS jaccard",
+            f"{_JACCARD.format(a='sa.sh', b='sb.sh')} AS jaccard",
         )
     )
 
@@ -293,40 +380,42 @@ def near_dedup(
 
     Keep rule (greedy min-id, the standard corpus-dedup policy, cf. the
     dedup stage of public LLM-data pipelines): a doc is dropped iff it
-    appears as the HIGHER id of a verified pair (doc_a < doc_b by
-    construction). Deterministic: survival depends only on the verified
-    pair set. Note this is one-hop, not connected components — in a
-    chain a~b, b~c (a̸~c) both b and c are dropped; transitive-closure
-    dedup would keep c, but needs an iterative algorithm that no
-    single SQL pass expresses.
+    appears as the HIGHER id of a verified pair. Deterministic:
+    survival depends only on the verified pair set. Note this is
+    one-hop, not connected components — in a chain a~b, b~c (a̸~c)
+    both b and c are dropped; transitive-closure dedup would keep c,
+    but needs an iterative algorithm that no single SQL pass expresses.
 
-    Scale shape: candidates from the single-shuffle band groupBy,
-    verification only over candidate docs, and the final drop is one
-    broadcast-able anti-join of (small) dupe ids against the corpus.
+    Shape: one lazy plan, no job until the caller runs it, and one join
+    — the final anti-join of the dupe ids against the corpus. Each doc's
+    shingle array is bound once; the MinHash signature is computed from
+    it, and the array rides the band exchange inside the group member
+    struct (id, shingles), so every candidate pair is verified inside
+    the band group that found it — no candidate-id prune, no verify
+    join, nothing materialized. The price is shuffle volume: each doc's
+    shingles travel once per band (``n_hashes // band_size`` copies),
+    and a pair colliding in several bands is verified once per band.
+    In exchange the whole removal runs inside the caller's action, with
+    no job while the plan is built. Where shingle volume outweighs job
+    overhead, ``minhash_lsh_candidates`` → ``ngram_jaccard`` is the
+    composition that shuffles ids only.
     """
-    pairs = minhash_lsh_candidates(
-        df, text_col=text_col, id_col=id_col,
-        n_hashes=n_hashes, band_size=band_size, shingle_n=shingle_n,
+    idq = _q(id_col)
+    grouped = _minhash_band_groups(
+        df, text_col, id_col, n_hashes, band_size, shingle_n, DEFAULT_MAX_GROUP,
+        with_shingles=True,
     )
-    # materialize the (small, by design) candidate set ONCE: left lazy,
-    # the whole shingle+signature+band pipeline re-executes inside
-    # ngram_jaccard's candidate-id prune (twice — doc_a ∪ doc_b) AND its
-    # verify join — three full corpus-hash passes for one logical
-    # result. Same localCheckpoint rationale as `dupes` below.
-    pairs = pairs.localCheckpoint(eager=True)
-    verified = ngram_jaccard(pairs, df, text_col=text_col, id_col=id_col, n=shingle_n)
     dupes = (
-        verified.filter(F.col("jaccard") >= threshold)
-        .select(F.col("doc_b").alias(id_col))
+        _enumerate_pairs(grouped)
+        # collect_list skips a null id but keeps the struct holding one:
+        # such a member (sorted first) must pair with nothing
+        .filter(
+            f"_x.{idq} IS NOT NULL AND "
+            f"{_JACCARD.format(a='_x._sh', b='_y._sh')} >= {float(threshold)!r}D"
+        )
+        .selectExpr(f"_y.{idq} AS {idq}")
         .distinct()
     )
-    # materialize the (small) dupe-id set ONCE: left lazy, the whole
-    # candidate+verify subplan would re-run inside the final anti-join
-    # and again in every downstream consumer. localCheckpoint — not
-    # persist — so the blocks are freed by the ContextCleaner when the
-    # plan is garbage-collected; no unpersist obligation escapes to the
-    # caller (the persist-leak class of bug this module had).
-    dupes = dupes.localCheckpoint(eager=True)
     return df.join(dupes, on=id_col, how="left_anti")
 
 

@@ -224,6 +224,11 @@ def ivf_topk(
     vector), the probe side is tiny, and no all-pairs join exists
     anywhere. Recall rises with n_probe (n_probe == n_cells ⇒ exact).
 
+    ``queries`` must be small: its ``n_probe`` rows per query are
+    broadcast by an explicit hint, with no size check, so a large query
+    set stalls the broadcast or runs out of memory instead of falling
+    back to a shuffle join.
+
     Ties: cell = first index of the max rounded score (array_position),
     probes ordered by (-score, cell) — both deterministic and
     reproducible in plain SQL for the oracle."""
@@ -309,8 +314,11 @@ def lsh_topk(
     """Approximate top-k: candidates share an LSH bucket (equi-join),
     then exact cosine + window. Recall grows with fewer planes /
     multiple tables; this single-table variant is the skeleton.
-    ``spread`` parallelizes the per-vector bucket projection out of a
-    single input split (no-op on an already-parallel scan)."""
+    ``queries`` must be small: it is broadcast by an explicit hint, with
+    no size check, so a large query set stalls the broadcast or runs out
+    of memory instead of falling back to a shuffle join. ``spread`` parallelizes
+    the per-vector bucket projection out of a single input split (no-op
+    on an already-parallel scan)."""
     from nebula_spark.functions.dedupe import spread
 
     cb = spread(

@@ -11,7 +11,10 @@ from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql.types import StringType, StructField, StructType
 
 from nebula_spark.functions.dedupe import (
+    _q,
     minhash_lsh_candidates,
+    near_dedup,
+    ngram_jaccard,
     simhash64,
     simhash_near_pairs,
 )
@@ -130,6 +133,53 @@ def test_minhash_lsh_candidates_match_hashlib_reference(
     assert ("d00", "d01") in got  # the corpus does exercise collisions
 
 
+# a chain: a~b and b~c at the 0.7 threshold below (3-shingle Jaccard
+# 0.778 each), a~c not (0.6); greedy min-id drops both b and c
+_CHAIN = [f"w{i}" for i in range(12)]
+NEAR_CORPUS = CORPUS + [
+    ("e1", " ".join(_CHAIN[0:10])),
+    ("e2", " ".join(_CHAIN[1:11])),
+    ("e3", " ".join(_CHAIN[2:12])),
+    # a null id is never a pair member: it must not drop d00's twin
+    (None, "the quick brown fox jumps over the lazy dog"),
+]
+
+
+def _old_near_dedup(docs, id_col, threshold, **kw):
+    """near_dedup's earlier composition: candidates → verify join →
+    threshold → anti-join of the higher ids."""
+    pairs = minhash_lsh_candidates(docs, text_col=TEXT, id_col=id_col, **kw)
+    verified = ngram_jaccard(pairs, docs, text_col=TEXT, id_col=id_col, n=kw["shingle_n"])
+    dupes = verified.filter(f"jaccard >= {threshold}").selectExpr(f"doc_b AS {_q(id_col)}").distinct()
+    return docs.join(dupes, on=id_col, how="left_anti")
+
+
+@pytest.mark.parametrize("id_col", [pytest.param(ID, id="quoted"), "band", "key"])
+@pytest.mark.parametrize("n_hashes,band_size,shingle_n", [(8, 2, 3), (4, 2, 2), (6, 3, 1)])
+def test_near_dedup_matches_candidates_verify_composition(
+    spark, id_col, n_hashes, band_size, shingle_n
+):
+    schema = StructType([StructField(id_col, StringType()), StructField(TEXT, StringType())])
+    docs = spark.createDataFrame(NEAR_CORPUS, schema)
+    kw = dict(n_hashes=n_hashes, band_size=band_size, shingle_n=shingle_n)
+    got = near_dedup(docs, text_col=TEXT, id_col=id_col, threshold=0.7, **kw)
+    want = _old_near_dedup(docs, id_col, 0.7, **kw)
+    assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+    kept = {r[id_col] for r in got.collect()}
+    assert None in kept and "d00" in kept and "d01" not in kept  # exact twins
+    if (n_hashes, shingle_n) == (8, 3):
+        assert {"e1", "e2", "e3"} & kept == {"e1"}  # the chain drops greedily
+
+
+def test_near_dedup_builds_without_a_job(spark):
+    schema = StructType([StructField(ID, StringType()), StructField(TEXT, StringType())])
+    docs = spark.createDataFrame(NEAR_CORPUS, schema)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    near_dedup(docs, text_col=TEXT, id_col=ID)
+    assert set(tracker.getJobIdsForGroup(None) or []) == before
+
+
 def _round_trips(spark, build):
     """py4j commands the driver sends while ``build()`` runs. Memory
     commands are left out: py4j queues the deletes of garbage-collected
@@ -153,11 +203,17 @@ def _round_trips(spark, build):
 
 
 # 2× the counts measured with the SQL-text builds (simhash64 295,
-# minhash_lsh_candidates 111, hyperplane_bucket 3); the Column-API
-# builds they replaced took 8,092 / 1,355 / 3,079
+# minhash_lsh_candidates 111, hyperplane_bucket 3; near_dedup 133 once
+# it verified inside the band groups); the Column-API builds of the
+# first three took 8,092 / 1,355 / 3,079
 @pytest.mark.parametrize(
     "name,bound",
-    [("simhash64", 590), ("minhash_lsh_candidates", 222), ("hyperplane_bucket", 6)],
+    [
+        ("simhash64", 590),
+        ("minhash_lsh_candidates", 222),
+        ("near_dedup", 266),
+        ("hyperplane_bucket", 6),
+    ],
 )
 def test_plan_build_round_trip_budget(spark, name, bound):
     docs = spark.range(100).selectExpr(
@@ -166,6 +222,7 @@ def test_plan_build_round_trip_budget(spark, name, bound):
     builds = {
         "simhash64": lambda: simhash64(docs),
         "minhash_lsh_candidates": lambda: minhash_lsh_candidates(docs),
+        "near_dedup": lambda: near_dedup(docs),
         "hyperplane_bucket": lambda: hyperplane_bucket("embedding"),
     }
     builds[name]()  # first build pays one-time JVM class loading
