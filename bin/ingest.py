@@ -217,10 +217,7 @@ def cmd_compact(args) -> dict:
 
     spark = get_spark("nebula-compact", parallelism=args.cpus)
     table = LakeTable.load(args.table)
-    watermark = None
-    if not args.purge_all:
-        offs = table.partition_offsets()
-        watermark = min(offs.values()) if offs else None
+    watermark = None if args.purge_all else table.snapshot().low_water_mark()
     out = compact(
         spark,
         table,
@@ -251,18 +248,19 @@ def cmd_lookup(args) -> dict:
 
     spark = get_spark("nebula-lookup", parallelism=args.cpus)
     table = LakeTable.load(args.table)
+    snap = table.snapshot()
     keys = [k for k in args.keys.split(",") if k]
     # cast the comma-split CLI strings to the table's key type — lookup
     # types its probe from the key field, and raw strings fail on any
     # non-string-keyed table ("LongType can not accept object ... str")
     key_type = next(
-        f.dataType for f in table.schema.fields if f.name == table.key_col
+        f.dataType for f in snap.schema.fields if f.name == snap.key_col
     )
     if isinstance(key_type, T.IntegralType):
         keys = [int(k) for k in keys]
     elif isinstance(key_type, T.FractionalType):
         keys = [float(k) for k in keys]
-    rows = table.lookup(spark, keys).collect()
+    rows = table.lookup(spark, keys, version=snap).collect()
     return {"rows": [r.asDict() for r in rows], "requested": len(keys)}
 
 
@@ -405,7 +403,7 @@ def cmd_show(args) -> dict:
     spark = get_spark("nebula-show", parallelism=args.cpus)
     table = LakeTable.load(args.table)
     snap = table.snapshot()
-    df = table.read(spark)
+    df = table.read(spark, version=snap)
     return {
         "rows": df.count(),
         "snapshot_version": snap.version,
@@ -422,8 +420,8 @@ def cmd_show(args) -> dict:
         # above (manifest stays bounded; epoch_applied still covers
         # them); None = nothing folded yet
         "applied_watermark": snap.raw.get("applied_watermark"),
-        "merge_mode": table.merge_mode,
-        "lineage_offsets": table.partition_offsets(),
+        "merge_mode": snap.merge_mode,
+        "lineage_offsets": snap.partition_offsets(),
     }
 
 

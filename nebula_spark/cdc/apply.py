@@ -66,6 +66,12 @@ def apply_changes(
 ) -> ApplyResult:
     """Apply one change batch to the lake table, exactly-once.
 
+    ONE snapshot read and ONE commit: the epoch check, key and schema
+    come from one snapshot, which is handed to ``merge_into``. A batch
+    that evolves the schema pins ``Snapshot.evolve``'s next schema, so
+    the merge reads and writes through it and its one commit carries
+    the schema, renames, files and epoch together.
+
     ``count_inputs`` adds two cheap aggregate passes for the filtered/
     input counters (off by default — metrics come from the merge).
 
@@ -77,8 +83,8 @@ def apply_changes(
     manifest and every later route's quarantined rows for that
     micro-batch silently skip as already-applied — data loss in the
     safety path. run_multi_stream passes ``f"{route}:"``."""
-    # one snapshot read for the epoch check, key and schema; merge_into
-    # reads its own, after any schema-evolution commit below
+    # the one snapshot read: epoch check, key and schema here, and the
+    # pin of merge_into below
     snap = table.snapshot()
     if epoch is not None and snap.epoch_applied(epoch):
         return ApplyResult(merge=MergeResult(skipped=True, epoch=epoch))
@@ -148,14 +154,10 @@ def apply_changes(
         applied_renames = {
             c.field: c.to_type for c in changes if c.kind == RENAME_FIELD
         }
-        table.commit(
-            new_schema=T.StructType(list(new_user.fields) + INTERNAL_FIELDS),
-            renames=applied_renames or None,
-            summary={
-                "operation": "evolve-schema",
-                "changes": [c.__dict__ for c in changes],
-                "epoch": epoch,
-            },
+        snap = snap.evolve(
+            T.StructType(list(new_user.fields) + INTERNAL_FIELDS),
+            applied_renames or None,
+            [c.__dict__ for c in changes],
         )
         res.schema_changes = len(changes)
 
@@ -188,6 +190,7 @@ def apply_changes(
         resolve_strategy=resolve_strategy,
         conflict=conflict,
         on_rejected=_route_rejected if dlq_table is not None else None,
+        version=snap,
     )
     if dlq_table is not None:
         res.events_dlq += res.merge.rows_rejected

@@ -197,34 +197,31 @@ def incremental_diff(
     from nebula_spark.lake import LakeTable
 
     t = LakeTable.load(path)
-    to_v = t.snapshot().version if to_version is None else to_version
-    buckets: list[int] | None
-    try:
-        if (
-            t.snapshot(from_version).raw["n_buckets"]
-            != t.snapshot(to_v).raw["n_buckets"]
-        ):
-            # a rescale happened in between: bucket ids from the two
-            # layouts are incomparable, so pruning BOTH snapshots by one
-            # bucket set would read the wrong old rows — full comparison
-            buckets = None
-        else:
+    # each side read once; every question below is asked of these two
+    old_snap, new_snap = t.snapshot(from_version), t.snapshot(to_version)
+    key = new_snap.key_col
+    buckets: list[int] | None = None
+    # a rescale in between makes bucket ids from the two layouts
+    # incomparable (pruning BOTH snapshots by one bucket set would read
+    # the wrong old rows): then, as when an intermediate snapshot was
+    # expired, compare the full tables
+    if old_snap.n_buckets == new_snap.n_buckets:
+        try:
             changed: set[int] = set()
-            for v in range(from_version + 1, to_v + 1):
+            for v in range(from_version + 1, new_snap.version + 1):
                 changed |= t._buckets_changed_by(v)
             buckets = sorted(changed)
-    except FileNotFoundError:
-        # an intermediate snapshot was expired — metadata diff is
-        # impossible; fall back to the full-table comparison
-        buckets = None
+        except FileNotFoundError:
+            pass
 
     fww = (
-        t.merge_mode == "mor" and t.mor_conflict == "first_write_wins"
+        new_snap.merge_mode == "mor"
+        and new_snap.mor_conflict == "first_write_wins"
     )
-    lw = None if fww else t.low_water_mark(from_version)
+    lw = None if fww else old_snap.low_water_mark()
     new = t.read(
         spark,
-        version=to_v,
+        version=new_snap,
         buckets=buckets,
         include_internal=True,
         min_seq_exclusive=lw,
@@ -232,15 +229,15 @@ def incremental_diff(
     if buckets is not None and not buckets:
         new = new.limit(0)
     old = t.read(
-        spark, version=from_version, buckets=buckets, include_internal=True
+        spark, version=old_snap, buckets=buckets, include_internal=True
     ).select(
-        F.col(t.key_col),
+        F.col(key),
         F.col("_seq").alias("_old_seq"),
         F.col("_deleted").alias("_old_deleted"),
     )
     # '!=' (not '>'): under a FWW fold a changed key's winning _seq
     # DECREASES; under LWW/CoW it only increases, so != is equivalent
-    out = new.join(old, on=t.key_col, how="left").filter(
+    out = new.join(old, on=key, how="left").filter(
         F.col("_old_seq").isNull() | (F.col("_seq") != F.col("_old_seq"))
     )
     if _with_old:
@@ -284,9 +281,11 @@ def change_feed(
 
     from nebula_spark.lake import LakeTable
 
-    t = LakeTable.load(path)
+    # the user columns of ``to_version``, not of HEAD: a column added
+    # after it does not exist in the diff
+    to_snap = LakeTable.load(path).snapshot(to_version)
     diff = incremental_diff(
-        spark, path, from_version, to_version=to_version, _with_old=True
+        spark, path, from_version, to_version=to_snap.version, _with_old=True
     )
     # the key lived at from_version iff it had a non-tombstone version
     # (incremental_diff normalizes _old_deleted: NULL ⟺ key absent).
@@ -306,5 +305,5 @@ def change_feed(
     # inside the window, or a re-delete over an old tombstone) net to
     # nothing for a downstream consumer
     out = out.filter(~(dead & ~lived))
-    user_cols = [f.name for f in t.user_schema.fields]
+    user_cols = [f.name for f in to_snap.user_schema.fields]
     return out.select(*user_cols, "_seq", "_change_type")

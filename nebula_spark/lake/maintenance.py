@@ -140,18 +140,18 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
 
     t0 = time.time()
     snap = table.snapshot()
-    old_nb = snap.raw["n_buckets"]
+    old_nb, key = snap.n_buckets, snap.key_col
     if int(new_n_buckets) == old_nb:
         return {"rescaled": False, "n_buckets": old_nb, "version": snap.version}
-    df = table.read(spark, version=snap.version, include_internal=True)
-    df = df.withColumn("_bucket", bucket_expr(table.key_col, int(new_n_buckets)))
+    df = table.read(spark, version=snap, include_internal=True)
+    df = df.withColumn("_bucket", bucket_expr(key, int(new_n_buckets)))
     commit_dir = table.new_commit_dir()
     # key-hash repartition at the NEW width: partition id == new bucket
     # id (see compact) — one write task per new bucket
-    df.repartition(int(new_n_buckets), F.col(table.key_col)).write.partitionBy(
+    df.repartition(int(new_n_buckets), F.col(key)).write.partitionBy(
         "_bucket"
     ).mode("append").parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=table.key_col)
+    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
     new_props = None
     if (
         int(new_n_buckets) >= 256
@@ -249,16 +249,16 @@ def migrate_column(
         new_type = type_from_ddl(new_type)
     t0 = time.time()
     snap = table.snapshot()
-    user = table.user_schema
+    user, key, nb = snap.user_schema, snap.key_col, snap.n_buckets
     if column not in user.fieldNames():
         raise ValueError(f"no such column {column!r}")
-    if column == table.key_col:
+    if column == key:
         raise ValueError("cannot migrate the merge key's type")
     old_field = next(f for f in user.fields if f.name == column)
     if old_field.dataType == new_type:
         return {"migrated": False, "version": snap.version}
 
-    df = table.read(spark, version=snap.version, include_internal=True)
+    df = table.read(spark, version=snap, include_internal=True)
     conv = (
         F.try_cast(F.col(column), new_type)
         if hasattr(F, "try_cast")
@@ -286,9 +286,7 @@ def migrate_column(
     df = df.withColumn(column, conv)
     from nebula_spark.lake.table import INTERNAL_FIELDS, bucket_expr
 
-    df = df.withColumn(
-        "_bucket", bucket_expr(table.key_col, snap.raw["n_buckets"])
-    )
+    df = df.withColumn("_bucket", bucket_expr(key, nb))
 
     new_user = T.StructType(
         [
@@ -300,15 +298,15 @@ def migrate_column(
     )
     commit_dir = table.new_commit_dir()
     # one write task per bucket (see compact's note)
-    df.repartition(snap.raw["n_buckets"], F.col(table.key_col)).write.partitionBy(
-        "_bucket"
-    ).mode("append").parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=table.key_col)
+    df.repartition(nb, F.col(key)).write.partitionBy("_bucket").mode(
+        "append"
+    ).parquet(commit_dir)
+    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
     new_snap = table.commit(
         new_files_by_bucket=new_files,
         replaced_buckets=sorted(snap.files.keys()),
         new_schema=T.StructType(list(new_user.fields) + INTERNAL_FIELDS),
-        expect_n_buckets=snap.raw["n_buckets"],
+        expect_n_buckets=nb,
         base_version=snap.version,
         summary={
             "operation": "migrate-column",

@@ -457,17 +457,25 @@ def merge_into(
     resolve_strategy: str = "auto",
     conflict: str = "last_write_wins",
     on_rejected=None,
+    version: Snapshot | None = None,
 ) -> MergeResult:
     """Apply one change batch. ``batch`` must contain the table columns
     plus ``op_col``/``seq_col`` (and optionally ``partition_col`` for
     per-source-partition lineage offsets).
 
-    Three steps over ONE snapshot read: plan (``plan_merge``; on a
+    Three steps over ONE snapshot: plan (``plan_merge``; on a
     copy-on-write table after the stats job), write (the merge-on-read
-    append or the copy-on-write resolve and rewrite), and one table
+    append or the copy-on-write resolve and rewrite), and ONE table
     commit. A merge-on-read merge runs no stats job: its counters,
     touched buckets and lineage offsets come from the write job (see
     ``_append_rows``).
+
+    ``version``: the snapshot the caller already read and checked the
+    epoch against (``apply_changes`` passes its own); None reads HEAD
+    and checks the epoch here. A pin from :meth:`Snapshot.evolve` is
+    read and written through with its next schema, and the one commit
+    carries that schema and its renames together with the files and
+    the epoch; a plain pin never rewrites the schema.
 
     ``conflict`` mirrors the reference's four resolver strategies
     (internal/pipeline/cdc.go:197-221):
@@ -501,13 +509,15 @@ def merge_into(
 
     t0 = time.time()
     res = MergeResult(epoch=epoch)
-    # the one snapshot read: every choice below (key, layout, mode,
-    # fold, schema, lineage) describes this version, and the commit
-    # re-checks its bucket count so a concurrent rescale conflicts
-    snap = table.snapshot()
-    if epoch is not None and snap.epoch_applied(epoch):
-        res.skipped = True
-        return res
+    # the one snapshot: every choice below (key, layout, mode, fold,
+    # schema, lineage) describes this version, and the commit re-checks
+    # its bucket count so a concurrent rescale conflicts
+    snap = version
+    if snap is None:
+        snap = table.snapshot()
+        if epoch is not None and snap.epoch_applied(epoch):
+            res.skipped = True
+            return res
     key, nb, mor = snap.key_col, snap.n_buckets, snap.merge_mode == "mor"
     lineage = partition_col if partition_col in batch.columns else None
     fww = conflict == "first_write_wins"
@@ -599,6 +609,9 @@ def merge_into(
     summary["epoch"] = epoch
     if res.buckets_touched:
         summary.update(keys=res.keys_touched, buckets=res.buckets_touched)
+    new_schema = renames = None
+    if snap.evolution is not None:
+        new_schema, renames, summary["changes"] = snap.evolution
 
     # --- commit
     applied_update = None
@@ -611,6 +624,8 @@ def merge_into(
         applied_update=applied_update,
         summary=summary,
         expect_n_buckets=nb,
+        new_schema=new_schema,
+        renames=renames,
         **replace,
     )
     res.version = new_snap.version

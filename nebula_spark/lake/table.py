@@ -186,8 +186,16 @@ INTERNAL_COLS = [f.name for f in INTERNAL_FIELDS]
 
 @dataclass
 class Snapshot:
+    """One table version, read once: every metadata question of an
+    operation (schema, key, layout, mode, epochs, lineage) is asked of
+    the same snapshot, so a commit landing mid-operation cannot mix
+    versions."""
+
     version: int
     raw: dict
+    # set by ``evolve``: the (storage schema, renames) its commit must
+    # carry, and the schema changes for the commit summary
+    evolution: tuple | None = None
 
     @property
     def schema(self) -> T.StructType:
@@ -387,6 +395,59 @@ class Snapshot:
                     offsets[pid] = max(offsets.get(pid, -1), int(seq))
         return offsets
 
+    def low_water_mark(self) -> int | None:
+        """min over source partitions of the lineage offsets: every
+        event with op_sequence ≤ this was applied by this version. The
+        safe floor for incremental pruning (a per-partition stream can
+        lag, so only the MIN bounds what might still arrive). None when
+        no lineage exists."""
+        offsets = self.partition_offsets()
+        return min(offsets.values()) if offsets else None
+
+    def schema_history(self, include_internal: bool = False) -> list[T.StructType]:
+        """Every schema version this table has had, oldest first — the
+        registry history the *_TRANSITIVE compatibility modes check
+        against (evolution.check_compatibility_with_history)."""
+        out = []
+        for sv in sorted(int(k) for k in self.raw["schemas"]):
+            s = T.StructType.fromJson(self.raw["schemas"][str(sv)])
+            if not include_internal:
+                s = T.StructType([f for f in s.fields if f.name not in INTERNAL_COLS])
+            out.append(s)
+        return out
+
+    def evolve(
+        self,
+        new_schema: T.StructType | None,
+        renames: dict[str, str] | None = None,
+        changes: list | None = None,
+    ) -> "Snapshot":
+        """This version with the next schema: ``new_schema`` (the full
+        storage schema) becomes schema_version + 1 when it differs, and
+        ``renames`` joins the rename history with chains collapsed
+        (a->b recorded, now b->c => a->c, b->c) so old files map
+        straight to the current name. Nothing is written: a writer reads
+        and writes through the result, and its one commit carries the
+        schema with its data (``commit`` evolves HEAD the same way).
+        ``changes`` only annotates that commit's summary."""
+        raw = dict(self.raw)
+        if new_schema is not None and new_schema.jsonValue() != self.schema.jsonValue():
+            raw["schema_version"] = self.schema_version + 1
+            raw["schemas"] = {
+                **raw["schemas"], str(raw["schema_version"]): new_schema.jsonValue()
+            }
+        if renames:
+            if raw["key_col"] in renames:
+                raise ValueError(f"cannot rename the merge key {raw['key_col']!r}")
+            hist = dict(raw.get("renames", {}))
+            for old, new in renames.items():
+                for o, n in list(hist.items()):
+                    if n == old:
+                        hist[o] = new
+                hist[old] = new
+            raw["renames"] = hist
+        return Snapshot(self.version, raw, (new_schema, renames, changes or []))
+
 
 class ConcurrentBucketConflict(RuntimeError):
     """Two writers rewrote the same bucket concurrently — the loser must
@@ -412,72 +473,6 @@ class LakeTable:
         with open(self._meta(SNAP_FMT % v)) as f:
             return Snapshot(v, json.load(f))
 
-    @property
-    def schema(self) -> T.StructType:
-        """Full storage schema (user columns + internal _seq/_deleted)."""
-        return self.snapshot().schema
-
-    @property
-    def user_schema(self) -> T.StructType:
-        return self.snapshot().user_schema
-
-    @property
-    def key_col(self) -> str:
-        return self.snapshot().key_col
-
-    @property
-    def merge_mode(self) -> str:
-        """See :attr:`Snapshot.merge_mode`."""
-        return self.snapshot().merge_mode
-
-    @property
-    def mor_conflict(self) -> str:
-        """See :attr:`Snapshot.mor_conflict`."""
-        return self.snapshot().mor_conflict
-
-    @property
-    def n_buckets(self) -> int:
-        return self.snapshot().n_buckets
-
-    def schema_history(self, include_internal: bool = False) -> list[T.StructType]:
-        """Every schema version this table has had, oldest first — the
-        registry history the *_TRANSITIVE compatibility modes check
-        against (evolution.check_compatibility_with_history)."""
-        snap = self.snapshot()
-        out = []
-        for sv in sorted(int(k) for k in snap.raw["schemas"]):
-            s = T.StructType.fromJson(snap.raw["schemas"][str(sv)])
-            if not include_internal:
-                s = T.StructType(
-                    [f for f in s.fields if f.name not in INTERNAL_COLS]
-                )
-            out.append(s)
-        return out
-
-    def applied_epochs(self) -> set[str]:
-        """The recent (unfolded) epoch keys — introspection/metrics.
-        Idempotence checks must use :meth:`epoch_applied`, which also
-        covers epochs folded into the watermark."""
-        return set(self.snapshot().applied.keys())
-
-    def epoch_applied(self, epoch) -> bool:
-        """See :meth:`Snapshot.epoch_applied`; covers epochs folded into
-        the watermarks, unlike :meth:`applied_epochs`."""
-        return self.snapshot().epoch_applied(epoch)
-
-    def partition_offsets(self, version: int | None = None) -> dict[str, int]:
-        """See :meth:`Snapshot.partition_offsets`."""
-        return self.snapshot(version).partition_offsets()
-
-    def low_water_mark(self, version: int | None = None) -> int | None:
-        """min over source partitions of the lineage offsets: every
-        event with op_sequence ≤ this was applied by ``version``. The
-        safe floor for incremental pruning (a per-partition stream can
-        lag, so only the MIN bounds what might still arrive). None when
-        no lineage exists."""
-        offsets = self.partition_offsets(version)
-        return min(offsets.values()) if offsets else None
-
     # ---------- create / commit ----------
 
     @classmethod
@@ -495,20 +490,14 @@ class LakeTable:
             raise ValueError(f"schema may not use reserved columns {INTERNAL_COLS}")
         schema = T.StructType(list(schema.fields) + INTERNAL_FIELDS)
         properties = dict(properties or {})
-        if "manifest_segment_buckets" not in properties:
-            # opt-in default for every table of a process (lets the
-            # whole test suite run segmented): 0/unset = inline
-            env = os.environ.get("NEBULA_SEGMENT_BUCKETS")
-            if env:
-                properties["manifest_segment_buckets"] = int(env)
-            elif n_buckets >= 256:
-                # wide tables segment by default: an inline snapshot at
-                # 256+ buckets is rewritten whole per commit (O(table)
-                # metadata — measured 4 MB/commit at 4096 buckets, see
-                # BENCH/BASELINE.md round 5); 64 buckets/segment keeps
-                # the segment map small and narrow commits O(changed).
-                # Pass manifest_segment_buckets=0 to force inline.
-                properties["manifest_segment_buckets"] = 64
+        if "manifest_segment_buckets" not in properties and n_buckets >= 256:
+            # wide tables segment by default: an inline snapshot at 256+
+            # buckets is rewritten whole per commit (O(table) metadata —
+            # measured 4 MB/commit at 4096 buckets, see BENCH/BASELINE.md
+            # round 5); 64 buckets/segment keeps the segment map small
+            # and narrow commits O(changed). Pass
+            # manifest_segment_buckets=0 to force inline.
+            properties["manifest_segment_buckets"] = 64
         seg_width = int(properties.get("manifest_segment_buckets", 0) or 0)
         t = cls(root)
         os.makedirs(t._meta(), exist_ok=False)
@@ -709,8 +698,9 @@ class LakeTable:
         _retries: int = 3,
     ) -> Snapshot:
         """Produce snapshot v+1: keep files of untouched buckets, swap in
-        new files for ``replaced_buckets``, optionally bump the schema,
-        and merge ``applied_update`` into the commit manifest. Atomic.
+        new files for ``replaced_buckets``, optionally evolve the schema
+        (``new_schema``/``renames``, see :meth:`Snapshot.evolve`), and
+        merge ``applied_update`` into the commit manifest. Atomic.
 
         ``replaced_files``: FILE-level replace — {bucket: [paths]} of
         individual live files this commit rewrote; other files in those
@@ -765,7 +755,9 @@ class LakeTable:
                 "since this commit was planned; re-run against the new "
                 "snapshot"
             )
-        raw = json.loads(json.dumps(cur.raw))  # deep copy
+        evolving = new_schema is not None or bool(renames)
+        base = cur.evolve(new_schema, renames) if evolving else cur
+        raw = json.loads(json.dumps(base.raw))  # deep copy
         version = cur.version + 1
         raw["version"] = version
         raw["parent"] = cur.version
@@ -783,21 +775,6 @@ class LakeTable:
                     f"{sorted(missing)}"
                 )
             raw["n_buckets"] = int(new_n_buckets)
-        if new_schema is not None and new_schema.jsonValue() != cur.schema.jsonValue():
-            raw["schema_version"] = cur.schema_version + 1
-            raw["schemas"][str(raw["schema_version"])] = new_schema.jsonValue()
-        if renames:
-            if raw["key_col"] in renames:
-                raise ValueError(f"cannot rename the merge key {raw['key_col']!r}")
-            # collapse chains (a->b recorded, now b->c => a->c, b->c) so
-            # old files always map straight to the current name
-            hist = dict(raw.get("renames", {}))
-            for old, new in renames.items():
-                for o, n in list(hist.items()):
-                    if n == old:
-                        hist[o] = new
-                hist[old] = new
-            raw["renames"] = hist
         sv = raw["schema_version"]
         changed_buckets = (
             {int(b) for b in replaced_buckets}
@@ -1041,7 +1018,8 @@ class LakeTable:
         ('string', 'array<int>', ...)."""
         if isinstance(data_type, str):
             data_type = type_from_ddl(data_type)
-        if name in self.schema.fieldNames():
+        snap = self.snapshot()
+        if name in snap.schema.fieldNames():
             raise ValueError(f"column {name!r} already exists")
         meta: dict = {}
         if default is not None:
@@ -1050,7 +1028,7 @@ class LakeTable:
             meta["comment"] = comment
         field = T.StructField(name, data_type, True, meta)
         new_schema = T.StructType(
-            list(self.user_schema.fields) + [field] + INTERNAL_FIELDS
+            list(snap.user_schema.fields) + [field] + INTERNAL_FIELDS
         )
         return self.commit(
             new_schema=new_schema,
@@ -1455,7 +1433,7 @@ class LakeTable:
         self,
         spark: SparkSession,
         keys: list,
-        version: int | None = None,
+        version: "int | Snapshot | None" = None,
         include_internal: bool = False,
     ) -> DataFrame:
         """Point lookup: the current row (if live) for each requested
@@ -1481,7 +1459,7 @@ class LakeTable:
                 spark, buckets=[], version=version,
                 include_internal=include_internal,
             )
-        snap = self.snapshot(version)
+        snap = self._pinned(version)
         nb = snap.raw["n_buckets"]
         key_field = next(
             f for f in snap.schema.fields if f.name == snap.raw["key_col"]
@@ -1529,7 +1507,7 @@ class LakeTable:
         return self.read(
             spark,
             buckets=sorted(keys_by_bucket),
-            version=version,
+            version=snap,
             include_internal=include_internal,
             exclude_paths=exclude,
             key_in=list(keys),

@@ -62,8 +62,10 @@ class IngestMetrics:
             "uptime_sec": round(time.time() - self.started_at, 1),
         }
         if table is not None:
-            out["lineage_offsets"] = table.partition_offsets()
-            out["table_version"] = table.snapshot().version
+            # offsets and version of the same snapshot
+            snap = table.snapshot()
+            out["lineage_offsets"] = snap.partition_offsets()
+            out["table_version"] = snap.version
         return out
 
     def dump(self, path: str, table: LakeTable | None = None) -> None:

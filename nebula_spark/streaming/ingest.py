@@ -37,6 +37,66 @@ class _TriggerResize(Exception):
     committed, so the restart redelivers it as a manifest-skip no-op."""
 
 
+class _Trigger:
+    """maxFilesPerTrigger of one stream, with the adaptive sizing that
+    ``run_stream`` and ``run_multi_stream`` share. A batch taking >1.5×
+    ``target_s`` halves the trigger; one finishing <0.5× doubles it
+    (capped at ``max_files``). maxFilesPerTrigger is fixed at stream
+    start, so a resize stops the availableNow stream and restarts it
+    from the same checkpoint with the new size."""
+
+    def __init__(
+        self, files: int, target_s: float | None, max_files: int, available_now: bool
+    ):
+        if target_s is not None and not available_now:
+            raise ValueError(
+                "adaptive trigger sizing resizes via availableNow restarts; "
+                "unsupported for a continuous stream"
+            )
+        self.cur, self.target_s, self.max_files = files, target_s, max_files
+        self.resizes: list[dict] = []
+        self.pending = False
+        # the batch a resize restart redelivers: its work was counted
+        # when it first committed
+        self.resized_batch: int | None = None
+
+    def after_batch(self, batch_id: int, dt: float) -> None:
+        """Decide on a committed batch that took ``dt`` seconds. A
+        resize raises, Spark fails the batch, and the restart redelivers
+        it as a manifest skip — exactly-once is untouched. Callers skip
+        redelivered (skipped) batches: their duration measures nothing."""
+        if self.target_s is None:
+            return
+        cur = new = self.cur
+        if dt > 1.5 * self.target_s and cur > 1:
+            new = max(1, cur // 2)
+        elif dt < 0.5 * self.target_s and cur < self.max_files:
+            new = min(self.max_files, cur * 2)
+        if new != cur:
+            self.cur, self.pending, self.resized_batch = new, True, batch_id
+            self.resizes.append(
+                {"batch": batch_id, "from": cur, "to": new, "batch_s": round(dt, 3)}
+            )
+            raise _TriggerResize
+
+    def run_available_now(self, build_writer) -> None:
+        """Drain the backlog, restarting after each resize."""
+        while True:
+            q = build_writer(self.cur).trigger(availableNow=True).start()
+            try:
+                q.awaitTermination()
+                return
+            except Exception:
+                if not self.pending:
+                    raise
+                self.pending = False  # restart with the new size
+
+    def report(self) -> dict:
+        if self.target_s is None:
+            return {}
+        return {"trigger_resizes": self.resizes, "final_trigger": self.cur}
+
+
 def run_stream(
     spark: SparkSession,
     table: LakeTable,
@@ -119,16 +179,10 @@ def run_stream(
 
     ingest_metrics = IngestMetrics()
     metrics = {"batches": 0, "skipped": 0, "events": 0, "retries": 0, "batches_dlq": 0}
-    trigger_state = {
-        "cur": max_files_per_trigger,
-        "resizes": [],
-        "pending": False,
-    }
-    if adaptive_target_batch_s is not None and not available_now:
-        raise ValueError(
-            "adaptive trigger sizing resizes via availableNow restarts; "
-            "unsupported for a continuous stream"
-        )
+    trigger = _Trigger(
+        max_files_per_trigger, adaptive_target_batch_s, adaptive_max_trigger,
+        available_now,
+    )
 
     def apply_once(batch_df, batch_id: int):
         return apply_changes(
@@ -177,12 +231,12 @@ def run_stream(
                     return
                 metrics["retries"] += 1
                 time.sleep(retry_backoff_s * (2 ** (attempt - 1)))
-        if res.merge.skipped and trigger_state.get("resized_batch") == batch_id:
+        if res.merge.skipped and trigger.resized_batch == batch_id:
             # redelivery caused by our own resize restart: the work was
             # already counted when this batch originally committed —
             # recounting would overstate batches/skipped by one per
             # resize. (A genuine crash-redelivery skip still counts.)
-            trigger_state["resized_batch"] = None
+            trigger.resized_batch = None
             return
         ingest_metrics.record(res)
         metrics["batches"] += 1
@@ -223,7 +277,7 @@ def run_stream(
                         snap.merge_mode == "mor"
                         and snap.mor_conflict == "first_write_wins"
                     )
-                    purge_wm = None if fww else table.low_water_mark()
+                    purge_wm = None if fww else snap.low_water_mark()
                 compact(
                     spark,
                     table,
@@ -235,67 +289,48 @@ def run_stream(
                 metrics["compactions"] = metrics.get("compactions", 0) + 1
         if metrics_path:
             ingest_metrics.dump(metrics_path, table)
-        if adaptive_target_batch_s is not None and not res.merge.skipped:
-            # decide AFTER the commit: a resize raises, Spark fails the
-            # batch, and the restart redelivers it as a manifest skip —
-            # exactly-once is untouched. Redelivered (skipped) batches
-            # make no decision (their duration measures nothing).
-            dt = time.time() - t_batch
-            cur = trigger_state["cur"]
-            new = cur
-            if dt > 1.5 * adaptive_target_batch_s and cur > 1:
-                new = max(1, cur // 2)
-            elif dt < 0.5 * adaptive_target_batch_s and cur < adaptive_max_trigger:
-                new = min(adaptive_max_trigger, cur * 2)
-            if new != cur:
-                trigger_state["cur"] = new
-                trigger_state["pending"] = True
-                trigger_state["resized_batch"] = batch_id
-                trigger_state["resizes"].append(
-                    {"batch": batch_id, "from": cur, "to": new,
-                     "batch_s": round(dt, 3)}
-                )
-                raise _TriggerResize
+        if not res.merge.skipped:
+            trigger.after_batch(batch_id, time.time() - t_batch)
 
-    def build_writer():
-        reader = (
-            spark.readStream.schema(schema or BINLOG_SCHEMA)
-            .option("maxFilesPerTrigger", trigger_state["cur"])
-            # binlog chunks are written dir-per-chunk (_chunk=K)
-            .option("recursiveFileLookup", "true")
-            .parquet(binlog_dir)
-        )
-        return reader.writeStream.foreachBatch(apply_batch).option(
-            "checkpointLocation", checkpoint_dir
+    def build_writer(files: int):
+        return _binlog_writer(
+            spark, schema or BINLOG_SCHEMA, files, binlog_dir, apply_batch,
+            checkpoint_dir,
         )
 
     t0 = time.time()
-    if available_now:
-        while True:
-            q = build_writer().trigger(availableNow=True).start()
-            try:
-                q.awaitTermination()
-                break
-            except Exception:
-                if not trigger_state["pending"]:
-                    raise
-                trigger_state["pending"] = False  # restart with new size
-    else:
-        q = build_writer().start()
-        return {"query_id": str(q.id)}
+    if not available_now:
+        return {"query_id": str(build_writer(trigger.cur).start().id)}
+    trigger.run_available_now(build_writer)
     dt = time.time() - t0
-    out = {
+    snap = table.snapshot()
+    return {
         **metrics,
         "seconds": round(dt, 2),
         "events_per_sec": round(metrics["events"] / dt, 1) if dt > 0 else None,
-        "snapshot_version": table.snapshot().version,
-        "lineage_offsets": table.partition_offsets(),
+        "snapshot_version": snap.version,
+        "lineage_offsets": snap.partition_offsets(),
         "detail": ingest_metrics.snapshot(),
+        **trigger.report(),
     }
-    if adaptive_target_batch_s is not None:
-        out["trigger_resizes"] = trigger_state["resizes"]
-        out["final_trigger"] = trigger_state["cur"]
-    return out
+
+
+def _binlog_writer(
+    spark: SparkSession, schema, files: int, binlog_dir: str, apply_batch,
+    checkpoint_dir: str,
+):
+    """The foreachBatch writer over the binlog directory, at ``files``
+    per trigger."""
+    reader = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files)
+        # binlog chunks are written dir-per-chunk (_chunk=K)
+        .option("recursiveFileLookup", "true")
+        .parquet(binlog_dir)
+    )
+    return reader.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
 
 
 @dataclass
@@ -366,16 +401,10 @@ def run_multi_stream(
         "events_unrouted": 0,
         "tables": {name: {"batches": 0, "skipped": 0, "events": 0} for name in routes},
     }
-    trigger_state = {
-        "cur": max_files_per_trigger,
-        "resizes": [],
-        "pending": False,
-    }
-    if adaptive_target_batch_s is not None and not available_now:
-        raise ValueError(
-            "adaptive trigger sizing resizes via availableNow restarts; "
-            "unsupported for a continuous stream"
-        )
+    trigger = _Trigger(
+        max_files_per_trigger, adaptive_target_batch_s, adaptive_max_trigger,
+        available_now,
+    )
 
     def apply_batch(batch_df, batch_id: int):
         t_batch = time.time()
@@ -384,7 +413,7 @@ def run_multi_stream(
         # redelivery caused by our own resize restart: every route
         # manifest-skips; replay the (idempotent) fan-out but don't
         # recount — metrics would overstate by one per route per resize
-        recount = trigger_state.get("resized_batch") != batch_id
+        recount = trigger.resized_batch != batch_id
         while True:
             batch_df.persist()
             try:
@@ -455,7 +484,7 @@ def run_multi_stream(
                 if recount:
                     metrics["batches"] += 1
                 else:
-                    trigger_state["resized_batch"] = None
+                    trigger.resized_batch = None
                 break
             except Exception:
                 attempt += 1
@@ -465,71 +494,34 @@ def run_multi_stream(
                 time.sleep(retry_backoff_s * (2 ** (attempt - 1)))
             finally:
                 batch_df.unpersist()
-        if adaptive_target_batch_s is not None and applied_any:
+        if applied_any:
             # after EVERY route committed: a resize raise makes the
             # restart redeliver this batch as N per-table manifest skips
-            dt = time.time() - t_batch
-            cur = trigger_state["cur"]
-            new = cur
-            if dt > 1.5 * adaptive_target_batch_s and cur > 1:
-                new = max(1, cur // 2)
-            elif dt < 0.5 * adaptive_target_batch_s and cur < adaptive_max_trigger:
-                new = min(adaptive_max_trigger, cur * 2)
-            if new != cur:
-                trigger_state["cur"] = new
-                trigger_state["pending"] = True
-                trigger_state["resized_batch"] = batch_id
-                trigger_state["resizes"].append(
-                    {"batch": batch_id, "from": cur, "to": new,
-                     "batch_s": round(dt, 3)}
-                )
-                raise _TriggerResize
+            trigger.after_batch(batch_id, time.time() - t_batch)
 
-    def build_writer():
-        reader = (
-            spark.readStream.schema(schema or MULTI_BINLOG_SCHEMA)
-            .option("maxFilesPerTrigger", trigger_state["cur"])
-            .option("recursiveFileLookup", "true")
-            .parquet(binlog_dir)
-        )
-        return reader.writeStream.foreachBatch(apply_batch).option(
-            "checkpointLocation", checkpoint_dir
+    def build_writer(files: int):
+        return _binlog_writer(
+            spark, schema or MULTI_BINLOG_SCHEMA, files, binlog_dir,
+            apply_batch, checkpoint_dir,
         )
 
     t0 = time.time()
-    if available_now:
-        while True:
-            q = build_writer().trigger(availableNow=True).start()
-            try:
-                q.awaitTermination()
-                break
-            except Exception:
-                if not trigger_state["pending"]:
-                    raise
-                trigger_state["pending"] = False  # restart with new size
-    else:
-        q = build_writer().start()
-        return {"query_id": str(q.id)}
+    if not available_now:
+        return {"query_id": str(build_writer(trigger.cur).start().id)}
+    trigger.run_available_now(build_writer)
     dt = time.time() - t0
     total_events = sum(m["events"] for m in metrics["tables"].values())
-    out_extra = (
-        {"trigger_resizes": trigger_state["resizes"],
-         "final_trigger": trigger_state["cur"]}
-        if adaptive_target_batch_s is not None
-        else {}
-    )
+    snaps = {name: r.table.snapshot() for name, r in routes.items()}
     return {
         **metrics,
-        **out_extra,
+        **trigger.report(),
         "seconds": round(dt, 2),
         "events": total_events,
         "events_per_sec": round(total_events / dt, 1) if dt > 0 else None,
-        "versions": {
-            name: r.table.snapshot().version for name, r in routes.items()
-        },
+        "versions": {name: s.version for name, s in snaps.items()},
         # per-table per-source-partition high-water marks (the lineage
         # offsets, folded from each table's commit manifest)
         "lineage_offsets": {
-            name: r.table.partition_offsets() for name, r in routes.items()
+            name: s.partition_offsets() for name, s in snaps.items()
         },
     }

@@ -341,7 +341,7 @@ def test_reject_dlq_routing_happens_before_commit(spark, tmp_path):
         )
     # nothing committed, epoch NOT applied — the retry replays fully
     assert table.snapshot().version == v_before
-    assert "1" not in table.applied_epochs()
+    assert "1" not in table.snapshot().applied
 
     routed = []
     res = merge_into(
@@ -354,4 +354,4 @@ def test_reject_dlq_routing_happens_before_commit(spark, tmp_path):
     )
     assert routed == ["a"] and res.rows_rejected == 1
     assert res.rejected is None  # consumed by the callback, unpersisted
-    assert "1" in table.applied_epochs()
+    assert "1" in table.snapshot().applied

@@ -94,7 +94,7 @@ def test_mid_stream_evolution_end_to_end(spark, tmp_path):
     r2 = apply_changes(spark, table, v2, epoch=1)
     assert r2.schema_changes == 2  # widen n_tok + add lang
 
-    schema = {f.name: f.dataType for f in table.user_schema.fields}
+    schema = {f.name: f.dataType for f in table.snapshot().user_schema.fields}
     assert isinstance(schema["n_tok"], T.LongType)
     assert isinstance(schema["lang"], T.StringType)
 
@@ -114,8 +114,8 @@ def test_mid_stream_evolution_end_to_end(spark, tmp_path):
 
 
 def test_redelivery_after_evolution_is_noop(spark, tmp_path):
-    """Evolution commit + merge commit are separate snapshots; the
-    epoch manifest must still dedupe a redelivered evolved batch."""
+    """An evolving batch commits once (schema, files and epoch in one
+    snapshot); the epoch manifest must dedupe its redelivery."""
     table = LakeTable.create(str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=4)
     v2 = gen_binlog(spark, 500, 50, seed=3).withColumn("lang", F.lit("en"))
     apply_changes(spark, table, v2, epoch=0)
@@ -236,7 +236,7 @@ def test_commit_retry_preserves_renames(spark, tmp_path, monkeypatch):
             T.StructField(
                 "origin" if f.name == "source" else f.name, f.dataType, f.nullable
             )
-            for f in table.user_schema.fields
+            for f in table.snapshot().user_schema.fields
         ]
     )
     from nebula_spark.lake.table import INTERNAL_FIELDS
@@ -256,7 +256,7 @@ def test_commit_retry_preserves_renames(spark, tmp_path, monkeypatch):
 
 def test_transitive_compat_checks_full_history(spark, tmp_path):
     """*_TRANSITIVE modes validate against every schema the table has
-    ever had (registry.go:27-40), via LakeTable.schema_history: a
+    ever had (registry.go:27-40), via Snapshot.schema_history: a
     change compatible with the latest version but not an earlier one
     passes the plain mode and fails the transitive one."""
     from nebula_spark.evolution import check_compatibility_with_history
@@ -267,7 +267,7 @@ def test_transitive_compat_checks_full_history(spark, tmp_path):
     # evolve: + lang column (v2)
     batch = gen_binlog(spark, 200, 50, seed=51).withColumn("lang", F.lit("en"))
     apply_changes(spark, table, batch, epoch=0)
-    hist = table.schema_history()
+    hist = table.snapshot().schema_history()
     assert len(hist) == 2
     assert "lang" in {f.name for f in hist[1]}
 
@@ -347,8 +347,8 @@ def test_add_column_with_initial_default(spark, tmp_path):
     from nebula_spark.evolution import evolve_schema
 
     new_user, _ = evolve_schema(
-        table.user_schema,
-        table.user_schema,  # no-op diff keeps every field
+        table.snapshot().user_schema,
+        table.snapshot().user_schema,  # no-op diff keeps every field
     )
     f = next(x for x in new_user.fields if x.name == "lang")
     assert f.metadata.get("initial_default") == "en"
@@ -395,7 +395,7 @@ def test_migrate_column_non_widening(spark, tmp_path):
     out = migrate_column(spark, table, "source", "int")
     assert out["migrated"] and out["to_type"] == "int"
     got = table.read(spark)
-    f = next(x for x in table.user_schema.fields if x.name == "source")
+    f = next(x for x in table.snapshot().user_schema.fields if x.name == "source")
     assert f.dataType.simpleString() == "int"
     assert got.filter(F.col("source") == 7).count() == n_numeric
     assert got.filter(F.col("source").isNull()).count() == n_total - n_numeric

@@ -300,9 +300,9 @@ def test_expire_snapshots_incremental_o_changed(spark, tmp_path, monkeypatch):
     removed = expire_snapshots(table, keep_last=keep_last)
     monkeypatch.undo()
 
-    # under segmented manifests (NEBULA_SEGMENT_BUCKETS) the count also
-    # includes dead segment JSONs; the existence checks below pin the
-    # exact data-file semantics either way
+    # on a segmented manifest the count would also include dead segment
+    # JSONs; the existence checks below pin the exact data-file
+    # semantics either way
     assert removed >= len(dead_expected)
     for p in dead_expected:
         assert not os.path.exists(p)
@@ -396,3 +396,40 @@ def test_change_feed_types_and_netting(spark, tmp_path):
         for r in change_feed(spark, str(tmp_path / "t"), v2).collect()
     }
     assert feed2 == {"k3": ("insert", 33)}
+
+
+def test_change_feed_to_version_before_added_column(spark, tmp_path):
+    """change_feed(..., to_version=v) takes its columns from snapshot
+    v: a column added after v is not in the feed (it used to take
+    them from HEAD and fail with UNRESOLVED_COLUMN)."""
+    from nebula_spark.io.sources import change_feed
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+    path = str(tmp_path / "t")
+    table = LakeTable.create(path, schema, "k", n_buckets=4)
+
+    def batch(rows):
+        return spark.createDataFrame(
+            rows, "op_sequence long, op string, k string, v long"
+        )
+
+    merge_into(spark, table, batch([(0, "INSERT", "k1", 1)]), epoch=0)
+    v1 = table.snapshot().version
+    merge_into(
+        spark, table, batch([(1, "UPDATE", "k1", 11), (2, "INSERT", "k2", 2)]),
+        epoch=1,
+    )
+    v2 = table.snapshot().version
+    table.add_column("note", "string")
+
+    feed = change_feed(spark, path, v1, to_version=v2)
+    assert feed.columns == ["k", "v", "_seq", "_change_type"]
+    assert {(r["k"], r["_change_type"], r["v"]) for r in feed.collect()} == {
+        ("k1", "update", 11),
+        ("k2", "insert", 2),
+    }

@@ -150,7 +150,7 @@ def test_pruned_merge_conflicts_with_concurrent_compaction(spark, tmp_path):
     got = {r["k"]: r["v"] for r in table.read(spark).collect()}
     assert got == oracle
     # the losing epoch was NOT recorded as applied; the retry converges
-    assert not table.epoch_applied(2)
+    assert not table.snapshot().epoch_applied(2)
     upd = _batch(spark, gen0[:10], 2000, val=lambda i: 7000 + i)
     merge_into(spark, table, upd, epoch=2)
     oracle.update({k: 7000 + i for i, k in enumerate(gen0[:10])})

@@ -125,4 +125,4 @@ def test_environment_does_not_override_dedup_argument(spark, tmp_path, monkeypat
         spark, table, gen_binlog(spark, 200, 50, seed=3), epoch=0, dedup_how="auto"
     )
     assert not res.merge.skipped and res.merge.events_in == 200
-    assert table.epoch_applied(0)
+    assert table.snapshot().epoch_applied(0)

@@ -32,7 +32,7 @@ def _mor(tmp_path, name="m", buckets=4):
 
 def test_mor_replay_matches_oracle_any_order(spark, tmp_path):
     table = _mor(tmp_path)
-    assert table.merge_mode == "mor"
+    assert table.snapshot().merge_mode == "mor"
     batches = [
         gen_binlog(spark, 2000, 150, seed=i).withColumn(
             "op_sequence", F.col("op_sequence") + i * 10_000
@@ -71,7 +71,7 @@ def test_mor_exactly_once_and_bucket_pruned_read(spark, tmp_path):
     full = {r["doc_id"]: r["n_tok"] for r in table.read(spark).collect()}
     part = {
         r["doc_id"]: r["n_tok"]
-        for b in range(table.n_buckets)
+        for b in range(table.snapshot().n_buckets)
         for r in table.read(spark, buckets=[b]).collect()
     }
     assert part == full
@@ -234,7 +234,7 @@ def test_mor_fww_replay_matches_oracle_any_order(spark, tmp_path):
     import os
 
     table = _mor_fww(tmp_path)
-    assert table.mor_conflict == "first_write_wins"
+    assert table.snapshot().mor_conflict == "first_write_wins"
     batches = [
         gen_binlog(spark, 2000, 150, seed=50 + i).withColumn(
             "op_sequence", F.col("op_sequence") + i * 10_000
@@ -502,7 +502,7 @@ def test_stream_auto_compact_purges_tombstones_below_lwm(spark, tmp_path):
         purge_tombstones=True,
     )
     assert m.get("compactions", 0) >= 5
-    lwm = table.low_water_mark()
+    lwm = table.snapshot().low_water_mark()
     assert lwm is not None and lwm > 0
     internal = table.read(spark, include_internal=True)
     below = internal.filter(F.col("_deleted") & (F.col("_seq") < lwm)).count()

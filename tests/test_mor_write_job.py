@@ -123,7 +123,7 @@ def test_stream_lineage_and_counters_match_reference(spark, tmp_path, monkeypatc
         assert m.partitions == parts
         assert abs(m.keys_touched - len(keys)) <= 1 + len(keys) // 10
     assert offsets == {"0": 60, "1": 58, "2": 55}
-    assert table.partition_offsets() == offsets
+    assert table.snapshot().partition_offsets() == offsets
     got = {r["doc_id"]: r["tokens"] for r in table.read(spark).collect()}
     assert got == {k: v[2] for k, v in final.items() if v[1] != "DELETE"}
     assert got["doc-x"] == [60 % 7]
@@ -217,6 +217,6 @@ def test_empty_mor_batch_commits_its_epoch(spark, tmp_path, dedup_how):
     empty = gen_binlog(spark, 10, 5, seed=1).limit(0)
     res = merge_into(spark, table, empty, epoch=0, dedup_how=dedup_how)
     assert (res.events_in, res.buckets_touched, res.partitions) == (0, 0, {})
-    assert table.epoch_applied(0)
+    assert table.snapshot().epoch_applied(0)
     assert table.snapshot().raw["summary"]["operation"] == "merge-empty"
     assert os.listdir(os.path.join(table.root, "data")) == []

@@ -141,7 +141,7 @@ def test_multi_stream_per_table_column_filter(spark, tmp_path):
         schema=log.schema,
     )
     # the narrow table evolved nothing extra: payload stayed 2 columns
-    assert {f.name for f in routes["orders"].table.user_schema.fields} == {
+    assert {f.name for f in routes["orders"].table.snapshot().user_schema.fields} == {
         "doc_id",
         "n_tok",
     }
@@ -288,7 +288,7 @@ def test_multi_stream_continuous_processing_time_trigger(spark, tmp_path):
         # does not drop partitions), so both LWMs must advance
         t0 = time.time()
         while time.time() - t0 < deadline_s:
-            lwms = [r.table.low_water_mark() for r in routes.values()]
+            lwms = [r.table.snapshot().low_water_mark() for r in routes.values()]
             if all(lwm is not None and lwm >= at_least for lwm in lwms):
                 return lwms
             time.sleep(0.5)

@@ -60,7 +60,7 @@ def test_multi_batch_replay_matches_oracle(spark, tmp_path):
     oracle = replay_final_state(os.path.join(binlog_dir, "*", "*.parquet"))
     assert_equivalent(final, oracle)
     # lineage offsets folded over all epochs cover every source partition
-    offs = table.partition_offsets()
+    offs = table.snapshot().partition_offsets()
     assert len(offs) == 8 and all(v >= 0 for v in offs.values())
 
 
@@ -216,17 +216,17 @@ def test_applied_epoch_manifest_folds_bounded(spark, tmp_path):
         "c7" in snap.applied
         or snap.raw.get("applied_watermarks", {}).get("c") == 7
     )
-    assert table.epoch_applied("c7")
-    assert not table.epoch_applied("c8")
+    assert table.snapshot().epoch_applied("c7")
+    assert not table.snapshot().epoch_applied("c8")
     # idempotence covers folded epochs
     for i in range(8):
-        assert table.epoch_applied(i)
+        assert table.snapshot().epoch_applied(i)
         res = merge_into(spark, table, batches[i], epoch=i)
         assert res.skipped
-    assert not table.epoch_applied(99)
+    assert not table.snapshot().epoch_applied(99)
     # lineage offsets identical to the unbounded twin
-    assert table.partition_offsets() == ref.partition_offsets()
-    assert table.low_water_mark() == ref.low_water_mark()
+    assert table.snapshot().partition_offsets() == ref.snapshot().partition_offsets()
+    assert table.snapshot().low_water_mark() == ref.snapshot().low_water_mark()
     # final state identical
     got = sorted((tuple(r) for r in table.read(spark).collect()), key=repr)
     want = sorted((tuple(r) for r in ref.read(spark).collect()), key=repr)
@@ -263,8 +263,8 @@ def test_manifest_json_stays_bounded_over_many_commits(tmp_path):
     ]
     # flat, not linear in epoch count (allow slack for integer widths)
     assert max(sizes) < 1.2 * min(sizes)
-    assert all(table.epoch_applied(e) for e in range(300))
-    assert table.partition_offsets() == {"0": 2990}
+    assert all(table.snapshot().epoch_applied(e) for e in range(300))
+    assert table.snapshot().partition_offsets() == {"0": 2990}
 
 
 def test_dlq_manifest_stays_bounded_with_prefixed_epochs(tmp_path):
@@ -301,10 +301,10 @@ def test_dlq_manifest_stays_bounded_with_prefixed_epochs(tmp_path):
     assert len(snap.applied) <= 33
     wms = snap.raw.get("applied_watermarks", {})
     assert set(wms) == set(namespaces)
-    assert all(table.epoch_applied(e) for e in committed)
+    assert all(table.snapshot().epoch_applied(e) for e in committed)
     # an UNSEEN suffix above every namespace max must not claim applied
-    assert not table.epoch_applied("f9999")
-    assert not table.epoch_applied("other:5")
+    assert not table.snapshot().epoch_applied("f9999")
+    assert not table.snapshot().epoch_applied("other:5")
     # the fold empties the applied map each time it tips past the
     # limit, so sizes OSCILLATE within a cycle — bounded means the
     # cycle maximum stops growing, not that any two snapshots match
@@ -315,7 +315,7 @@ def test_dlq_manifest_stays_bounded_with_prefixed_epochs(tmp_path):
     late = max(_size(v) for v in range(230, 300))
     assert late < 1.3 * early
     # lineage folded from the prefixed entries too
-    assert table.partition_offsets()["0"] >= 2500
+    assert table.snapshot().partition_offsets()["0"] >= 2500
 
 
 def test_watermark_fold_gap_never_claims_bootstrap_epoch(tmp_path):
@@ -338,6 +338,6 @@ def test_watermark_fold_gap_never_claims_bootstrap_epoch(tmp_path):
             applied_update={str(e): {"partitions": {}, "events": 0}},
             summary={"operation": "merge-empty", "epoch": e},
         )
-    assert not table.epoch_applied(-1)  # bootstrap must still run
-    assert not table.epoch_applied(0)
-    assert all(table.epoch_applied(e) for e in range(10, 21))
+    assert not table.snapshot().epoch_applied(-1)  # bootstrap must still run
+    assert not table.snapshot().epoch_applied(0)
+    assert all(table.snapshot().epoch_applied(e) for e in range(10, 21))

@@ -45,7 +45,7 @@ def test_rescale_preserves_rows_and_relayouts(spark, tmp_path, mode):
     before = sorted(tuple(r) for r in table.read(spark).collect())
     out = rescale(spark, table, 16)
     assert out["rescaled"] and out["from_n_buckets"] == 4
-    assert table.n_buckets == 16
+    assert table.snapshot().n_buckets == 16
     after = sorted(tuple(r) for r in table.read(spark).collect())
     assert before == after and before
 
@@ -102,7 +102,7 @@ def test_replay_across_midstream_rescale_matches_oracle(spark, tmp_path):
     assert_equivalent(table.read(spark), replay_final_state(path + "/*.parquet"))
     # idempotence carried across the rescale: both epochs survive in the
     # manifest, a redelivered epoch skips
-    assert {"0", "1"} <= table.applied_epochs()
+    assert {"0", "1"} <= set(table.snapshot().applied)
     res = merge_into(spark, table, df.filter(F.col("op_sequence") < 4000), epoch=0)
     assert res.skipped
 
@@ -112,7 +112,7 @@ def test_merge_after_rescale_conflicts_cleanly(spark, tmp_path):
     rescale must get ConcurrentBucketConflict, not silently write files
     with meaningless bucket ids."""
     table = _mk(spark, tmp_path)
-    old_nb = table.n_buckets
+    old_nb = table.snapshot().n_buckets
     rescale(spark, table, 8)
     with pytest.raises(ConcurrentBucketConflict, match="rescaled"):
         table.commit(
@@ -150,11 +150,11 @@ def test_rescale_loses_race_to_concurrent_merge(spark, tmp_path, monkeypatch):
         rescale(spark, table, 8)
     monkeypatch.undo()
     # nothing was lost: the competing merge's epoch and rows are intact
-    assert "9" in table.applied_epochs()
-    assert table.n_buckets == 4
+    assert "9" in table.snapshot().applied
+    assert table.snapshot().n_buckets == 4
     # and the retry (against the new snapshot) succeeds
     out = rescale(spark, table, 8)
-    assert out["rescaled"] and table.n_buckets == 8
+    assert out["rescaled"] and table.snapshot().n_buckets == 8
 
 
 def test_incremental_diff_across_rescale_falls_back(spark, tmp_path):
@@ -201,7 +201,7 @@ def test_stream_rescale_resume_roundtrip(spark, tmp_path):
     run_stream(spark, table, staged, checkpoint_dir=ckpt, max_files_per_trigger=1)
 
     out = rescale(spark, table, 16)
-    assert out["rescaled"] and table.n_buckets == 16
+    assert out["rescaled"] and table.snapshot().n_buckets == 16
 
     for c in chunks[3:]:
         os.symlink(c, os.path.join(staged, os.path.basename(c)))

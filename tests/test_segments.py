@@ -223,8 +223,7 @@ def test_narrow_commit_never_full_loads_segments(spark, tmp_path, monkeypatch):
     assert got == oracle
 
 
-def test_wide_tables_segment_by_default(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("NEBULA_SEGMENT_BUCKETS", raising=False)
+def test_wide_tables_segment_by_default(spark, tmp_path):
     wide = LakeTable.create(str(tmp_path / "w"), _SCHEMA, "k", n_buckets=256)
     assert wide.snapshot().raw["files_segmented"]["width"] == 64
     narrow = LakeTable.create(str(tmp_path / "n"), _SCHEMA, "k", n_buckets=64)
@@ -242,11 +241,10 @@ def test_wide_tables_segment_by_default(spark, tmp_path, monkeypatch):
     assert wide.read(spark).count() == 50
 
 
-def test_rescale_past_threshold_adopts_segmented(spark, tmp_path, monkeypatch):
+def test_rescale_past_threshold_adopts_segmented(spark, tmp_path):
     """Growing a narrow inline table past 256 buckets switches it to
     segmented manifests in the same (full-rewrite) rescale commit;
     state is untouched and later narrow commits reuse segments."""
-    monkeypatch.delenv("NEBULA_SEGMENT_BUCKETS", raising=False)
     table = LakeTable.create(str(tmp_path / "t"), _SCHEMA, "k", n_buckets=8)
     keys = [f"k{i:05d}" for i in range(300)]
     merge_into(spark, table, _batch(spark, keys, 0), epoch=0)

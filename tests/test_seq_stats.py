@@ -72,7 +72,7 @@ def test_incremental_diff_prunes_and_matches(spark, tmp_path):
         epoch=1,
     )
     v0 = table.snapshot().version
-    lw = table.low_water_mark(v0)
+    lw = table.snapshot(v0).low_water_mark()
     # lw sits inside epoch 1's range: epoch-0 files are wholly below it
     assert lw is not None and 10_000 < lw < 10_500
     v0_files = {e["path"] for es in table.snapshot().files.values() for e in es}

@@ -49,14 +49,14 @@ def test_stream_resume_is_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     m1 = run_stream(spark, table, staged, checkpoint_dir=ckpt, max_files_per_trigger=1)
     assert m1["batches"] == 3
-    epochs_after_1 = set(table.applied_epochs())
+    epochs_after_1 = set(table.snapshot().applied)
 
     # stage 2: the rest arrives; same checkpoint => resume, no re-apply
     for c in chunks[3:]:
         os.symlink(c, os.path.join(staged, os.path.basename(c)))
     m2 = run_stream(spark, table, staged, checkpoint_dir=ckpt, max_files_per_trigger=1)
     assert m2["skipped"] == 0
-    assert epochs_after_1 < set(table.applied_epochs())
+    assert epochs_after_1 < set(table.snapshot().applied)
 
     oracle = replay_final_state(os.path.join(binlog_dir, "*", "*.parquet"))
     assert_equivalent(table.read(spark), oracle)
@@ -79,7 +79,7 @@ def test_stream_with_ddl_evolution(spark, tmp_path):
         schema=log.schema,
     )
     assert m["batches"] == 3
-    cols = {f.name: f.dataType.simpleString() for f in table.user_schema.fields}
+    cols = {f.name: f.dataType.simpleString() for f in table.snapshot().user_schema.fields}
     assert cols.get("lang") == "string" and cols.get("n_tok") == "bigint"
 
     import duckdb
@@ -509,12 +509,12 @@ def test_continuous_stream_processing_time_trigger(spark, tmp_path):
     def wait_lwm(at_least, deadline_s=120):
         t0 = time.time()
         while time.time() - t0 < deadline_s:
-            lwm = table.low_water_mark()
+            lwm = table.snapshot().low_water_mark()
             if lwm is not None and lwm >= at_least:
                 return lwm
             time.sleep(0.5)
         raise AssertionError(
-            f"low_water_mark never reached {at_least}: {table.low_water_mark()}"
+            f"low_water_mark never reached {at_least}: {table.snapshot().low_water_mark()}"
         )
 
     def stop(query_id):
