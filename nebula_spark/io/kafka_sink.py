@@ -12,7 +12,7 @@ provided over a directory-backed topic with Kafka's storage shape:
   partitioner);
 - a **transaction** stages its message files in an invisible
   ``_txn-<uuid>`` directory; ``commit()`` publishes it with a single
-  O_EXCL marker under ``_commits/`` — consumers only read published
+  link-published marker under ``_commits/`` — consumers only read published
   transactions, so a crash mid-send leaves nothing visible (Kafka's
   read-committed isolation);
 - **exactly-once** rides the epoch: a transaction opened for an
@@ -35,6 +35,8 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from nebula_spark.lake.table import publish_json
 
 _COMMITS = "_commits"
 # no leading underscore: Spark's file index treats _-prefixed paths as
@@ -143,11 +145,10 @@ class TopicTxn:
         atomically; a second committer of the same epoch fails cleanly
         (``FileExistsError``).
 
-        The record is fully written + fsync'd to a hidden temp file and
-        *published* via ``os.link`` to the marker name — link keeps
-        O_EXCL's exactly-one-winner semantics while guaranteeing a
-        concurrent consumer never observes a half-written marker (the
-        read-committed contract)."""
+        The record is *published* with ``publish_json`` (the same
+        temp-file + ``os.link`` publish as a table snapshot): exactly one
+        winner, and a concurrent consumer never observes a half-written
+        marker (the read-committed contract)."""
         if self._aborted:
             raise RuntimeError("transaction aborted")
         if self.epoch is not None:
@@ -162,17 +163,9 @@ class TopicTxn:
             "sends": self._sends,
             "committed_at": time.time(),
         }
-        # '.tmp-' prefix + no '.json' suffix: invisible to the consumer
+        # the temp name has no '.json' suffix: invisible to the consumer
         # listings even if a crash strands it
-        tmp = marker + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, marker)  # atomic publish; FileExistsError on race
-        finally:
-            os.unlink(tmp)
+        publish_json(marker, rec)  # FileExistsError on race
         self._committed = True
 
     def abort(self) -> None:

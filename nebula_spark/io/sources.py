@@ -178,8 +178,8 @@ def incremental_diff(
     Scan shape: the table is copy-on-write at bucket granularity, so a
     row can only have changed if its bucket's FILE LIST differs between
     the two snapshots. The changed-bucket set comes from the snapshot
-    metadata alone (a per-version manifest diff — no data read), and
-    both sides of the _seq comparison scan ONLY those buckets. A CDC
+    metadata alone (each version's ``changed_buckets`` — no data read),
+    and both sides of the _seq comparison scan ONLY those buckets. A CDC
     "what changed since v" over a 100 TB table therefore reads the
     touched fraction twice, not the whole table twice.
 
@@ -209,7 +209,7 @@ def incremental_diff(
         try:
             changed: set[int] = set()
             for v in range(from_version + 1, new_snap.version + 1):
-                changed |= t._buckets_changed_by(v)
+                changed |= t.snapshot(v).changed_buckets
             buckets = sorted(changed)
         except FileNotFoundError:
             pass

@@ -20,7 +20,7 @@ import time
 
 from pyspark.sql import SparkSession, functions as F
 
-from nebula_spark.lake.table import DELETED_COL, SEQ_COL, LakeTable
+from nebula_spark.lake.table import DELETED_COL, SEQ_COL, TMP_MARK, LakeTable
 
 
 def compact(
@@ -33,9 +33,10 @@ def compact(
     max_file_rows: int | None = None,
 ) -> dict:
     """Rewrite buckets into one file each; optionally purge tombstones.
-    Returns a summary dict. Atomic (one snapshot commit); the read,
-    the layout and the commit's expected bucket count all come from one
-    snapshot read.
+    Returns a summary dict. Atomic (one snapshot commit); the read, the
+    layout and the commit's base all come from one snapshot read, so a
+    commit touching the chosen buckets in between raises
+    ConcurrentBucketConflict instead of being compacted away.
 
     ``cluster_by_key`` + ``max_file_rows``: key-CLUSTERED compaction —
     Iceberg's sort-ordered RewriteDataFiles instead of its bin-pack.
@@ -102,10 +103,10 @@ def compact(
     writer.parquet(commit_dir)
     new_files = LakeTable.list_written_files(commit_dir, key_col=snap.key_col)
     new_snap = table.commit(
+        snap,
         new_files_by_bucket=new_files,
         replaced_buckets=chosen,
         summary={"operation": "compact", "buckets": len(chosen)},
-        expect_n_buckets=snap.n_buckets,
     )
     return {
         "buckets": len(chosen),
@@ -130,12 +131,12 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
     under the new layout, written fresh, committed with
     ``new_n_buckets`` + every old bucket replaced. Readers on older
     snapshots keep the old layout (a snapshot pins its n_buckets);
-    readers of HEAD see the new one. Concurrency is strict: a rescale
-    never rebases (it is a full rewrite — whoever commits first wins,
-    ConcurrentBucketConflict tells the loser to recompute), and every
-    data writer passes expect_n_buckets so a merge computed under the
-    old layout that commits after the rescale conflicts cleanly instead
-    of writing files with meaningless bucket ids."""
+    readers of HEAD see the new one. Concurrency is strict: the commit
+    is a full rewrite, so any commit landing after the plan's read
+    raises ConcurrentBucketConflict (the rescale recomputes), and a
+    writer whose base predates the rescale conflicts the same way
+    instead of writing files with meaningless bucket ids (see
+    LakeTable.commit)."""
     from nebula_spark.lake.table import bucket_expr
 
     t0 = time.time()
@@ -163,15 +164,11 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
         # (same default/threshold as LakeTable.create)
         new_props = {"manifest_segment_buckets": 64}
     new_snap = table.commit(
+        snap,
         new_files_by_bucket=new_files,
         replaced_buckets=sorted(snap.files.keys()),
         new_n_buckets=int(new_n_buckets),
-        expect_n_buckets=old_nb,
         new_properties=new_props,
-        # the rewrite was computed from snap — ANY commit landing in
-        # between (even a pure append) would be silently erased by this
-        # full replace, so the commit is pinned to the planned version
-        base_version=snap.version,
         summary={
             "operation": "rescale",
             "from_n_buckets": old_nb,
@@ -196,9 +193,8 @@ def set_segmentation(table: LakeTable, width: int) -> dict:
     (or inlines them for width 0) exactly once. The escape hatch for a
     big table created inline before it grew: adopting segmented
     manifests costs one O(table) metadata write instead of a rescale's
-    O(table) data rewrite. Concurrency: plain optimistic commit — a
-    racing data commit wins or loses the O_EXCL race like any other;
-    no data is at stake either way."""
+    O(table) data rewrite. Concurrency: a metadata-only commit replaces
+    no bucket, so it rebases over any commit that keeps the layout."""
     snap = table.snapshot()
     cur = int(
         (snap.raw.get("properties") or {}).get("manifest_segment_buckets", 0)
@@ -207,6 +203,7 @@ def set_segmentation(table: LakeTable, width: int) -> dict:
     if cur == int(width):
         return {"changed": False, "width": cur, "version": snap.version}
     new_snap = table.commit(
+        snap,
         new_properties={"manifest_segment_buckets": int(width)},
         summary={"operation": "set-segmentation", "width": int(width)},
     )
@@ -239,8 +236,8 @@ def migrate_column(
     conversion that doesn't round-trip (long→int overflow wraps,
     double→int truncates — Spark's non-ANSI ``cast`` silently loses
     precision, so strictness needs an explicit check). Same atomicity
-    + concurrency posture as rescale: pinned base_version, full
-    replace, losers conflict cleanly."""
+    + concurrency posture as rescale: a full rewrite committed against
+    the snapshot it read, so any commit in between conflicts cleanly."""
     from pyspark.sql import functions as F, types as T
 
     if isinstance(new_type, str):
@@ -303,11 +300,9 @@ def migrate_column(
     ).parquet(commit_dir)
     new_files = LakeTable.list_written_files(commit_dir, key_col=key)
     new_snap = table.commit(
+        snap.evolve(T.StructType(list(new_user.fields) + INTERNAL_FIELDS)),
         new_files_by_bucket=new_files,
         replaced_buckets=sorted(snap.files.keys()),
-        new_schema=T.StructType(list(new_user.fields) + INTERNAL_FIELDS),
-        expect_n_buckets=nb,
-        base_version=snap.version,
         summary={
             "operation": "migrate-column",
             "column": column,
@@ -336,8 +331,7 @@ def expire_snapshots(table: LakeTable, keep_last: int = 10) -> int:
     deletion set is just the UNION of the expiring versions' removed
     lists. Only snapshots below the boundary are even opened; the
     retained ones (including HEAD's full file listing) are never
-    walked. Snapshots from before the ``removed`` field existed fall
-    back to the full walk."""
+    walked."""
     import os
 
     head = table.snapshot().version
@@ -352,55 +346,18 @@ def expire_snapshots(table: LakeTable, keep_last: int = 10) -> int:
     # union of removed-lists over versions <= boundary: a file removed
     # at v was referenced by snapshots [birth, v-1] only, all expired
     dead: set[str] = set()
-    legacy = False
     for v in sorted(v for v in all_versions if v <= boundary):
         raw = table.snapshot(v).raw
-        if v > 0 and "removed" not in raw:
-            legacy = True
-            break
         dead.update(raw.get("removed", []))
         # segmented manifests: replaced segment JSONs die with their
         # last referencing snapshot exactly like data files
         dead.update(raw.get("removed_segments", []))
-    if legacy:
-        return _expire_snapshots_full_walk(table, keep_last)
     removed = 0
     for p in sorted(dead):
         if os.path.exists(p):
             os.remove(p)
             removed += 1
     for v in expiring:
-        os.remove(os.path.join(meta, f"snap-{v:012d}.json"))
-    return removed
-
-
-def _expire_snapshots_full_walk(table: LakeTable, keep_last: int = 10) -> int:
-    """Legacy path for tables whose old snapshots predate the
-    ``removed`` commit field: liveness from walking every snapshot."""
-    import os
-
-    head = table.snapshot().version
-    keep_versions = set(range(max(0, head - keep_last + 1), head + 1))
-    meta = table._meta()
-    all_versions = {
-        int(f[5:17]) for f in os.listdir(meta) if f.startswith("snap-")
-    }
-    # files referenced by any retained snapshot stay
-    live: set[str] = set()
-    for v in keep_versions:
-        if v in all_versions:
-            for entries in table.snapshot(v).files.values():
-                live.update(e["path"] for e in entries)
-    removed = 0
-    for v in sorted(all_versions):
-        if v in keep_versions:
-            continue
-        for entries in table.snapshot(v).files.values():
-            for e in entries:
-                p = e["path"]
-                if p not in live and os.path.exists(p):
-                    os.remove(p)
-                    removed += 1
         os.remove(os.path.join(meta, f"snap-{v:012d}.json"))
     return removed
 
@@ -418,8 +375,8 @@ def vacuum_orphans(table: LakeTable, grace_s: float = 86400.0) -> int:
     expire_snapshots O(changed). On a segmented table only HEAD's
     manifest segments are opened; the old implementation loaded every
     snapshot's full listing (every segment of every snapshot), which
-    is quadratic-ish on a long-unexpired table. Snapshots predating
-    the ``removed`` field fall back to the full walk.
+    is quadratic-ish on a long-unexpired table. Temp files a crash
+    stranded in the metadata dir before their publish are swept too.
 
     ``grace_s``: only files older than this are touched — an IN-FLIGHT
     commit has already written its files but not yet published its
@@ -435,28 +392,13 @@ def vacuum_orphans(table: LakeTable, grace_s: float = 86400.0) -> int:
     versions = sorted(
         int(f[5:17]) for f in os.listdir(meta) if f.startswith("snap-")
     )
-    legacy = False
     for v in versions:
         raw = table.snapshot(v).raw
-        if v > 0 and "removed" not in raw:
-            legacy = True
-            break
         live.update(os.path.abspath(p) for p in raw.get("removed", ()))
         live_segs.update(
             os.path.abspath(p) for p in raw.get("removed_segments", ())
         )
-    if legacy:
-        live, live_segs = set(), set()
-        for v in versions:
-            snap = table.snapshot(v)
-            for entries in snap.files.values():
-                live.update(os.path.abspath(e["path"]) for e in entries)
-            seg = snap.raw.get("files_segmented")
-            if seg:
-                live_segs.update(
-                    os.path.abspath(p) for p in seg["segments"].values()
-                )
-    elif versions:
+    if versions:
         head_snap = table.snapshot(versions[-1])
         for entries in head_snap.files.values():
             live.update(os.path.abspath(e["path"]) for e in entries)
@@ -487,18 +429,20 @@ def vacuum_orphans(table: LakeTable, grace_s: float = 86400.0) -> int:
                 os.rmdir(dirpath)  # only succeeds when fully emptied
             except OSError:
                 pass
-    # manifest segments: sweep JSONs referenced by no snapshot (the
-    # leftovers of commit attempts that lost their O_EXCL race) —
-    # live_segs was computed above (HEAD's map + removed_segments, or
-    # the legacy full walk)
+    # manifest segments referenced by no snapshot (the leftovers of
+    # commit attempts that lost their publish race; live_segs is HEAD's
+    # map + removed_segments), and stranded temp files
     seg_dir = os.path.join(meta, "segments")
-    if os.path.isdir(seg_dir):
-        for fn in os.listdir(seg_dir):
-            p = os.path.abspath(os.path.join(seg_dir, fn))
-            try:
-                if p not in live_segs and os.path.getmtime(p) <= cutoff:
-                    os.remove(p)
-                    removed += 1
-            except FileNotFoundError:
-                pass
+    stray = [
+        os.path.abspath(os.path.join(seg_dir, fn))
+        for fn in (os.listdir(seg_dir) if os.path.isdir(seg_dir) else ())
+    ]
+    stray += [os.path.join(meta, fn) for fn in os.listdir(meta) if TMP_MARK in fn]
+    for p in stray:
+        try:
+            if p not in live_segs and os.path.getmtime(p) <= cutoff:
+                os.remove(p)
+                removed += 1
+        except FileNotFoundError:
+            pass
     return removed

@@ -393,10 +393,15 @@ class MergeResult:
     rows_rejected: int = 0
     seconds: float = 0.0
     partitions: dict = field(default_factory=dict)
-    version: int | None = None
+    # the merge's commit: the table's next read needs no HEAD re-read
+    snapshot: Snapshot | None = None
     # conflict='reject': the surfaced conflicting events, persisted —
     # the caller routes them (DLQ) and unpersists
     rejected: DataFrame | None = None
+
+    @property
+    def version(self) -> int | None:
+        return None if self.snapshot is None else self.snapshot.version
 
 
 def append_into(
@@ -436,10 +441,10 @@ def append_into(
     if not new_files and applied is None:
         return -1
     return table.commit(
+        snap,
         new_files_by_bucket=new_files,
         applied_update=applied,
         summary={"operation": summary_op, "epoch": epoch},
-        expect_n_buckets=nb,
     ).version
 
 
@@ -472,7 +477,10 @@ def merge_into(
 
     ``version``: the snapshot the caller already read and checked the
     epoch against (``apply_changes`` passes its own); None reads HEAD
-    and checks the epoch here. A pin from :meth:`Snapshot.evolve` is
+    and checks the epoch here. The one commit is made against this
+    snapshot (:meth:`LakeTable.commit`), so a commit that landed since it
+    was read is either rebased over or raised as a
+    ``ConcurrentBucketConflict``. A pin from :meth:`Snapshot.evolve` is
     read and written through with its next schema, and the one commit
     carries that schema and its renames together with the files and
     the epoch; a plain pin never rewrites the schema.
@@ -510,8 +518,8 @@ def merge_into(
     t0 = time.time()
     res = MergeResult(epoch=epoch)
     # the one snapshot: every choice below (key, layout, mode, fold,
-    # schema, lineage) describes this version, and the commit re-checks
-    # its bucket count so a concurrent rescale conflicts
+    # schema, lineage) describes this version, and the commit is made
+    # against it
     snap = version
     if snap is None:
         snap = table.snapshot()
@@ -609,9 +617,8 @@ def merge_into(
     summary["epoch"] = epoch
     if res.buckets_touched:
         summary.update(keys=res.keys_touched, buckets=res.buckets_touched)
-    new_schema = renames = None
     if snap.evolution is not None:
-        new_schema, renames, summary["changes"] = snap.evolution
+        summary["changes"] = snap.evolution[2]
 
     # --- commit
     applied_update = None
@@ -619,16 +626,13 @@ def merge_into(
         applied_update = {
             str(epoch): {"partitions": res.partitions, "events": res.events_in}
         }
-    new_snap = table.commit(
+    res.snapshot = table.commit(
+        snap,
         new_files_by_bucket=new_files,
         applied_update=applied_update,
         summary=summary,
-        expect_n_buckets=nb,
-        new_schema=new_schema,
-        renames=renames,
         **replace,
     )
-    res.version = new_snap.version
     res.seconds = time.time() - t0
     return res
 
@@ -741,15 +745,13 @@ def _rewrite_buckets(
     batch never touches old id ranges; uniform random keys prune nothing
     and fall back to the full-bucket rewrite.
 
-    The whole resolve/prune/replace cycle is pinned to ONE snapshot
-    version, ``pin`` (the merge's one read): pruning decisions, the target scans, and the commit's
-    kept-file list must all describe the same file set, and with
-    FILE-level replace a concurrent rewrite (e.g. an external
-    compaction) landing between plan and commit is NOT
-    content-preserving the way a bucket-level replace is — the merge
-    output lacks the pruned files' rows, so silently replacing the
-    compacted file would lose them. base_version makes that window a
-    clean ConcurrentBucketConflict instead."""
+    The whole resolve/prune/replace cycle is pinned to ONE snapshot,
+    ``pin`` (the merge's one read): pruning decisions, the target scans
+    and the commit's kept-file list all describe the same file set. The
+    commit is made against ``pin``, so any commit that touched these
+    buckets since (e.g. an external compaction, whose rewritten file the
+    pruned rows now live in) raises ConcurrentBucketConflict instead of
+    being silently replaced."""
     key = pin.key_col
     pruned = table.prunable_files(affected, key_bounds, version=pin)
     if conflict == "reject":
@@ -813,9 +815,8 @@ def _rewrite_buckets(
     replace: dict = {"replaced_buckets": affected}
     if pruned:
         # file-level replace: rewrite exactly the scanned files of the
-        # PINNED snapshot, keep the key-disjoint ones; the commit's
-        # base_version guard turns any intervening commit into a clean
-        # conflict (see the pin note above)
+        # PINNED snapshot, keep the key-disjoint ones (see the pin note
+        # above)
         pin_files = pin.files_for(affected)  # O(touched segments)
         replace = {
             "replaced_files": {
@@ -826,7 +827,6 @@ def _rewrite_buckets(
                 ]
                 for b in affected
             },
-            "base_version": pin.version,
         }
     new_files = LakeTable.list_written_files(commit_dir, key_col=key)
     return new_files, replace, sum(len(v) for v in pruned.values())

@@ -8,10 +8,13 @@ anyway (its ``Upsert`` returns "not implemented",
 This layer supplies exactly the subset the CDC engine needs —
 Iceberg-shaped, Spark-first:
 
-- **Snapshots**: every commit writes an immutable JSON snapshot listing
-  the live data files per key-bucket; ``HEAD`` flips atomically via
-  ``os.rename``. Readers always see a consistent version; time travel =
-  read an older snapshot.
+- **Snapshots**: every commit publishes an immutable JSON snapshot
+  listing the live data files per key-bucket, linked into place under
+  its version's name (:func:`publish_json`), so a snapshot is never
+  seen half-written and each version has exactly one winner. ``HEAD``
+  is a hint, rolled forward over newer snapshots a crash left ahead of
+  it. Readers always see a consistent version; time travel = read an
+  older snapshot.
 - **Bucket layout**: data files are hash-bucketed on the merge key
   (``pmod(xxhash64(key), n_buckets)`` — the same idea as Iceberg's
   ``bucket(N, key)`` partition transform). A change batch touching K
@@ -32,9 +35,10 @@ Iceberg-shaped, Spark-first:
   cast). Mirrors the reference's schema registry + evolution
   (/root/reference/pkg/schema/evolution.go) on Spark StructTypes.
 
-Concurrency: single-writer per table (the reference serializes sink
-commits the same way); the O_EXCL snapshot create turns a racing second
-writer into a clean failure instead of corruption.
+Concurrency: optimistic. A writer commits against the snapshot it read
+(:meth:`LakeTable.commit`); a commit that finds the table moved on
+rebases when the intervening commits cannot have changed its input, and
+raises ``ConcurrentBucketConflict`` otherwise.
 """
 
 from __future__ import annotations
@@ -42,7 +46,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import tempfile
 import time
 import uuid
 from dataclasses import dataclass
@@ -55,6 +58,42 @@ from nebula_spark.functions.dedupe import _q
 META_DIR = "_nl"
 HEAD_FILE = "HEAD"
 SNAP_FMT = "snap-%012d.json"
+# stranded temp files (a crash between write and publish) carry this in
+# their name, never a ``snap-`` prefix; vacuum_orphans sweeps them
+TMP_MARK = ".tmp-"
+
+
+def _tmp_path(path: str) -> str:
+    """A unique sibling temp name for ``path``: hidden, and not ending in
+    ``path``'s suffix, so no directory listing mistakes it for the real
+    file."""
+    d, name = os.path.split(path)
+    return os.path.join(d, f".{name}{TMP_MARK}{uuid.uuid4().hex[:12]}")
+
+
+def publish_json(path: str, obj) -> None:
+    """Publish ``obj`` as JSON at ``path``, atomically and once: written
+    and fsync'd under a temp name, ``os.link``ed to ``path`` (which
+    raises ``FileExistsError`` when ``path`` exists: exactly one racer
+    wins, and no reader ever sees a half-written file), then the
+    directory fsync'd so the new name survives a crash."""
+    tmp = _tmp_path(path)
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.link(tmp, path)
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
+    fd = os.open(os.path.dirname(path), os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def type_from_ddl(ddl: str) -> T.DataType:
@@ -193,8 +232,9 @@ class Snapshot:
 
     version: int
     raw: dict
-    # set by ``evolve``: the (storage schema, renames) its commit must
-    # carry, and the schema changes for the commit summary
+    # set by ``evolve``: (storage schema, renames, schema changes for
+    # the commit summary, schema_version evolved from) — what a commit
+    # against this snapshot re-applies when it rebases
     evolution: tuple | None = None
 
     @property
@@ -279,6 +319,13 @@ class Snapshot:
                 for b, fs in json.load(f)["files"].items():
                     out[int(b)] = fs
         return out
+
+    @property
+    def changed_buckets(self) -> set[int]:
+        """Buckets this version's commit touched (its conflict footprint;
+        may over-approximate with touched-but-identical buckets, which
+        only costs a redundant re-check or re-scan). Empty at v0."""
+        return {int(b) for b in self.raw.get("changed_buckets", ())}
 
     @property
     def applied(self) -> dict:
@@ -428,8 +475,8 @@ class Snapshot:
         (a->b recorded, now b->c => a->c, b->c) so old files map
         straight to the current name. Nothing is written: a writer reads
         and writes through the result, and its one commit carries the
-        schema with its data (``commit`` evolves HEAD the same way).
-        ``changes`` only annotates that commit's summary."""
+        schema with its data (a rebasing ``commit`` evolves HEAD the same
+        way). ``changes`` only annotates that commit's summary."""
         raw = dict(self.raw)
         if new_schema is not None and new_schema.jsonValue() != self.schema.jsonValue():
             raw["schema_version"] = self.schema_version + 1
@@ -446,7 +493,10 @@ class Snapshot:
                         hist[o] = new
                 hist[old] = new
             raw["renames"] = hist
-        return Snapshot(self.version, raw, (new_schema, renames, changes or []))
+        return Snapshot(
+            self.version, raw,
+            (new_schema, renames, changes or [], self.schema_version),
+        )
 
 
 class ConcurrentBucketConflict(RuntimeError):
@@ -465,8 +515,15 @@ class LakeTable:
         return os.path.join(self.root, META_DIR, *parts)
 
     def _head_version(self) -> int:
+        """The newest published version. ``HEAD`` is a hint written after
+        each publish; a crash between the two (or a slower committer's
+        late HEAD write) leaves newer snapshots ahead of it, which this
+        rolls forward over."""
         with open(self._meta(HEAD_FILE)) as f:
-            return int(f.read().strip())
+            v = int(f.read().strip())
+        while os.path.exists(self._meta(SNAP_FMT % (v + 1))):
+            v += 1
+        return v
 
     def snapshot(self, version: int | None = None) -> Snapshot:
         v = self._head_version() if version is None else version
@@ -534,22 +591,15 @@ class LakeTable:
         return os.path.exists(os.path.join(root, META_DIR, HEAD_FILE))
 
     def _write_snapshot(self, version: int, snap: dict) -> None:
-        path = self._meta(SNAP_FMT % version)
-        # O_EXCL: a concurrent committer of the same version fails loudly
-        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
-        with os.fdopen(fd, "w") as f:
-            json.dump(snap, f)
+        """Publish snapshot ``version`` (``FileExistsError`` when another
+        committer has it), then point the HEAD hint at it."""
+        publish_json(self._meta(SNAP_FMT % version), snap)
+        tmp = _tmp_path(self._meta(HEAD_FILE))
+        with open(tmp, "w") as f:
+            f.write(str(version))
             f.flush()
             os.fsync(f.fileno())
-        # atomic HEAD flip
-        tmp = tempfile.NamedTemporaryFile(
-            "w", dir=self._meta(), prefix=".head-", delete=False
-        )
-        tmp.write(str(version))
-        tmp.flush()
-        os.fsync(tmp.fileno())
-        tmp.close()
-        os.rename(tmp.name, self._meta(HEAD_FILE))
+        os.replace(tmp, self._meta(HEAD_FILE))
 
     def _store_files(
         self,
@@ -572,7 +622,7 @@ class LakeTable:
         (:meth:`Snapshot.files_for`) drop lookup metadata I/O the same
         way. Segment files are uuid-named so two writers racing to the
         same version can never clobber each other's referenced
-        segments (the O_EXCL snapshot write decides the winner; the
+        segments (the snapshot publish decides the winner; the
         loser's segments become harmless orphans that
         ``vacuum_orphans`` sweeps). Replaced segment paths are
         recorded in ``removed_segments`` exactly like data files in
@@ -634,130 +684,70 @@ class LakeTable:
         raw["files_segmented"] = {"width": width, "segments": new_map}
         raw["removed_segments"] = sorted(removed_segs + pre_removed)
 
-    def _buckets_changed_by(self, version: "int | Snapshot") -> set[int]:
-        """Buckets whose file list differs between snapshot ``version``
-        and its parent — the conflict footprint of that commit.
-
-        Snapshots record their own ``changed_buckets`` at commit time
-        (one JSON field; may over-approximate with touched-but-
-        identical buckets, which only costs a redundant re-check) —
-        the manifest-diff walk below remains as the fallback for
-        snapshots written before the field existed."""
-        snap = self._pinned(version)
-        recorded = snap.raw.get("changed_buckets")
-        if recorded is not None:
-            return {int(b) for b in recorded}
-        parent_v = snap.raw.get("parent")
-        parent = None if parent_v is None else self.snapshot(parent_v)
-        a = snap.raw.get("files_segmented")
-        pb = None if parent is None else parent.raw.get("files_segmented")
-        if a and pb and int(a["width"]) == int(pb["width"]):
-            # segmented fast path: only segments whose PATH differs can
-            # hold changed buckets — O(changed segments) I/O, which is
-            # what keeps rebase conflict checks cheap on wide tables
-            changed: set[int] = set()
-            for s in set(a["segments"]) | set(pb["segments"]):
-                pa, pp = a["segments"].get(s), pb["segments"].get(s)
-                if pa == pp:
-                    continue
-                if pa:
-                    with open(pa) as f:
-                        ca = json.load(f)["files"]
-                else:
-                    ca = {}
-                if pp:
-                    with open(pp) as f:
-                        cp = json.load(f)["files"]
-                else:
-                    cp = {}
-                for k in set(ca) | set(cp):
-                    if ca.get(k) != cp.get(k):
-                        changed.add(int(k))
-            return changed
-        parent_files = {} if parent is None else parent.files
-        changed = set()
-        for b in set(snap.files) | set(parent_files):
-            if snap.files.get(b) != parent_files.get(b):
-                changed.add(int(b))
-        return changed
-
     def commit(
         self,
+        base: Snapshot,
         *,
         new_files_by_bucket: dict[int, list[str]] | None = None,
         replaced_buckets: Iterable[int] = (),
         replaced_files: dict[int, Iterable[str]] | None = None,
-        new_schema: T.StructType | None = None,
-        renames: dict[str, str] | None = None,
         applied_update: dict | None = None,
         summary: dict | None = None,
         new_n_buckets: int | None = None,
-        expect_n_buckets: int | None = None,
-        base_version: int | None = None,
         new_properties: dict | None = None,
-        _retries: int = 3,
     ) -> Snapshot:
-        """Produce snapshot v+1: keep files of untouched buckets, swap in
-        new files for ``replaced_buckets``, optionally evolve the schema
-        (``new_schema``/``renames``, see :meth:`Snapshot.evolve`), and
-        merge ``applied_update`` into the commit manifest. Atomic.
+        """Publish the next version on top of ``base``, the snapshot this
+        commit's data was computed from: keep files of untouched buckets,
+        swap in new files for ``replaced_buckets``, and merge
+        ``applied_update`` into the commit manifest. A ``base`` from
+        :meth:`Snapshot.evolve` commits its next schema and renames with
+        the data. Atomic.
 
         ``replaced_files``: FILE-level replace — {bucket: [paths]} of
         individual live files this commit rewrote; other files in those
         buckets survive untouched. This is what lets a key-bounds-pruned
         merge keep the bucket's disjoint files out of the rewrite
-        entirely. Conflict granularity stays at the bucket level (a
-        concurrent commit touching the same bucket conflicts).
-
-        Optimistic concurrency: if another writer created the same
-        snapshot version (O_EXCL failure), re-read HEAD and rebase the
-        commit — the Iceberg CommitFailedException-retry pattern. The
-        rebase is only legal when the intervening commits touched a
-        DISJOINT set of buckets (this writer resolved its batch against
-        stale bucket contents otherwise); an overlap raises
-        ``ConcurrentBucketConflict`` instead of silently dropping the
-        other writer's files.
-
-        ``expect_n_buckets``: the bucket count this commit's files were
-        laid out under. If the table's CURRENT n_buckets differs (a
-        concurrent rescale landed first), the commit's bucket ids are
-        meaningless under the new layout — raise ConcurrentBucketConflict
-        so the writer recomputes against the new snapshot. Every data
-        writer (merge/append/compact) passes this.
+        entirely.
 
         ``new_n_buckets``: switch the table to a new bucket layout —
-        partition-spec evolution. Such a commit must replace EVERY
-        existing bucket (it is a full rewrite) and never rebases: any
-        concurrent commit wins the race and the rescale recomputes.
+        partition-spec evolution. Such a commit must replace every
+        bucket of ``base`` (it is a full rewrite).
 
-        ``base_version``: the snapshot version this commit's data was
-        COMPUTED from. The O_EXCL write only catches two writers that
-        read the same HEAD; a competing commit that fully lands between
-        this writer's plan-read and its commit() call would otherwise be
-        silently overwritten by a full-rewrite commit. With
-        base_version set, any intervening commit triggers the same
-        legality check as the O_EXCL rebase (and a full rewrite always
-        conflicts). rescale passes this; incremental merges rely on the
-        single-writer contract + O_EXCL instead."""
-        cur = self.snapshot()
-        if (
-            expect_n_buckets is not None
-            and cur.raw["n_buckets"] != expect_n_buckets
-        ):
-            raise ConcurrentBucketConflict(
-                f"table was rescaled to n_buckets={cur.raw['n_buckets']} "
-                f"while this commit was computed for {expect_n_buckets}; "
-                "re-run against the new snapshot"
+        Optimistic concurrency, one rule. While HEAD is still ``base``
+        the commit publishes ``base.version + 1``, having read only the
+        HEAD integer. Otherwise (HEAD had advanced, or another committer
+        published that version first) every version after ``base`` is
+        checked, and the commit raises ``ConcurrentBucketConflict`` when
+        one of them
+
+        - changed ``n_buckets``: this commit's bucket ids mean nothing;
+        - landed under a full rewrite (``new_n_buckets``, or every bucket
+          of ``base`` replaced), which would erase it;
+        - touched a bucket this commit replaces (whole or by file): the
+          replacement was resolved against stale contents;
+        - changed the schema while this commit evolves it;
+        - has been expired, so it cannot be checked.
+
+        In every other case the commit rebases onto HEAD, re-applying
+        ``base``'s evolution: appends commute with any commit that keeps
+        the layout."""
+        whole = {int(b) for b in replaced_buckets}
+        if new_n_buckets is not None:
+            missing = set(base.files) - whole
+            if missing:
+                raise ValueError(
+                    f"a rescale commit must replace every bucket; missing "
+                    f"{sorted(missing)}"
+                )
+        replaced = whole | {int(b) for b in (replaced_files or {})}
+        cur = base
+        head = self._head_version()
+        if head != base.version:
+            full = new_n_buckets is not None or (
+                base.has_files and set(base.files) <= whole
             )
-        if base_version is not None and cur.version != base_version:
-            raise ConcurrentBucketConflict(
-                f"snapshot advanced from {base_version} to {cur.version} "
-                "since this commit was planned; re-run against the new "
-                "snapshot"
-            )
-        evolving = new_schema is not None or bool(renames)
-        base = cur.evolve(new_schema, renames) if evolving else cur
-        raw = json.loads(json.dumps(base.raw))  # deep copy
+            cur = self._rebase(base, head, replaced, full)
+        raw = json.loads(json.dumps(cur.raw))  # deep copy
         version = cur.version + 1
         raw["version"] = version
         raw["parent"] = cur.version
@@ -768,19 +758,11 @@ class LakeTable:
             # rewrites every populated segment once
             raw.setdefault("properties", {}).update(new_properties)
         if new_n_buckets is not None:
-            missing = set(cur.files) - {int(b) for b in replaced_buckets}
-            if missing:
-                raise ValueError(
-                    f"a rescale commit must replace every bucket; missing "
-                    f"{sorted(missing)}"
-                )
             raw["n_buckets"] = int(new_n_buckets)
-        sv = raw["schema_version"]
-        changed_buckets = (
-            {int(b) for b in replaced_buckets}
-            | {int(b) for b in (replaced_files or {})}
-            | {int(b) for b in (new_files_by_bucket or {})}
-        )
+        # new files are recorded under the schema they were written with
+        # (base's, which a rebase over a schema change keeps)
+        sv = base.schema_version
+        changed_buckets = replaced | {int(b) for b in (new_files_by_bucket or {})}
         parent_seg = cur.raw.get("files_segmented")
         seg_width = int(
             (raw.get("properties") or {}).get("manifest_segment_buckets", 0)
@@ -810,8 +792,8 @@ class LakeTable:
         parent_entries = {
             b: list(files.get(b, ())) for b in changed_buckets
         }
-        for b in replaced_buckets:
-            files.pop(int(b), None)
+        for b in whole:
+            files.pop(b, None)
         for b, dead_paths in (replaced_files or {}).items():
             dead = set(dead_paths)
             if int(b) in files:
@@ -860,9 +842,7 @@ class LakeTable:
         # expire_snapshots delete history in O(changed) instead of
         # re-walking every snapshot's full file listing
         gone: list[str] = []
-        for b in {int(x) for x in replaced_buckets} | {
-            int(x) for x in (replaced_files or {})
-        }:
+        for b in replaced:
             still = {e["path"] for e in files.get(int(b), [])}
             gone.extend(
                 e["path"]
@@ -870,14 +850,12 @@ class LakeTable:
                 if e["path"] not in still
             )
         raw["removed"] = sorted(gone)
-        # persist this commit's touched-bucket set: _buckets_changed_by
-        # (rebase conflict checks, incremental_diff catch-up) then reads
-        # ONE field per version instead of diffing manifest segments —
-        # a consumer syncing across a 10^4-commit window used to pay a
-        # segment-file open per changed segment per version before the
-        # first scan task. Touched ⊇ differs-from-parent, and both
-        # consumers are sound under supersets (a false-positive bucket
-        # is re-checked/re-scanned, never skipped).
+        # persist this commit's touched-bucket set: rebase conflict
+        # checks and incremental_diff catch-up read ONE field per
+        # version (Snapshot.changed_buckets) instead of diffing manifest
+        # segments. Touched ⊇ differs-from-parent, and both consumers
+        # are sound under supersets (a false-positive bucket is
+        # re-checked/re-scanned, never skipped).
         raw["changed_buckets"] = sorted(changed_buckets)
         self._store_files(raw, cur, files, changed_buckets, version)
         if applied_update:
@@ -956,47 +934,61 @@ class LakeTable:
         try:
             self._write_snapshot(version, raw)
         except FileExistsError:
-            if _retries <= 0:
-                raise
-            if new_n_buckets is not None:
-                # a rescale is a full rewrite — whatever landed first
-                # invalidated it entirely; never rebase
-                raise ConcurrentBucketConflict(
-                    "rescale lost the commit race; recompute against the "
-                    "new snapshot"
-                )
-            # only REPLACED buckets create a rebase hazard (this writer
-            # resolved against their prior contents); pure appends
-            # (MoR merges, DLQ/bootstrap) commute with any concurrent
-            # commit and rebase safely
-            mine = {int(b) for b in replaced_buckets} | {
-                int(b) for b in (replaced_files or {})
-            }
-            if mine:
-                head = self._head_version()
-                for v in range(version, head + 1):
-                    theirs = self._buckets_changed_by(v)
-                    overlap = mine & theirs
-                    if overlap:
-                        raise ConcurrentBucketConflict(
-                            f"commit lost race on version {v}: buckets "
-                            f"{sorted(overlap)} were rewritten by a concurrent "
-                            f"commit; re-run the merge against the new snapshot"
-                        )
+            # another committer published this version first: checked
+            # and rebased like any advanced HEAD
             return self.commit(
+                base,
                 new_files_by_bucket=new_files_by_bucket,
                 replaced_buckets=replaced_buckets,
                 replaced_files=replaced_files,
-                new_schema=new_schema,
-                renames=renames,  # must survive the rebase, or old files
-                # would read with the renamed column nulled
                 applied_update=applied_update,
                 summary=summary,
-                expect_n_buckets=expect_n_buckets,
+                new_n_buckets=new_n_buckets,
                 new_properties=new_properties,
-                _retries=_retries - 1,
             )
         return Snapshot(version, raw)
+
+    def _rebase(
+        self, base: Snapshot, head: int, replaced: set[int], full: bool
+    ) -> Snapshot:
+        """Snapshot ``head`` as the parent of a commit computed from
+        ``base`` that replaces ``replaced`` buckets (every one if
+        ``full``), re-evolved like ``base`` — or ConcurrentBucketConflict
+        when a version in between makes that unsound (see :meth:`commit`)."""
+        sv = None if base.evolution is None else base.evolution[3]
+        for v in range(base.version + 1, head + 1):
+            try:
+                snap = self.snapshot(v)
+            except FileNotFoundError:
+                raise ConcurrentBucketConflict(
+                    f"snapshot {v} after this commit's base {base.version} "
+                    "was expired; re-run against the new snapshot"
+                ) from None
+            if snap.n_buckets != base.n_buckets:
+                raise ConcurrentBucketConflict(
+                    f"table was rescaled to n_buckets={snap.n_buckets} "
+                    f"while this commit was computed for {base.n_buckets}; "
+                    "re-run against the new snapshot"
+                )
+            if full:
+                raise ConcurrentBucketConflict(
+                    f"snapshot advanced from {base.version} to {v} since "
+                    "this full rewrite was planned; re-run against the new "
+                    "snapshot"
+                )
+            overlap = replaced & snap.changed_buckets
+            if overlap:
+                raise ConcurrentBucketConflict(
+                    f"commit lost race on version {v}: buckets "
+                    f"{sorted(overlap)} were rewritten by a concurrent "
+                    "commit; re-run against the new snapshot"
+                )
+            if sv is not None and snap.schema_version != sv:
+                raise ConcurrentBucketConflict(
+                    f"schema advanced at version {v} while this commit "
+                    "evolves it; re-run against the new snapshot"
+                )
+        return snap if base.evolution is None else snap.evolve(*base.evolution[:3])
 
     # ---------- data path ----------
 
@@ -1031,7 +1023,7 @@ class LakeTable:
             list(snap.user_schema.fields) + [field] + INTERNAL_FIELDS
         )
         return self.commit(
-            new_schema=new_schema,
+            snap.evolve(new_schema),
             summary={
                 "operation": "add-column",
                 "column": name,

@@ -257,14 +257,13 @@ def run_stream(
                 _LT.unclustered_count if compact_cluster_by_key else len
             )
             # only buckets the batch just touched can have grown — scan
-            # those, not the whole table (O(changed segments) on
-            # segmented manifests; a bucket never touched again never
-            # re-fats, so nothing is missed)
-            snap = table.snapshot()
-            recent = table._buckets_changed_by(snap)
+            # those in the batch's own commit, not the whole table
+            # (O(changed segments) on segmented manifests; a bucket never
+            # touched again never re-fats, so nothing is missed)
+            snap = res.merge.snapshot
             fat = [
                 b
-                for b, fs in snap.files_for(recent).items()
+                for b, fs in snap.files_for(snap.changed_buckets).items()
                 if measure(fs) > auto_compact_files
             ]
             if fat:

@@ -260,6 +260,7 @@ def _race_commit(table, racer, loser_bucket, racer_bucket, racer_files):
         if not fired["done"]:
             fired["done"] = True
             racer.commit(
+                racer.snapshot(),
                 new_files_by_bucket={racer_bucket: racer_files},
                 replaced_buckets=[racer_bucket] if racer_files is None else [],
                 summary={"operation": "racer"},
@@ -269,6 +270,7 @@ def _race_commit(table, racer, loser_bucket, racer_bucket, racer_files):
     table._write_snapshot = patched
     try:
         return table.commit(
+            table.snapshot(),
             new_files_by_bucket={loser_bucket: [("/fake/loser.parquet", 1)]},
             replaced_buckets=[loser_bucket],
             summary={"operation": "loser"},

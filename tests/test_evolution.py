@@ -185,7 +185,7 @@ def test_rename_key_column_rejected(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="merge key"):
-        table.commit(renames={"doc_id": "document_id"})
+        table.commit(table.snapshot().evolve(None, {"doc_id": "document_id"}))
 
 
 def test_forward_transitive_mode():
@@ -225,7 +225,7 @@ def test_commit_retry_preserves_renames(spark, tmp_path, monkeypatch):
     def colliding_write(self, version, snap):
         if not state["raced"] and snap["summary"].get("operation") == "rename":
             state["raced"] = True
-            racer.commit(summary={"operation": "racer"})
+            racer.commit(racer.snapshot(), summary={"operation": "racer"})
             raise FileExistsError(version)
         return orig_write(self, version, snap)
 
@@ -242,8 +242,10 @@ def test_commit_retry_preserves_renames(spark, tmp_path, monkeypatch):
     from nebula_spark.lake.table import INTERNAL_FIELDS
 
     snap = table.commit(
-        new_schema=T.StructType(list(new_user.fields) + INTERNAL_FIELDS),
-        renames={"source": "origin"},
+        table.snapshot().evolve(
+            T.StructType(list(new_user.fields) + INTERNAL_FIELDS),
+            {"source": "origin"},
+        ),
         summary={"operation": "rename"},
     )
     assert state["raced"], "collision was never exercised"

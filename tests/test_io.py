@@ -201,7 +201,7 @@ def test_incremental_diff_scans_only_changed_buckets(spark, tmp_path, monkeypatc
     merge_into(spark, table, delta, epoch=1)
     changed = set()
     for v in range(v1 + 1, table.snapshot().version + 1):
-        changed |= table._buckets_changed_by(v)
+        changed |= table.snapshot(v).changed_buckets
     assert 0 < len(changed) < 16
 
     seen = []

@@ -109,9 +109,9 @@ def test_pruned_merge_conflicts_with_concurrent_compaction(spark, tmp_path):
     replace is: if a compaction lands between the pruned merge's plan
     and its commit, silently committing would drop the pruned files'
     rows (their content lives only in the compacted file the commit
-    would replace). The pinned base_version must turn that window into
-    a clean ConcurrentBucketConflict, and a retry against the new
-    snapshot must converge to the right state."""
+    would replace). The commit against the merge's pinned snapshot must
+    turn that window into a clean ConcurrentBucketConflict, and a retry
+    against the new snapshot must converge to the right state."""
     from nebula_spark.lake.table import ConcurrentBucketConflict
 
     table = LakeTable.create(str(tmp_path / "t"), _SCHEMA, "k", n_buckets=2)

@@ -1,14 +1,16 @@
 """One snapshot read and one commit per change batch: ``apply_changes``
-hands its snapshot to ``merge_into``, and an evolving batch's schema,
-renames, files and epoch land in the merge's single commit."""
+hands its snapshot to ``merge_into``, whose single commit is made
+against it (parsing no snapshot while HEAD has not moved), and an
+evolving batch's schema, renames, files and epoch land in that commit."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from nebula_spark.cdc import gen_binlog
 from nebula_spark.cdc.apply import apply_changes
 from nebula_spark.cdc.binlog import SEQUENCE_SCHEMA
 from nebula_spark.lake import LakeTable
+from nebula_spark.lake.table import INTERNAL_FIELDS, ConcurrentBucketConflict
 
 
 def _calls_on(monkeypatch, table, name):
@@ -49,8 +51,8 @@ def _second_batch(spark, evolving):
 def test_apply_changes_parses_twice_and_commits_once(
     spark, tmp_path, monkeypatch, mode, evolving
 ):
-    """At most two parses of the target's snapshots (the batch's read
-    and the commit's) and exactly one commit; an evolving batch leaves
+    """One parse of the target's snapshot (the batch's read; the commit
+    is made against it) and exactly one commit; an evolving batch leaves
     one new snapshot holding its schema, renames, files and epoch, and
     the previous version still reads with the old schema."""
     table = _table(tmp_path, mode)
@@ -64,7 +66,7 @@ def test_apply_changes_parses_twice_and_commits_once(
     res = apply_changes(spark, table, batch, epoch=1, renames=renames)
     monkeypatch.undo()
 
-    assert len(parses) <= 2, parses
+    assert len(parses) <= 1, parses
     assert len(commits) == 1, commits
     snap = table.snapshot()
     assert snap.version == prev.version + 1 == res.merge.version
@@ -110,3 +112,51 @@ def test_empty_evolving_batch_commits_schema_once(spark, tmp_path, mode):
     assert "lang" in snap.user_schema.fieldNames()
     assert snap.renames == {"source": "origin"}
     assert snap.files == prev.files
+
+
+def test_commit_against_head_parses_no_snapshot(tmp_path, monkeypatch):
+    """With HEAD still at ``base`` a commit reads the HEAD integer and
+    parses no snapshot, also when ``base`` evolves the schema."""
+    table = _table(tmp_path, "mor")
+    base = table.snapshot()
+    parses = _calls_on(monkeypatch, table, "snapshot")
+    snap = table.commit(
+        base, new_files_by_bucket={0: [("/fake/a.parquet", 1)]}
+    )
+    wider = T.StructType(
+        list(snap.user_schema.fields)
+        + [T.StructField("lang", T.StringType(), True)]
+        + INTERNAL_FIELDS
+    )
+    evolved = table.commit(snap.evolve(wider))
+    monkeypatch.undo()
+    assert parses == []
+    assert evolved.version == base.version + 2
+    assert "lang" in table.snapshot().user_schema.fieldNames()
+    # and a stale base is checked, not silently committed over
+    with pytest.raises(ConcurrentBucketConflict):
+        table.commit(base, replaced_buckets=[0])
+
+
+def test_stream_micro_batch_parses_snapshot_once(spark, tmp_path, monkeypatch):
+    """A ``run_stream`` micro-batch that does not compact parses the
+    target's snapshot once: its auto-compaction check reads the batch's
+    own commit instead of HEAD."""
+    from nebula_spark.cdc.binlog import write_binlog_chunks
+    from nebula_spark.streaming.ingest import run_stream
+
+    table = _table(tmp_path, "mor")
+    binlog = str(tmp_path / "binlog")
+    write_binlog_chunks(
+        gen_binlog(spark, 3000, 300, seed=74), binlog, n_chunks=3,
+        files_per_chunk=1,
+    )
+    parses = _calls_on(monkeypatch, table, "snapshot")
+    out = run_stream(
+        spark, table, binlog, str(tmp_path / "ckpt"),
+        auto_compact_files=1000,
+    )
+    monkeypatch.undo()
+    assert out["batches"] == 3 and "compactions" not in out
+    # one per micro-batch, plus run_stream's closing summary read
+    assert len(parses) == out["batches"] + 1, parses

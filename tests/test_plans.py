@@ -74,10 +74,11 @@ def test_commit_retry_on_version_collision(tmp_path, spark):
     taken must rebase onto the new HEAD instead of corrupting."""
     table = LakeTable.create(str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=2)
     # simulate a racing writer: occupy version 1 directly
+    base = table.snapshot()
     other = LakeTable.load(str(tmp_path / "t"))
-    other.commit(summary={"operation": "racer"})
+    other.commit(other.snapshot(), summary={"operation": "racer"})
     assert table.snapshot().version == 1
-    snap = table.commit(summary={"operation": "late"})  # must land at v2
+    snap = table.commit(base, summary={"operation": "late"})  # must land at v2
     assert snap.version == 2 and snap.raw["summary"]["operation"] == "late"
 
 def test_lsh_topk_is_equi_join(spark):

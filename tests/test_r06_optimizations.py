@@ -124,7 +124,7 @@ def test_changed_buckets_recorded_no_segment_reads(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(builtins, "open", counting_open)
     changed = set()
     for v in range(v0 + 1, head + 1):
-        changed |= table._buckets_changed_by(v)
+        changed |= table.snapshot(v).changed_buckets
     monkeypatch.undo()
     assert not seg_opens, f"catch-up walk opened segments: {seg_opens[:3]}"
     # the recorded sets cover exactly the buckets the narrow commits hit
@@ -167,6 +167,7 @@ def test_legacy_short_file_tuples_default_non_key_unique(tmp_path):
         properties={"merge_mode": "mor"},
     )
     table.commit(
+        table.snapshot(),
         new_files_by_bucket={0: [("/fake/legacy.parquet", 1)]},
         summary={"operation": "test"},
     )

@@ -251,6 +251,7 @@ def test_manifest_json_stays_bounded_over_many_commits(tmp_path):
     )
     for e in range(300):
         table.commit(
+            table.snapshot(),
             applied_update={str(e): {"partitions": {"0": e * 10}, "events": 0}},
             summary={"operation": "merge-empty", "epoch": e},
         )
@@ -294,6 +295,7 @@ def test_dlq_manifest_stays_bounded_with_prefixed_epochs(tmp_path):
         epoch = f"{ns}{i}"  # per-namespace suffixes strictly increase
         committed.append(epoch)
         table.commit(
+            table.snapshot(),
             applied_update={epoch: {"partitions": {"0": i * 10}, "events": 0}},
             summary={"operation": "dlq", "epoch": epoch},
         )
@@ -335,6 +337,7 @@ def test_watermark_fold_gap_never_claims_bootstrap_epoch(tmp_path):
     # checkpoint batch ids starting at 10: non-contiguous with -1/0
     for e in range(10, 21):
         table.commit(
+            table.snapshot(),
             applied_update={str(e): {"partitions": {}, "events": 0}},
             summary={"operation": "merge-empty", "epoch": e},
         )

@@ -112,20 +112,21 @@ def test_merge_after_rescale_conflicts_cleanly(spark, tmp_path):
     rescale must get ConcurrentBucketConflict, not silently write files
     with meaningless bucket ids."""
     table = _mk(spark, tmp_path)
-    old_nb = table.snapshot().n_buckets
+    old = table.snapshot()
     rescale(spark, table, 8)
     with pytest.raises(ConcurrentBucketConflict, match="rescaled"):
         table.commit(
+            old,
             new_files_by_bucket={},
             replaced_buckets=[0],
-            expect_n_buckets=old_nb,
         )
 
 
 def test_rescale_loses_race_to_concurrent_merge(spark, tmp_path, monkeypatch):
     """A merge that fully lands between the rescale's plan-read and its
-    commit must NOT be erased by the full rewrite: the pinned
-    base_version turns it into a clean conflict the rescale can retry."""
+    commit must NOT be erased by the full rewrite: the commit against
+    the rescale's own read turns it into a clean conflict the rescale
+    can retry."""
     table = _mk(spark, tmp_path)
     fired = {"done": False}
     orig_new_commit_dir = LakeTable.new_commit_dir

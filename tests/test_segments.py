@@ -91,7 +91,7 @@ def test_commit_rewrites_only_changed_segments(spark, tmp_path):
     # the replaced path is recorded for O(changed) expiry
     assert snap.raw["removed_segments"] == [before[next(iter(changed))]]
     # and the conflict footprint comes out of the segment fast path
-    assert 0 < len(table._buckets_changed_by(snap.version)) <= 1
+    assert 0 < len(snap.changed_buckets) <= 1
 
 
 def test_files_for_reads_only_needed_segments(spark, tmp_path):
