@@ -198,14 +198,13 @@ def _replay_generational(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _replay_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay through a SEGMENTED-manifest table (table property
-    ``manifest_segment_buckets``): 64 buckets, 8 buckets per segment.
-    Two broad epochs populate every bucket, then a narrow re-delivery
+    """Replay through a table's manifest segments: 64 buckets, so
+    √64 = 8 buckets per segment. Two broad epochs populate every bucket, then a narrow re-delivery
     epoch (a handful of user_ids → a handful of buckets) must REUSE —
     by path, Iceberg's manifest reuse — at least one of the parent
     snapshot's segment files instead of rewriting all metadata; the
     assert turns this row red if per-commit metadata cost regresses to
-    O(table). Segmented manifests are semantically invisible, so the
+    O(table). Manifest segments are semantically invisible, so the
     final state must equal the plain LWW replay."""
     import tempfile
 
@@ -230,7 +229,6 @@ def _replay_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema,
         "user_id",
         n_buckets=64,
-        properties={"manifest_segment_buckets": 8},
     )
     half = cl.agg(F.expr("percentile_approx(op_sequence, 0.5)")).collect()[0][0]
     merge_into(spark, table, cl.filter(F.col("op_sequence") <= half), epoch=0)

@@ -71,16 +71,12 @@ def _ensure_table(args):
 
     if LakeTable.exists(args.table):
         return LakeTable.load(args.table)
-    props = {"merge_mode": getattr(args, "merge_mode", "cow")}
-    seg = getattr(args, "segment_buckets", None)
-    if seg is not None:
-        props["manifest_segment_buckets"] = seg
     return LakeTable.create(
         args.table,
         SEQUENCE_SCHEMA,
         "doc_id",
         n_buckets=args.buckets,
-        properties=props,
+        properties={"merge_mode": getattr(args, "merge_mode", "cow")},
     )
 
 
@@ -327,13 +323,7 @@ def cmd_alter(args) -> dict:
         name, dtype = args.migrate_column.split(":", 1)
         spark = get_spark("nebula-alter", parallelism=args.cpus)
         return migrate_column(spark, table, name, dtype, strict=args.strict)
-    if args.set_segment_buckets is not None:
-        from nebula_spark.lake.maintenance import set_segmentation
-
-        return set_segmentation(table, args.set_segment_buckets)
-    raise SystemExit(
-        "alter needs --add-column, --migrate-column or --set-segment-buckets"
-    )
+    raise SystemExit("alter needs --add-column or --migrate-column")
 
 
 def cmd_reprocess(args) -> dict:
@@ -471,14 +461,6 @@ def main(argv=None):
         # resolution, compact to fold) — Iceberg's write modes
         s.add_argument("--merge-mode", default="cow", choices=["cow", "mor"])
         s.add_argument(
-            "--segment-buckets",
-            type=int,
-            default=None,
-            help="segmented manifests: buckets per manifest segment "
-            "(per-commit metadata writes become O(changed buckets); "
-            "recommended at 256+ buckets; default inline)",
-        )
-        s.add_argument(
             "--dedup-how",
             default="auto",
             choices=["auto", "agg", "window", "salted", "none"],
@@ -548,9 +530,6 @@ def main(argv=None):
     al.add_argument("--add-column", default=None, metavar="NAME:TYPE[:DEFAULT]")
     al.add_argument("--migrate-column", default=None, metavar="NAME:TYPE")
     al.add_argument("--strict", action="store_true")
-    # metadata-only manifest-layout switch (0 = inline); one O(table)
-    # metadata write, no data rewrite
-    al.add_argument("--set-segment-buckets", type=int, default=None)
     al.set_defaults(fn=cmd_alter)
 
     c = sub.add_parser("compact")

@@ -20,7 +20,13 @@ import time
 
 from pyspark.sql import SparkSession, functions as F
 
-from nebula_spark.lake.table import DELETED_COL, SEQ_COL, TMP_MARK, LakeTable
+from nebula_spark.lake.table import (
+    DELETED_COL,
+    SEGMENTS_DIR,
+    SEQ_COL,
+    TMP_MARK,
+    LakeTable,
+)
 
 
 def compact(
@@ -129,7 +135,8 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
     Plan: one full read (for a merge-on-read table the read-time fold
     runs here, so a rescale doubles as a full compaction), re-bucketed
     under the new layout, written fresh, committed with
-    ``new_n_buckets`` + every old bucket replaced. Readers on older
+    ``new_n_buckets`` + every old bucket replaced, the file listing
+    re-segmented at the new width. Readers on older
     snapshots keep the old layout (a snapshot pins its n_buckets);
     readers of HEAD see the new one. Concurrency is strict: the commit
     is a full rewrite, so any commit landing after the plan's read
@@ -153,22 +160,11 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
         "_bucket"
     ).mode("append").parquet(commit_dir)
     new_files = LakeTable.list_written_files(commit_dir, key_col=key)
-    new_props = None
-    if (
-        int(new_n_buckets) >= 256
-        and "manifest_segment_buckets" not in (snap.raw.get("properties") or {})
-    ):
-        # growing past the wide-table threshold: adopt segmented
-        # manifests in the same commit — the rescale is a full rewrite
-        # anyway, so the one-time every-segment write is free here
-        # (same default/threshold as LakeTable.create)
-        new_props = {"manifest_segment_buckets": 64}
     new_snap = table.commit(
         snap,
         new_files_by_bucket=new_files,
         replaced_buckets=sorted(snap.files.keys()),
         new_n_buckets=int(new_n_buckets),
-        new_properties=new_props,
         summary={
             "operation": "rescale",
             "from_n_buckets": old_nb,
@@ -181,37 +177,6 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
         "n_buckets": int(new_n_buckets),
         "version": new_snap.version,
         "seconds": round(time.time() - t0, 2),
-    }
-
-
-def set_segmentation(table: LakeTable, width: int) -> dict:
-    """Switch a live table's manifest layout — inline ↔ segmented, or a
-    new segment width — WITHOUT touching data files: one metadata-only
-    commit whose ``new_properties`` carries the new
-    ``manifest_segment_buckets``; the commit's file store sees the
-    parent/child width mismatch and rewrites every populated segment
-    (or inlines them for width 0) exactly once. The escape hatch for a
-    big table created inline before it grew: adopting segmented
-    manifests costs one O(table) metadata write instead of a rescale's
-    O(table) data rewrite. Concurrency: a metadata-only commit replaces
-    no bucket, so it rebases over any commit that keeps the layout."""
-    snap = table.snapshot()
-    cur = int(
-        (snap.raw.get("properties") or {}).get("manifest_segment_buckets", 0)
-        or 0
-    )
-    if cur == int(width):
-        return {"changed": False, "width": cur, "version": snap.version}
-    new_snap = table.commit(
-        snap,
-        new_properties={"manifest_segment_buckets": int(width)},
-        summary={"operation": "set-segmentation", "width": int(width)},
-    )
-    return {
-        "changed": True,
-        "from_width": cur,
-        "width": int(width),
-        "version": new_snap.version,
     }
 
 
@@ -349,8 +314,8 @@ def expire_snapshots(table: LakeTable, keep_last: int = 10) -> int:
     for v in sorted(v for v in all_versions if v <= boundary):
         raw = table.snapshot(v).raw
         dead.update(raw.get("removed", []))
-        # segmented manifests: replaced segment JSONs die with their
-        # last referencing snapshot exactly like data files
+        # replaced manifest segments die with their last referencing
+        # snapshot exactly like data files
         dead.update(raw.get("removed_segments", []))
     removed = 0
     for p in sorted(dead):
@@ -372,8 +337,8 @@ def vacuum_orphans(table: LakeTable, grace_s: float = 86400.0) -> int:
     every file some retained snapshot references is either in HEAD's
     listing or in the ``removed`` list of the (existing) commit where
     its last reference died — the same bookkeeping that makes
-    expire_snapshots O(changed). On a segmented table only HEAD's
-    manifest segments are opened; the old implementation loaded every
+    expire_snapshots O(changed). Only HEAD's manifest segments are
+    opened; the old implementation loaded every
     snapshot's full listing (every segment of every snapshot), which
     is quadratic-ish on a long-unexpired table. Temp files a crash
     stranded in the metadata dir before their publish are swept too.
@@ -402,11 +367,10 @@ def vacuum_orphans(table: LakeTable, grace_s: float = 86400.0) -> int:
         head_snap = table.snapshot(versions[-1])
         for entries in head_snap.files.values():
             live.update(os.path.abspath(e["path"]) for e in entries)
-        seg = head_snap.raw.get("files_segmented")
-        if seg:
-            live_segs.update(
-                os.path.abspath(p) for p in seg["segments"].values()
-            )
+        live_segs.update(
+            os.path.abspath(p)
+            for p in head_snap.raw["files_segmented"]["segments"].values()
+        )
     cutoff = time.time() - grace_s
     removed = 0
     data_root = os.path.join(table.root, "data")
@@ -432,11 +396,8 @@ def vacuum_orphans(table: LakeTable, grace_s: float = 86400.0) -> int:
     # manifest segments referenced by no snapshot (the leftovers of
     # commit attempts that lost their publish race; live_segs is HEAD's
     # map + removed_segments), and stranded temp files
-    seg_dir = os.path.join(meta, "segments")
-    stray = [
-        os.path.abspath(os.path.join(seg_dir, fn))
-        for fn in (os.listdir(seg_dir) if os.path.isdir(seg_dir) else ())
-    ]
+    seg_dir = table._meta(SEGMENTS_DIR)
+    stray = [os.path.abspath(os.path.join(seg_dir, fn)) for fn in os.listdir(seg_dir)]
     stray += [os.path.join(meta, fn) for fn in os.listdir(meta) if TMP_MARK in fn]
     for p in stray:
         try:

@@ -16,11 +16,15 @@ Iceberg-shaped, Spark-first:
   it. Readers always see a consistent version; time travel = read an
   older snapshot.
 - **Bucket layout**: data files are hash-bucketed on the merge key
-  (``pmod(xxhash64(key), n_buckets)`` — the same idea as Iceberg's
-  ``bucket(N, key)`` partition transform). A change batch touching K
+  (``pmod(hash(key), n_buckets)``, Spark's Murmur3 — the same idea as
+  Iceberg's ``bucket(N, key)`` partition transform). A change batch touching K
   buckets rewrites only those K buckets (copy-on-write), so MERGE cost
   scales with the touched fraction, not table size. At 100 TB you run
   n_buckets=4096+; tests use 16.
+- **Manifest segments**: a snapshot lists its live data files in
+  immutable segment files of ``segment_width(n_buckets)`` buckets each
+  and carries only their paths; a commit rewrites the segments of the
+  buckets it touched and reuses the rest (Iceberg's manifest reuse).
 - **Commit manifest**: the snapshot carries the set of applied
   ``(checkpoint_epoch, partition_id) -> max_op_sequence`` entries, so
   the exactly-once bookkeeping is atomic *with* the data commit — a
@@ -44,6 +48,7 @@ raises ``ConcurrentBucketConflict`` otherwise.
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import time
@@ -58,6 +63,10 @@ from nebula_spark.functions.dedupe import _q
 META_DIR = "_nl"
 HEAD_FILE = "HEAD"
 SNAP_FMT = "snap-%012d.json"
+SEGMENTS_DIR = "segments"
+# the on-disk layout this engine reads and writes: v2 keeps every file
+# listing in manifest segments (v1 snapshots could list files inline)
+FORMAT_VERSION = 2
 # stranded temp files (a crash between write and publish) carry this in
 # their name, never a ``snap-`` prefix; vacuum_orphans sweeps them
 TMP_MARK = ".tmp-"
@@ -69,6 +78,22 @@ def _tmp_path(path: str) -> str:
     file."""
     d, name = os.path.split(path)
     return os.path.join(d, f".{name}{TMP_MARK}{uuid.uuid4().hex[:12]}")
+
+
+def segment_width(n_buckets: int) -> int:
+    """Buckets per manifest segment: √n, so a narrow commit rewrites one
+    segment of √n buckets and the snapshot carries √n segment paths —
+    both per-commit metadata costs are O(√n)."""
+    return max(1, math.isqrt(int(n_buckets)))
+
+
+def fsync_dir(path: str) -> None:
+    """Make the entries created in directory ``path`` survive a crash."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def publish_json(path: str, obj) -> None:
@@ -89,11 +114,7 @@ def publish_json(path: str, obj) -> None:
             os.unlink(tmp)
         except FileNotFoundError:
             pass
-    fd = os.open(os.path.dirname(path), os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
+    fsync_dir(os.path.dirname(path))
 
 
 def type_from_ddl(ddl: str) -> T.DataType:
@@ -245,80 +266,58 @@ class Snapshot:
     def schema_version(self) -> int:
         return self.raw["schema_version"]
 
-    @property
-    def files(self) -> dict[int, list[dict]]:
-        """bucket -> [{path, schema_version}] — loaded from the inline
-        ``files`` map, or (segmented manifests) by reading every
-        segment file once and caching on this instance. Callers must
-        not mutate the returned entry lists."""
-        seg = self.raw.get("files_segmented")
-        if seg is None:
-            return {int(b): fs for b, fs in self.raw["files"].items()}
-        cache = getattr(self, "_files_cache", None)
-        if cache is None:
-            cache = {}
-            for path in seg["segments"].values():
+    def _load_segments(self, segments: "Iterable[int]") -> dict[int, list[dict]]:
+        """bucket -> entries of every bucket in the given manifest
+        segments (absent segments hold no files)."""
+        paths = self.raw["files_segmented"]["segments"]
+        out: dict[int, list[dict]] = {}
+        for s in sorted(set(segments)):
+            path = paths.get(str(s))
+            if path:
                 with open(path) as f:
                     for b, fs in json.load(f)["files"].items():
-                        cache[int(b)] = fs
+                        out[int(b)] = fs
+        return out
+
+    @property
+    def files(self) -> dict[int, list[dict]]:
+        """bucket -> [{path, schema_version, ...}] of the whole table,
+        every segment read once and cached on this instance. Callers
+        must not mutate the returned entry lists."""
+        cache = getattr(self, "_files_cache", None)
+        if cache is None:
+            cache = self._load_segments(
+                int(s) for s in self.raw["files_segmented"]["segments"]
+            )
             self._files_cache = cache
         return cache
 
     def files_for(self, buckets: "Iterable[int]") -> dict[int, list[dict]]:
-        """File entries for just the given buckets. On a segmented
-        manifest this opens ONLY the segments covering them —
-        O(touched segments) metadata I/O instead of O(table), which is
-        what keeps a point lookup's metadata cost flat at 4096+
-        buckets. Inline manifests (and an already-cached full load)
-        answer from memory."""
-        seg = self.raw.get("files_segmented")
-        if seg is None or getattr(self, "_files_cache", None) is not None:
-            f = self.files
-            return {int(b): f[int(b)] for b in buckets if int(b) in f}
-        width = int(seg["width"])
-        need: dict[int, list[int]] = {}
-        for b in {int(x) for x in buckets}:
-            need.setdefault(b // width, []).append(b)
-        out: dict[int, list[dict]] = {}
-        for s, bs in need.items():
-            path = seg["segments"].get(str(s))
-            if not path:
-                continue
-            with open(path) as f:
-                content = json.load(f)["files"]
-            for b in bs:
-                if str(b) in content:
-                    out[b] = content[str(b)]
-        return out
+        """File entries for just the given buckets, opening ONLY the
+        segments covering them (or answering from an already-cached full
+        load) — what keeps a point lookup's metadata cost flat at 4096+
+        buckets."""
+        want = {int(b) for b in buckets}
+        f = getattr(self, "_files_cache", None)
+        if f is None:
+            f = self.covering_segments(want)
+        return {b: f[b] for b in want if b in f}
 
     @property
     def has_files(self) -> bool:
         """Whether the snapshot references any data file — WITHOUT
         loading segments (a segment is dropped from the map the moment
         it holds no buckets, so a non-empty map implies files)."""
-        seg = self.raw.get("files_segmented")
-        if seg is not None:
-            return bool(seg["segments"])
-        return bool(self.raw["files"])
+        return bool(self.raw["files_segmented"]["segments"])
 
     def covering_segments(self, buckets: "Iterable[int]") -> dict[int, list[dict]]:
         """ENTIRE content (every bucket, not just the requested ones) of
         the manifest segments covering ``buckets``. This is commit()'s
         partial load: a narrow commit must rewrite each changed segment
         whole, so it needs all of that segment's buckets — but none of
-        any other segment. Returns None-equivalent semantics only for
-        segmented manifests; callers guard on ``files_segmented``."""
-        seg = self.raw["files_segmented"]
-        width = int(seg["width"])
-        out: dict[int, list[dict]] = {}
-        for s in sorted({int(b) // width for b in buckets}):
-            path = seg["segments"].get(str(s))
-            if not path:
-                continue
-            with open(path) as f:
-                for b, fs in json.load(f)["files"].items():
-                    out[int(b)] = fs
-        return out
+        any other segment."""
+        width = int(self.raw["files_segmented"]["width"])
+        return self._load_segments(int(b) // width for b in buckets)
 
     @property
     def changed_buckets(self) -> set[int]:
@@ -518,9 +517,12 @@ class LakeTable:
         """The newest published version. ``HEAD`` is a hint written after
         each publish; a crash between the two (or a slower committer's
         late HEAD write) leaves newer snapshots ahead of it, which this
-        rolls forward over."""
-        with open(self._meta(HEAD_FILE)) as f:
-            v = int(f.read().strip())
+        rolls forward over — from ``snap-0`` when no HEAD was written."""
+        try:
+            with open(self._meta(HEAD_FILE)) as f:
+                v = int(f.read().strip())
+        except FileNotFoundError:
+            v = 0
         while os.path.exists(self._meta(SNAP_FMT % (v + 1))):
             v += 1
         return v
@@ -528,7 +530,14 @@ class LakeTable:
     def snapshot(self, version: int | None = None) -> Snapshot:
         v = self._head_version() if version is None else version
         with open(self._meta(SNAP_FMT % v)) as f:
-            return Snapshot(v, json.load(f))
+            raw = json.load(f)
+        if raw.get("format_version") != FORMAT_VERSION:
+            raise ValueError(
+                f"{self.root}: snapshot {v} has format_version "
+                f"{raw.get('format_version')}, this engine reads only "
+                f"{FORMAT_VERSION}; re-create the table"
+            )
+        return Snapshot(v, raw)
 
     # ---------- create / commit ----------
 
@@ -546,49 +555,46 @@ class LakeTable:
         if any(f.name in INTERNAL_COLS for f in schema.fields):
             raise ValueError(f"schema may not use reserved columns {INTERNAL_COLS}")
         schema = T.StructType(list(schema.fields) + INTERNAL_FIELDS)
-        properties = dict(properties or {})
-        if "manifest_segment_buckets" not in properties and n_buckets >= 256:
-            # wide tables segment by default: an inline snapshot at 256+
-            # buckets is rewritten whole per commit (O(table) metadata —
-            # measured 4 MB/commit at 4096 buckets, see BENCH/BASELINE.md
-            # round 5); 64 buckets/segment keeps the segment map small
-            # and narrow commits O(changed). Pass
-            # manifest_segment_buckets=0 to force inline.
-            properties["manifest_segment_buckets"] = 64
-        seg_width = int(properties.get("manifest_segment_buckets", 0) or 0)
         t = cls(root)
-        os.makedirs(t._meta(), exist_ok=False)
+        # a meta dir left without snap-0 (a crash before the first
+        # publish) is no table; a table whose snap-0 was expired still
+        # has HEAD, and publishing snap-0 refuses any other
+        if os.path.exists(t._meta(HEAD_FILE)):
+            raise FileExistsError(f"a LakeTable exists at {root}")
+        # the segments dir is made here, so snap-0's publish makes its
+        # name durable before any commit writes into it
+        os.makedirs(t._meta(SEGMENTS_DIR), exist_ok=True)
         os.makedirs(os.path.join(t.root, "data"), exist_ok=True)
-        snap = {
-            "format_version": 1,
+        t._write_snapshot(0, {
+            "format_version": FORMAT_VERSION,
             "version": 0,
             "parent": None,
             "key_col": key_col,
             "n_buckets": n_buckets,
             "schema_version": 1,
             "schemas": {"1": schema.jsonValue()},
-            "files": {},
+            "files_segmented": {"width": segment_width(n_buckets), "segments": {}},
             "applied": {},
-            "properties": properties,
+            "properties": dict(properties or {}),
             "summary": {"operation": "create"},
             "committed_at": time.time(),
-        }
-        if seg_width > 0:
-            del snap["files"]
-            snap["files_segmented"] = {"width": seg_width, "segments": {}}
-        t._write_snapshot(0, snap)
+        })
         return t
 
     @classmethod
     def load(cls, root: str) -> "LakeTable":
-        t = cls(root)
-        if not os.path.exists(t._meta(HEAD_FILE)):
+        if not cls.exists(root):
             raise FileNotFoundError(f"not a LakeTable: {root}")
-        return t
+        return cls(root)
 
     @staticmethod
     def exists(root: str) -> bool:
-        return os.path.exists(os.path.join(root, META_DIR, HEAD_FILE))
+        """A published ``snap-0`` makes a table; HEAD is only a hint (and
+        the one trace left once snap-0 is expired)."""
+        meta = os.path.join(root, META_DIR)
+        return os.path.exists(os.path.join(meta, SNAP_FMT % 0)) or os.path.exists(
+            os.path.join(meta, HEAD_FILE)
+        )
 
     def _write_snapshot(self, version: int, snap: dict) -> None:
         """Publish snapshot ``version`` (``FileExistsError`` when another
@@ -609,65 +615,37 @@ class LakeTable:
         changed_buckets: set[int],
         version: int,
     ) -> None:
-        """Write the commit's file listing into ``raw`` — inline
-        (``files`` map in the snapshot JSON) or, when the table
-        property ``manifest_segment_buckets`` = W is set, SEGMENTED:
-        buckets are grouped W-per-segment into immutable side JSONs
-        under ``<meta>/segments/`` and the snapshot carries only
-        {segment_id: path}. A commit rewrites ONLY the segments whose
-        buckets changed and reuses the parent's paths for the rest —
-        Iceberg's manifest-reuse. At 4096 buckets × many files, the
-        per-commit metadata write drops from O(all files) to
-        O(changed buckets), and segment-pruned reads
-        (:meth:`Snapshot.files_for`) drop lookup metadata I/O the same
-        way. Segment files are uuid-named so two writers racing to the
-        same version can never clobber each other's referenced
-        segments (the snapshot publish decides the winner; the
-        loser's segments become harmless orphans that
-        ``vacuum_orphans`` sweeps). Replaced segment paths are
-        recorded in ``removed_segments`` exactly like data files in
-        ``removed``, which keeps ``expire_snapshots`` O(changed)."""
-        width = int(
-            (raw.get("properties") or {}).get("manifest_segment_buckets", 0)
-            or 0
-        )
-        if width <= 0:
-            raw["files"] = {str(b): fs for b, fs in sorted(files.items())}
-            raw.pop("files_segmented", None)
-            parent_seg0 = cur.raw.get("files_segmented")
-            if parent_seg0:
-                # segmented → inline switch: every parent segment dies
-                # with this commit — record them so expire_snapshots
-                # stays O(changed) (vacuum would catch them anyway)
-                raw["removed_segments"] = sorted(
-                    parent_seg0["segments"].values()
-                )
-            else:
-                raw.pop("removed_segments", None)
-            return
-        parent_seg = cur.raw.get("files_segmented")
-        parent_map = dict(parent_seg["segments"]) if parent_seg else {}
-        if parent_seg is None or int(parent_seg.get("width", 0)) != width:
-            # first segmented commit (or a width change): every
-            # populated segment is new, and ALL old-width parent
-            # segments die with this commit
-            changed_segs = {b // width for b in files}
-            pre_removed = sorted(parent_map.values())
-            parent_map = {}
-        else:
-            changed_segs = {b // width for b in changed_buckets}
-            pre_removed = []
+        """Write the commit's file listing into ``raw`` as manifest
+        segments: buckets grouped ``segment_width(n_buckets)`` per
+        immutable side JSON under ``<meta>/segments/``, the snapshot
+        carrying only {segment_id: path}. ``files`` holds every bucket of
+        the parent segments covering ``changed_buckets``; only those
+        segments are rewritten and the parent's paths are reused for the
+        rest — Iceberg's manifest reuse. A rescale replaces every bucket,
+        so it drops every parent segment and writes the new width.
+
+        Segment files are uuid-named so two writers racing to the same
+        version can never clobber each other's referenced segments (the
+        snapshot publish decides the winner; the loser's segments become
+        orphans that ``vacuum_orphans`` sweeps), and the segments dir is
+        fsync'd before the snapshot that names them is published.
+        Replaced segment paths are recorded in ``removed_segments``
+        exactly like data files in ``removed``, which keeps
+        ``expire_snapshots`` O(changed)."""
+        parent = cur.raw["files_segmented"]
+        old_width, width = int(parent["width"]), segment_width(raw["n_buckets"])
+        segments = dict(parent["segments"])
+        removed = [
+            segments.pop(str(s))
+            for s in sorted({b // old_width for b in changed_buckets})
+            if str(s) in segments
+        ]
         by_seg: dict[int, dict[str, list[dict]]] = {}
         for b in sorted(files):
             by_seg.setdefault(b // width, {})[str(b)] = files[b]
-        seg_dir = self._meta("segments")
-        os.makedirs(seg_dir, exist_ok=True)
-        new_map = dict(parent_map)
-        removed_segs = []
-        for s in sorted(changed_segs):
-            old = new_map.pop(str(s), None)
-            if old is not None:
-                removed_segs.append(old)
+        seg_dir = self._meta(SEGMENTS_DIR)
+        written = False
+        for s in sorted({b // width for b in changed_buckets}):
             content = by_seg.get(s)
             if not content:
                 continue  # segment emptied: no new file
@@ -679,22 +657,23 @@ class LakeTable:
                 json.dump({"files": content}, f)
                 f.flush()
                 os.fsync(f.fileno())
-            new_map[str(s)] = path
-        raw.pop("files", None)
-        raw["files_segmented"] = {"width": width, "segments": new_map}
-        raw["removed_segments"] = sorted(removed_segs + pre_removed)
+            segments[str(s)] = path
+            written = True
+        if written:
+            fsync_dir(seg_dir)
+        raw["files_segmented"] = {"width": width, "segments": segments}
+        raw["removed_segments"] = sorted(removed)
 
     def commit(
         self,
         base: Snapshot,
         *,
-        new_files_by_bucket: dict[int, list[str]] | None = None,
+        new_files_by_bucket: dict[int, list[tuple]] | None = None,
         replaced_buckets: Iterable[int] = (),
         replaced_files: dict[int, Iterable[str]] | None = None,
         applied_update: dict | None = None,
         summary: dict | None = None,
         new_n_buckets: int | None = None,
-        new_properties: dict | None = None,
     ) -> Snapshot:
         """Publish the next version on top of ``base``, the snapshot this
         commit's data was computed from: keep files of untouched buckets,
@@ -702,6 +681,10 @@ class LakeTable:
         ``applied_update`` into the commit manifest. A ``base`` from
         :meth:`Snapshot.evolve` commits its next schema and renames with
         the data. Atomic.
+
+        ``new_files_by_bucket``: {bucket: [(path, size, min_seq, max_seq,
+        key_unique, min_key, max_key)]}, as
+        :meth:`list_written_files` returns them.
 
         ``replaced_files``: FILE-level replace — {bucket: [paths]} of
         individual live files this commit rewrote; other files in those
@@ -711,7 +694,8 @@ class LakeTable:
 
         ``new_n_buckets``: switch the table to a new bucket layout —
         partition-spec evolution. Such a commit must replace every
-        bucket of ``base`` (it is a full rewrite).
+        bucket of ``base`` (it is a full rewrite, of the manifest
+        segments too).
 
         Optimistic concurrency, one rule. While HEAD is still ``base``
         the commit publishes ``base.version + 1``, having read only the
@@ -743,49 +727,23 @@ class LakeTable:
         cur = base
         head = self._head_version()
         if head != base.version:
-            full = new_n_buckets is not None or (
-                base.has_files and set(base.files) <= whole
-            )
-            cur = self._rebase(base, head, replaced, full)
+            cur = self._rebase(base, head, replaced, whole, new_n_buckets is not None)
         raw = json.loads(json.dumps(cur.raw))  # deep copy
         version = cur.version + 1
         raw["version"] = version
         raw["parent"] = cur.version
-        if new_properties:
-            # merged BEFORE the file store so a manifest-layout change
-            # (manifest_segment_buckets) takes effect in this commit —
-            # _store_files sees the parent/child width mismatch and
-            # rewrites every populated segment once
-            raw.setdefault("properties", {}).update(new_properties)
         if new_n_buckets is not None:
             raw["n_buckets"] = int(new_n_buckets)
         # new files are recorded under the schema they were written with
         # (base's, which a rebase over a schema change keeps)
         sv = base.schema_version
         changed_buckets = replaced | {int(b) for b in (new_files_by_bucket or {})}
-        parent_seg = cur.raw.get("files_segmented")
-        seg_width = int(
-            (raw.get("properties") or {}).get("manifest_segment_buckets", 0)
-            or 0
-        )
-        if (
-            parent_seg is not None
-            and int(parent_seg.get("width", 0)) == seg_width
-            and new_n_buckets is None
-        ):
-            # segmented partial load: a narrow commit reads ONLY the
-            # segments covering its touched buckets (each must be
-            # rewritten whole; the rest are reused by path) — metadata
-            # READS stay O(changed buckets), matching the O(changed)
-            # writes. A rescale (new_n_buckets) is a full rewrite and
-            # takes the full load below.
-            files = cur.covering_segments(changed_buckets)
-        else:
-            # inline manifests, manifest-layout changes, and rescales
-            # need the complete listing. Inner lists are never mutated
-            # below (pops and re-bindings only), so sharing them with
-            # the parent snapshot's cache is safe.
-            files = dict(cur.files)
+        # partial load: only the segments covering the touched buckets
+        # (each is rewritten whole; the rest are reused by path), so
+        # metadata READS stay O(changed), matching the writes. A rescale
+        # touches every bucket and so loads them all. Inner lists are
+        # never mutated below (pops and re-bindings only).
+        files = cur.covering_segments(changed_buckets)
         # pre-mutation entries of the touched buckets — the base of the
         # removed-files computation (never re-read cur.files: that
         # would force a full segment load)
@@ -803,22 +761,9 @@ class LakeTable:
                 else:
                     files.pop(int(b))
         for b, paths in (new_files_by_bucket or {}).items():
-            normalized = []
-            for p in paths:
-                if not isinstance(p, tuple):
-                    p = (p, 0)
-                # pad to (path, size, min_seq, max_seq, key_unique,
-                # min_key, max_key); short tuples (no current engine
-                # path emits them — list_written_files always records
-                # all seven) default to key_unique=FALSE: forcing the
-                # MoR fold is always sound, whereas assuming uniqueness
-                # for an unknown writer re-opens the round-4 fold-skip
-                # bug for e.g. pre-round-5 map-only appends
-                p = p + (None, None, False, None, None)[len(p) - 2 :]
-                normalized.append(p)
             entries = []
             for p, sz, mn, mx, ku, kmn, kmx in sorted(
-                normalized, key=lambda t: (t[0], t[1])
+                paths, key=lambda t: (t[0], t[1])
             ):
                 e = {
                     "path": p,
@@ -829,7 +774,7 @@ class LakeTable:
                 }
                 if not ku:
                     # stored only when False: absent == key-unique,
-                    # keeping old snapshots readable and the JSON small
+                    # keeping the JSON small
                     e["key_unique"] = False
                 if kmn is not None and kmx is not None:
                     e["min_key"] = kmn
@@ -944,25 +889,39 @@ class LakeTable:
                 applied_update=applied_update,
                 summary=summary,
                 new_n_buckets=new_n_buckets,
-                new_properties=new_properties,
             )
         return Snapshot(version, raw)
 
     def _rebase(
-        self, base: Snapshot, head: int, replaced: set[int], full: bool
+        self,
+        base: Snapshot,
+        head: int,
+        replaced: set[int],
+        whole: set[int],
+        rescale: bool,
     ) -> Snapshot:
         """Snapshot ``head`` as the parent of a commit computed from
-        ``base`` that replaces ``replaced`` buckets (every one if
-        ``full``), re-evolved like ``base`` — or ConcurrentBucketConflict
-        when a version in between makes that unsound (see :meth:`commit`)."""
+        ``base`` that replaces ``replaced`` buckets (``whole`` of them
+        entirely; a full rewrite when that is every bucket of ``base``,
+        or a ``rescale``), re-evolved like ``base`` — or
+        ConcurrentBucketConflict when a version in between makes that
+        unsound (see :meth:`commit`)."""
         sv = None if base.evolution is None else base.evolution[3]
+        full = None
         for v in range(base.version + 1, head + 1):
             try:
                 snap = self.snapshot(v)
+                if full is None:
+                    # base's listing is read only once a successor
+                    # exists; expiry may have taken both
+                    full = rescale or bool(
+                        whole and base.has_files and set(base.files) <= whole
+                    )
             except FileNotFoundError:
                 raise ConcurrentBucketConflict(
-                    f"snapshot {v} after this commit's base {base.version} "
-                    "was expired; re-run against the new snapshot"
+                    f"snapshot {v} after this commit's base {base.version}, "
+                    "or the base's manifest, was expired; re-run against "
+                    "the new snapshot"
                 ) from None
             if snap.n_buckets != base.n_buckets:
                 raise ConcurrentBucketConflict(
@@ -1280,7 +1239,7 @@ class LakeTable:
             )
         want = None if buckets is None else {int(b) for b in buckets}
         # bucket-pruned reads open only the manifest segments covering
-        # the wanted buckets (no-op on inline manifests)
+        # the wanted buckets
         source = snap.files if want is None else snap.files_for(want)
         selected: dict[int, list[dict]] = {}
         for b, entries in source.items():

@@ -258,7 +258,7 @@ def run_stream(
             )
             # only buckets the batch just touched can have grown — scan
             # those in the batch's own commit, not the whole table
-            # (O(changed segments) on segmented manifests; a bucket never
+            # (O(changed segments) of manifest reads; a bucket never
             # touched again never re-fats, so nothing is missed)
             snap = res.merge.snapshot
             fat = [

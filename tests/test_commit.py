@@ -1,9 +1,11 @@
 """The commit rule, with no Spark: ``LakeTable.commit(base)`` publishes
 on top of the snapshot the writer read, rebases over intervening commits
 that cannot have changed its input, and raises otherwise. Data files are
-fake ``(path, size)`` tuples; only the manifests are real."""
+fake (:func:`tests.fakes.fake_file`); only the manifests are real."""
 
+import json
 import os
+import stat
 
 import pytest
 from pyspark.sql import types as T
@@ -13,9 +15,12 @@ from nebula_spark.lake.maintenance import expire_snapshots, vacuum_orphans
 from nebula_spark.lake.table import (
     HEAD_FILE,
     INTERNAL_FIELDS,
+    META_DIR,
+    SNAP_FMT,
     TMP_MARK,
     ConcurrentBucketConflict,
 )
+from tests.fakes import fake_file
 
 _SCHEMA = T.StructType([
     T.StructField("k", T.StringType(), False),
@@ -30,7 +35,7 @@ def _table(tmp_path):
 def _append(table, path, bucket=0, base=None):
     return table.commit(
         base or table.snapshot(),
-        new_files_by_bucket={bucket: [(path, 1)]},
+        new_files_by_bucket={bucket: [fake_file(path)]},
         summary={"operation": "append"},
     )
 
@@ -61,8 +66,8 @@ def test_stray_snapshot_ahead_of_head_is_rolled_forward(tmp_path):
 
 def test_failure_after_temp_write_leaves_table_writable(tmp_path, monkeypatch):
     """A publish that fails once its snapshot bytes are written (here:
-    the first fsync) leaves no version behind, no stray snapshot, and a
-    table the next commit lands on."""
+    the fsync of the snapshot's temp file) leaves no version behind, no
+    stray snapshot, and a table the next commit lands on."""
     table = _table(tmp_path)
     _append(table, "/fake/f1.parquet")
     before = _meta_files(table)
@@ -70,8 +75,12 @@ def test_failure_after_temp_write_leaves_table_writable(tmp_path, monkeypatch):
     calls = []
 
     def failing_fsync(fd):
-        calls.append(fd)
-        if len(calls) == 1:
+        ino = os.fstat(fd).st_ino
+        if not calls and any(
+            TMP_MARK in n and os.stat(table._meta(n)).st_ino == ino
+            for n in os.listdir(table._meta())
+        ):
+            calls.append(fd)
             raise OSError("injected fsync failure")
         return real_fsync(fd)
 
@@ -113,7 +122,7 @@ def test_compaction_conflicts_with_append_and_retry_keeps_both(tmp_path):
     planned = table.snapshot()
     _append(table, "/fake/appended.parquet")
     compaction = dict(
-        new_files_by_bucket={0: [("/fake/f3.parquet", 2)]},
+        new_files_by_bucket={0: [fake_file("/fake/f3.parquet", 2)]},
         replaced_buckets=[0],
         summary={"operation": "compact"},
     )
@@ -136,7 +145,7 @@ def test_disjoint_replace_rebases_over_append(tmp_path):
     _append(table, "/fake/b1-new.parquet", bucket=1)
     snap = table.commit(
         planned,
-        new_files_by_bucket={0: [("/fake/b0-rewritten.parquet", 1)]},
+        new_files_by_bucket={0: [fake_file("/fake/b0-rewritten.parquet")]},
         replaced_buckets=[0],
     )
     assert snap.version == 4 and snap.raw["parent"] == 3
@@ -182,3 +191,90 @@ def test_stale_base_past_expired_snapshots_never_publishes_below_head(tmp_path):
         _append(table, "/fake/late.parquet", base=stale)
     assert table.snapshot().version == head
     assert _meta_files(table) == versions
+
+
+def test_create_crash_before_head_leaves_a_loadable_table(tmp_path, monkeypatch):
+    """A crash between publishing snap-0 and writing the first HEAD
+    leaves a table, not a wedged directory: it exists, loads, and its
+    next commit lands at v1."""
+    def crash(*args, **kwargs):
+        raise OSError("injected crash before HEAD")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="injected"):
+        _table(tmp_path)
+    monkeypatch.undo()
+    root = str(tmp_path / "t")
+    assert not os.path.exists(os.path.join(root, META_DIR, HEAD_FILE))
+    assert LakeTable.exists(root)
+    table = LakeTable.load(root)
+    assert table.snapshot().version == 0
+    assert _append(table, "/fake/f1.parquet").version == 1
+    assert _paths(table.snapshot()) == ["/fake/f1.parquet"]
+
+
+def test_create_over_empty_meta_dir_and_never_over_a_table(tmp_path):
+    """A meta dir holding no snapshot is no table: create succeeds over
+    it. A real table is refused, with or without its HEAD hint."""
+    os.makedirs(tmp_path / "t" / META_DIR)
+    table = _table(tmp_path)
+    assert table.snapshot().version == 0
+    with pytest.raises(FileExistsError):
+        _table(tmp_path)
+    os.remove(table._meta(HEAD_FILE))
+    with pytest.raises(FileExistsError):
+        _table(tmp_path)
+    assert table.snapshot().version == 0
+
+
+def test_segments_dir_fsynced_once_before_snapshot_link(tmp_path, monkeypatch):
+    """A commit's new segment files are made durable by one fsync of the
+    segments dir, before the snapshot naming them is linked into place;
+    a commit writing no segment skips it."""
+    table = _table(tmp_path)
+    seg_ino = os.stat(table._meta("segments")).st_ino
+    meta_ino = os.stat(table._meta()).st_ino
+    events = []
+    real_fsync, real_link = os.fsync, os.link
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        if stat.S_ISDIR(st.st_mode):
+            events.append({seg_ino: "fsync segments", meta_ino: "fsync meta"}[st.st_ino])
+        return real_fsync(fd)
+
+    def link(src, dst, *args, **kwargs):
+        events.append("link " + os.path.basename(dst))
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "link", link)
+    # buckets 0 and 2 sit in different segments (width 2 at 4 buckets)
+    table.commit(
+        table.snapshot(),
+        new_files_by_bucket={
+            0: [fake_file("/fake/b0.parquet")], 2: [fake_file("/fake/b2.parquet")]
+        },
+    )
+    table.add_column("lang", "string")
+    monkeypatch.undo()
+    assert len(table.snapshot(1).raw["files_segmented"]["segments"]) == 2
+    assert events == [
+        "fsync segments", "link " + SNAP_FMT % 1, "fsync meta",
+        "link " + SNAP_FMT % 2, "fsync meta",
+    ]
+
+
+def test_v1_snapshot_is_refused(tmp_path):
+    """Format v1 snapshots (file listings inline) are not read: the
+    table must be re-created."""
+    table = _table(tmp_path)
+    path = table._meta(SNAP_FMT % 0)
+    with open(path) as f:
+        raw = json.load(f)
+    del raw["files_segmented"]
+    raw.update(format_version=1, files={})
+    with open(path, "w") as f:
+        json.dump(raw, f)
+    with pytest.raises(ValueError, match="re-create the table"):
+        table.snapshot()

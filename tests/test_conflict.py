@@ -7,6 +7,7 @@ from pyspark.sql import functions as F, types as T
 from nebula_spark.cdc.binlog import BINLOG_SCHEMA, SEQUENCE_SCHEMA, gen_binlog
 from nebula_spark.lake import LakeTable, append_into, merge_into
 from nebula_spark.lake.table import ConcurrentBucketConflict
+from tests.fakes import fake_file
 
 
 def _batch(spark, rows):
@@ -271,7 +272,9 @@ def _race_commit(table, racer, loser_bucket, racer_bucket, racer_files):
     try:
         return table.commit(
             table.snapshot(),
-            new_files_by_bucket={loser_bucket: [("/fake/loser.parquet", 1)]},
+            new_files_by_bucket={
+                loser_bucket: [fake_file("/fake/loser.parquet")]
+            },
             replaced_buckets=[loser_bucket],
             summary={"operation": "loser"},
         )
@@ -300,12 +303,16 @@ def test_commit_race_on_same_bucket_raises(spark, tmp_path):
     )
 
     with pytest.raises(ConcurrentBucketConflict):
-        _race_commit(table, racer, bucket, bucket, [("/fake/racer.parquet", 1)])
+        _race_commit(
+            table, racer, bucket, bucket, [fake_file("/fake/racer.parquet")]
+        )
 
     # disjoint buckets: the rebase lands and keeps BOTH writers' files
     other = (bucket + 1) % 4
     head_before = table._head_version()
-    snap = _race_commit(table, racer, other, bucket, [("/fake/racer2.parquet", 1)])
+    snap = _race_commit(
+        table, racer, other, bucket, [fake_file("/fake/racer2.parquet")]
+    )
     assert snap.version > head_before + 1  # rebased past the racer
     paths = [e["path"] for fs in snap.files.values() for e in fs]
     assert "/fake/racer2.parquet" in paths and "/fake/loser.parquet" in paths

@@ -6,6 +6,8 @@ typical CDC feed with monotonic primary keys: fresh batches touch
 recent id ranges, so old generations prune away and per-batch cost
 stops growing with bucket history."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F, types as T
 
@@ -161,23 +163,21 @@ def test_pruned_merge_conflicts_with_concurrent_compaction(spark, tmp_path):
 def test_prunable_files_never_prunes_without_bounds(spark, tmp_path):
     """Entries lacking key bounds (legacy snapshots, exotic key types)
     must never be pruned."""
-    # explicitly INLINE manifest (segment width 0): this test edits
-    # raw["files"] to simulate a pre-key-bounds legacy snapshot
-    table = LakeTable.create(
-        str(tmp_path / "t"),
-        _SCHEMA,
-        "k",
-        n_buckets=1,
-        properties={"manifest_segment_buckets": 0},
-    )
+    table = LakeTable.create(str(tmp_path / "t"), _SCHEMA, "k", n_buckets=1)
     merge_into(spark, table, _batch(spark, ["a", "b"], 0), epoch=0)
-    # simulate a legacy manifest entry: strip the recorded bounds
-    snap = table.snapshot()
-    for es in snap.raw["files"].values():
+    # simulate entries without bounds: strip them in the one segment file
+    (seg,) = table.snapshot().raw["files_segmented"]["segments"].values()
+    with open(seg) as f:
+        content = json.load(f)
+    for es in content["files"].values():
         for e in es:
             e.pop("min_key", None)
             e.pop("max_key", None)
-    table._write_snapshot(snap.version + 1, {**snap.raw, "version": snap.version + 1, "parent": snap.version})
+    with open(seg, "w") as f:
+        json.dump(content, f)
+    assert all(
+        "min_key" not in e for es in table.snapshot().files.values() for e in es
+    )
     assert table.prunable_files([0], {0: ("x", "z")}) == {}
     # and unknown batch bounds prune nothing either
     assert table.prunable_files([0], {0: (None, None)}) == {}

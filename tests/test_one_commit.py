@@ -11,6 +11,7 @@ from nebula_spark.cdc.apply import apply_changes
 from nebula_spark.cdc.binlog import SEQUENCE_SCHEMA
 from nebula_spark.lake import LakeTable
 from nebula_spark.lake.table import INTERNAL_FIELDS, ConcurrentBucketConflict
+from tests.fakes import fake_file
 
 
 def _calls_on(monkeypatch, table, name):
@@ -121,7 +122,7 @@ def test_commit_against_head_parses_no_snapshot(tmp_path, monkeypatch):
     base = table.snapshot()
     parses = _calls_on(monkeypatch, table, "snapshot")
     snap = table.commit(
-        base, new_files_by_bucket={0: [("/fake/a.parquet", 1)]}
+        base, new_files_by_bucket={0: [fake_file("/fake/a.parquet")]}
     )
     wider = T.StructType(
         list(snap.user_schema.fields)

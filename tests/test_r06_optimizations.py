@@ -96,13 +96,7 @@ def test_changed_buckets_recorded_no_segment_reads(spark, tmp_path, monkeypatch)
     version — O(commits × segments) driver I/O on a long window)."""
     import builtins
 
-    table = LakeTable.create(
-        str(tmp_path / "t"),
-        _SCHEMA,
-        "k",
-        n_buckets=8,
-        properties={"manifest_segment_buckets": 2},
-    )
+    table = LakeTable.create(str(tmp_path / "t"), _SCHEMA, "k", n_buckets=8)
     keys = [f"k{i:04d}" for i in range(200)]
     merge_into(spark, table, _batch(spark, keys, 0), epoch=0)
     v0 = table.snapshot().version
@@ -157,24 +151,6 @@ def test_change_feed_null_deleted_flag(spark, tmp_path):
     assert feed == {"a": "update", "b": "delete"}
 
 
-def test_legacy_short_file_tuples_default_non_key_unique(tmp_path):
-    """A commit fed bare (path, size) tuples — no current engine path
-    emits them — must record key_unique=False: forcing the MoR read
-    fold is always sound; assuming uniqueness for an unknown writer
-    re-opens the round-4 fold-skip unsoundness."""
-    table = LakeTable.create(
-        str(tmp_path / "t"), _SCHEMA, "k", n_buckets=2,
-        properties={"merge_mode": "mor"},
-    )
-    table.commit(
-        table.snapshot(),
-        new_files_by_bucket={0: [("/fake/legacy.parquet", 1)]},
-        summary={"operation": "test"},
-    )
-    entry = table.snapshot().files[0][0]
-    assert entry.get("key_unique", True) is False
-
-
 def test_vacuum_liveness_opens_only_head_segments(spark, tmp_path, monkeypatch):
     """vacuum_orphans derives liveness from HEAD's listing + the
     removed/removed_segments bookkeeping — on a segmented table it must
@@ -186,13 +162,7 @@ def test_vacuum_liveness_opens_only_head_segments(spark, tmp_path, monkeypatch):
 
     from nebula_spark.lake.maintenance import vacuum_orphans
 
-    table = LakeTable.create(
-        str(tmp_path / "t"),
-        _SCHEMA,
-        "k",
-        n_buckets=8,
-        properties={"manifest_segment_buckets": 2},
-    )
+    table = LakeTable.create(str(tmp_path / "t"), _SCHEMA, "k", n_buckets=8)
     keys = [f"k{i:04d}" for i in range(100)]
     for e in range(4):
         merge_into(

@@ -1,10 +1,9 @@
-"""Segmented manifests: with table property
-``manifest_segment_buckets`` = W, the snapshot JSON carries only a
-{segment_id: path} map and per-bucket file entries live in immutable
-side JSONs, W buckets per segment. A commit rewrites only the segments
-whose buckets changed (Iceberg's manifest reuse) — per-commit metadata
-writes are O(changed buckets) instead of O(all files), the remaining
-driver-side O(table) cost at 4096+ buckets. Replaced segments are
+"""Manifest segments, the one file-listing layout: the snapshot JSON
+carries only a {segment_id: path} map and per-bucket file entries live
+in immutable side JSONs, W = √n_buckets buckets per segment. A commit
+rewrites only the segments whose buckets changed (Iceberg's manifest
+reuse) — per-commit metadata writes are O(changed segments) instead of
+O(all files), and the snapshot holds √n paths. Replaced segments are
 tracked like removed data files so expire/vacuum stay O(changed)."""
 
 import json
@@ -39,14 +38,8 @@ def _batch(spark, keys, seq0, op="INSERT", val=lambda i: i):
     )
 
 
-def _seg_table(tmp_path, n_buckets=16, width=4, **props):
-    return LakeTable.create(
-        str(tmp_path / "t"),
-        _SCHEMA,
-        "k",
-        n_buckets=n_buckets,
-        properties={"manifest_segment_buckets": width, **props},
-    )
+def _seg_table(tmp_path, n_buckets=16):
+    return LakeTable.create(str(tmp_path / "t"), _SCHEMA, "k", n_buckets=n_buckets)
 
 
 def test_segmented_merge_state_and_snapshot_shape(spark, tmp_path):
@@ -138,7 +131,7 @@ def test_segmented_expire_and_vacuum(spark, tmp_path):
 
 
 def test_segmented_compact_rescale_evolution(spark, tmp_path):
-    table = _seg_table(tmp_path, n_buckets=8, width=2)
+    table = _seg_table(tmp_path, n_buckets=8)
     keys = [f"k{i:05d}" for i in range(300)]
     merge_into(spark, table, _batch(spark, keys, 0), epoch=0)
     merge_into(
@@ -181,7 +174,7 @@ def test_segmented_mor_and_lookup(spark, tmp_path):
         _SCHEMA,
         "k",
         n_buckets=4,
-        properties={"manifest_segment_buckets": 2, "merge_mode": "mor"},
+        properties={"merge_mode": "mor"},
     )
     keys = [f"k{i:05d}" for i in range(100)]
     merge_into(spark, table, _batch(spark, keys, 0), epoch=0)
@@ -223,38 +216,37 @@ def test_narrow_commit_never_full_loads_segments(spark, tmp_path, monkeypatch):
     assert got == oracle
 
 
-def test_wide_tables_segment_by_default(spark, tmp_path):
-    wide = LakeTable.create(str(tmp_path / "w"), _SCHEMA, "k", n_buckets=256)
-    assert wide.snapshot().raw["files_segmented"]["width"] == 64
-    narrow = LakeTable.create(str(tmp_path / "n"), _SCHEMA, "k", n_buckets=64)
-    assert "files_segmented" not in narrow.snapshot().raw
-    forced = LakeTable.create(
-        str(tmp_path / "f"),
-        _SCHEMA,
-        "k",
-        n_buckets=256,
-        properties={"manifest_segment_buckets": 0},
-    )
-    assert "files_segmented" not in forced.snapshot().raw
-    # and the default-segmented wide table round-trips data
+def test_segment_width_is_isqrt_of_buckets(spark, tmp_path):
+    """Every table segments its listing at √n_buckets, and no snapshot
+    lists files inline."""
+    for n, width in [(1, 1), (4, 2), (8, 2), (64, 8), (256, 16), (4096, 64)]:
+        t = LakeTable.create(str(tmp_path / f"t{n}"), _SCHEMA, "k", n_buckets=n)
+        raw = t.snapshot().raw
+        assert raw["files_segmented"] == {"width": width, "segments": {}}
+        assert "files" not in raw
+    wide = LakeTable.load(str(tmp_path / "t256"))
     merge_into(spark, wide, _batch(spark, [f"k{i}" for i in range(50)], 0), epoch=0)
+    assert "files" not in wide.snapshot().raw
     assert wide.read(spark).count() == 50
 
 
 def test_rescale_past_threshold_adopts_segmented(spark, tmp_path):
-    """Growing a narrow inline table past 256 buckets switches it to
-    segmented manifests in the same (full-rewrite) rescale commit;
-    state is untouched and later narrow commits reuse segments."""
+    """Rescaling 8 → 256 buckets re-segments the listing from width 2 to
+    16 in the same (full-rewrite) commit; state is untouched and later
+    narrow commits reuse segments."""
     table = LakeTable.create(str(tmp_path / "t"), _SCHEMA, "k", n_buckets=8)
     keys = [f"k{i:05d}" for i in range(300)]
     merge_into(spark, table, _batch(spark, keys, 0), epoch=0)
-    assert "files_segmented" not in table.snapshot().raw
+    old = table.snapshot().raw["files_segmented"]
+    assert old["width"] == 2
 
     rescale(spark, table, 256)
     snap = table.snapshot()
     assert snap.raw["n_buckets"] == 256
-    assert snap.raw["files_segmented"]["width"] == 64
+    assert snap.raw["files_segmented"]["width"] == 16
     assert "files" not in snap.raw
+    # every width-2 parent segment dies with the rescale
+    assert snap.raw["removed_segments"] == sorted(old["segments"].values())
     got = {r["k"]: r["v"] for r in table.read(spark).collect()}
     assert got == {k: i for i, k in enumerate(keys)}
 
@@ -263,48 +255,3 @@ def test_rescale_past_threshold_adopts_segmented(spark, tmp_path):
     merge_into(spark, table, _batch(spark, [keys[0]], 1000, val=lambda i: -1), epoch=1)
     after = dict(table.snapshot().raw["files_segmented"]["segments"])
     assert any(before.get(s) == p for s, p in after.items())
-
-
-def test_set_segmentation_roundtrip(spark, tmp_path):
-    """Metadata-only layout switches: inline → segmented → new width →
-    inline, state identical throughout, no data file touched, dead
-    segments recorded for O(changed) expiry."""
-    from nebula_spark.lake.maintenance import set_segmentation
-
-    table = LakeTable.create(
-        str(tmp_path / "t"),
-        _SCHEMA,
-        "k",
-        n_buckets=16,
-        properties={"manifest_segment_buckets": 0},
-    )
-    keys = [f"k{i:05d}" for i in range(300)]
-    merge_into(spark, table, _batch(spark, keys, 0), epoch=0)
-    oracle = {k: i for i, k in enumerate(keys)}
-    data_paths = {
-        e["path"] for fs in table.snapshot().files.values() for e in fs
-    }
-
-    r = set_segmentation(table, 4)
-    assert r["changed"] and table.snapshot().raw["files_segmented"]["width"] == 4
-    assert {r_["k"]: r_["v"] for r_ in table.read(spark).collect()} == oracle
-
-    r = set_segmentation(table, 8)  # width change rewrites segments once
-    segs8 = table.snapshot().raw["files_segmented"]
-    assert int(segs8["width"]) == 8
-    assert table.snapshot().raw["removed_segments"]  # old width-4 files die
-    assert {r_["k"]: r_["v"] for r_ in table.read(spark).collect()} == oracle
-
-    r = set_segmentation(table, 0)  # back to inline
-    snap = table.snapshot()
-    assert "files_segmented" not in snap.raw and "files" in snap.raw
-    assert sorted(snap.raw["removed_segments"]) == sorted(segs8["segments"].values())
-    assert {r_["k"]: r_["v"] for r_ in table.read(spark).collect()} == oracle
-    # no data file was rewritten by any of the three switches
-    assert {e["path"] for fs in snap.files.values() for e in fs} == data_paths
-    # and a no-op returns unchanged
-    assert set_segmentation(table, 0) == {
-        "changed": False,
-        "width": 0,
-        "version": snap.version,
-    }
