@@ -16,16 +16,21 @@ purges all tombstones (only valid once the change log is fully drained).
 
 from __future__ import annotations
 
+import os
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F, types as T
 
 from nebula_spark.lake.table import (
     DELETED_COL,
+    INTERNAL_FIELDS,
     SEGMENTS_DIR,
     SEQ_COL,
     TMP_MARK,
     LakeTable,
+    bucket_expr,
+    published_versions,
+    type_from_ddl,
 )
 
 
@@ -89,25 +94,17 @@ def compact(
             ~(F.col(DELETED_COL) & (F.col(SEQ_COL) < F.lit(purge_tombstone_watermark)))
         )
     df = table.bucket_of(df, snap)
-
-    commit_dir = table.new_commit_dir()
-    # repartition by the KEY into exactly n_buckets partitions: Spark's
-    # HashPartitioning shares bucket_expr's Murmur3, so partition id ==
-    # bucket id — one bucket per write task, one (or maxRecordsPerFile-
-    # rolled) file per bucket. Hashing the _bucket VALUE instead lands
-    # several buckets per task and leaves ~1/e of tasks empty
-    # (guide §2.5, synthetic keys with too few distinct values).
+    # one bucket per write task, one (or max_file_rows-rolled) file per
+    # bucket (see LakeTable.write_files)
     df = df.repartition(snap.n_buckets, F.col(snap.key_col))
     if cluster_by_key:
         # a task holds exactly one bucket now, but sorting by
         # (_bucket, key) stays correct if a future layout ever changes
         # that — every rolled file is a sorted contiguous key range
         df = df.sortWithinPartitions("_bucket", snap.key_col)
-    writer = df.write.partitionBy("_bucket").mode("append")
-    if max_file_rows is not None:
-        writer = writer.option("maxRecordsPerFile", int(max_file_rows))
-    writer.parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=snap.key_col)
+    new_files = table.write_files(
+        df, key_col=snap.key_col, max_file_rows=max_file_rows
+    )
     new_snap = table.commit(
         snap,
         new_files_by_bucket=new_files,
@@ -144,8 +141,6 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
     writer whose base predates the rescale conflicts the same way
     instead of writing files with meaningless bucket ids (see
     LakeTable.commit)."""
-    from nebula_spark.lake.table import bucket_expr
-
     t0 = time.time()
     snap = table.snapshot()
     old_nb, key = snap.n_buckets, snap.key_col
@@ -153,13 +148,10 @@ def rescale(spark: SparkSession, table: LakeTable, new_n_buckets: int) -> dict:
         return {"rescaled": False, "n_buckets": old_nb, "version": snap.version}
     df = table.read(spark, version=snap, include_internal=True)
     df = df.withColumn("_bucket", bucket_expr(key, int(new_n_buckets)))
-    commit_dir = table.new_commit_dir()
-    # key-hash repartition at the NEW width: partition id == new bucket
-    # id (see compact) — one write task per new bucket
-    df.repartition(int(new_n_buckets), F.col(key)).write.partitionBy(
-        "_bucket"
-    ).mode("append").parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
+    # key-hash repartition at the NEW width: one write task per new bucket
+    new_files = table.write_files(
+        df.repartition(int(new_n_buckets), F.col(key)), key_col=key
+    )
     new_snap = table.commit(
         snap,
         new_files_by_bucket=new_files,
@@ -203,11 +195,7 @@ def migrate_column(
     precision, so strictness needs an explicit check). Same atomicity
     + concurrency posture as rescale: a full rewrite committed against
     the snapshot it read, so any commit in between conflicts cleanly."""
-    from pyspark.sql import functions as F, types as T
-
     if isinstance(new_type, str):
-        from nebula_spark.lake.table import type_from_ddl
-
         new_type = type_from_ddl(new_type)
     t0 = time.time()
     snap = table.snapshot()
@@ -246,8 +234,6 @@ def migrate_column(
                 f"{new_type.simpleString()}"
             )
     df = df.withColumn(column, conv)
-    from nebula_spark.lake.table import INTERNAL_FIELDS, bucket_expr
-
     df = df.withColumn("_bucket", bucket_expr(key, nb))
 
     new_user = T.StructType(
@@ -258,12 +244,7 @@ def migrate_column(
             for f in user.fields
         ]
     )
-    commit_dir = table.new_commit_dir()
-    # one write task per bucket (see compact's note)
-    df.repartition(nb, F.col(key)).write.partitionBy("_bucket").mode(
-        "append"
-    ).parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
+    new_files = table.write_files(df.repartition(nb, F.col(key)), key_col=key)
     new_snap = table.commit(
         snap.evolve(T.StructType(list(new_user.fields) + INTERNAL_FIELDS)),
         new_files_by_bucket=new_files,
@@ -297,21 +278,19 @@ def expire_snapshots(table: LakeTable, keep_last: int = 10) -> int:
     lists. Only snapshots below the boundary are even opened; the
     retained ones (including HEAD's full file listing) are never
     walked."""
-    import os
-
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be at least 1 (HEAD), got {keep_last}")
     head = table.snapshot().version
     boundary = max(0, head - keep_last + 1)  # first RETAINED version
     meta = table._meta()
-    all_versions = {
-        int(f[5:17]) for f in os.listdir(meta) if f.startswith("snap-")
-    }
-    expiring = sorted(v for v in all_versions if v < boundary)
+    all_versions = published_versions(meta)
+    expiring = [v for v in all_versions if v < boundary]
     if not expiring:
         return 0
     # union of removed-lists over versions <= boundary: a file removed
     # at v was referenced by snapshots [birth, v-1] only, all expired
     dead: set[str] = set()
-    for v in sorted(v for v in all_versions if v <= boundary):
+    for v in (v for v in all_versions if v <= boundary):
         raw = table.snapshot(v).raw
         dead.update(raw.get("removed", []))
         # replaced manifest segments die with their last referencing
@@ -348,15 +327,10 @@ def vacuum_orphans(table: LakeTable, grace_s: float = 86400.0) -> int:
     snapshot, and deleting them would corrupt it. Keep the grace
     comfortably above the longest plausible commit. Returns files
     removed; empty commit dirs are pruned too."""
-    import os
-    import time
-
     live: set[str] = set()
     live_segs: set[str] = set()
     meta = table._meta()
-    versions = sorted(
-        int(f[5:17]) for f in os.listdir(meta) if f.startswith("snap-")
-    )
+    versions = published_versions(meta)
     for v in versions:
         raw = table.snapshot(v).raw
         live.update(os.path.abspath(p) for p in raw.get("removed", ()))

@@ -35,10 +35,7 @@ exactly-once rather than at-least-once.
 
 from __future__ import annotations
 
-import os
-import shutil
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -50,48 +47,11 @@ from nebula_spark.lake.table import (
     LakeTable,
     Snapshot,
     align_to_schema,
+    bucket_expr,
+    bucket_session,
 )
 
 DELETE_OP = "DELETE"
-
-
-@contextmanager
-def _bucket_aligned_shuffle(spark: SparkSession, n_buckets: int):
-    """Run a copy-on-write merge's jobs with shuffle width == the
-    table's bucket count (Iceberg's ``write.distribution-mode=hash``):
-    ``bucket_expr`` is pmod over the SAME Murmur3 hash HashPartitioning
-    uses, so with the widths equal every shuffle output partition holds
-    exactly ONE bucket — each write task streams one bucket directory,
-    producing one well-sized file per bucket per commit instead of
-    (shuffle.partitions / n_buckets) fragments, and the dedup/fold/join
-    exchanges all land directly on the write layout (no residual
-    repartition, fewer+larger shuffle blocks, guide §2.2). This is
-    sized by the TABLE's declared layout (4096+ buckets at 100 TB), not
-    by the local core count, and AQE's partition coalescing still
-    merges undersized partitions when a small batch meets a wide
-    table. ``NEBULA_SHUFFLE_PARTITIONS`` (the scaling-run pin: N and 4N
-    cores must shuffle identically) takes precedence when set.
-
-    The conf is set on ``spark``, the caller's session, so it reaches
-    only plans of frames that belong to that session. Inside
-    ``foreachBatch`` the batch frame belongs to the stream's cloned
-    session: there the stats job plans at that session's default width,
-    and only the resolve, built on the target read through ``spark``,
-    gets ``n_buckets``. A merge-on-read append does not run under this
-    block: it sets its width itself, with one ``repartition(n_buckets,
-    key)`` in front of its in-batch dedup, so it writes one file per
-    bucket in any session."""
-    key = "spark.sql.shuffle.partitions"
-    if os.environ.get("NEBULA_SHUFFLE_PARTITIONS"):
-        yield
-        return
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(n_buckets))
-    try:
-        yield
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
 
 
 def _as_table_rows(batch: DataFrame, snap: Snapshot, op_col: str, seq_col: str) -> DataFrame:
@@ -148,8 +108,11 @@ def _resolve(
     snap = table._pinned(target_version)
     key = snap.key_col
     b = _as_table_rows(deduped, snap, op_col, seq_col)
+    # the target is the left side of every plan below, so the whole
+    # resolve and its write plan in the target's session, every
+    # exchange at the table's width
     target = table.read(
-        spark,
+        bucket_session(spark, snap.n_buckets),
         buckets=affected,
         include_internal=True,
         exclude_paths=exclude_paths,
@@ -425,18 +388,7 @@ def append_into(
         df = df.withColumn(DELETED_COL, F.lit(False))
     aligned = align_to_schema(df, snap.schema)
     out = table.bucket_of(aligned, snap)
-    commit_dir = table.new_commit_dir()
-    # repartition by the KEY into exactly n_buckets partitions: Spark's
-    # HashPartitioning uses the same Murmur3 hash as bucket_expr, so
-    # partition id == bucket id — every write task streams exactly one
-    # bucket directory. The old repartition("_bucket") hashed the
-    # ≤ n_buckets distinct bucket VALUES into the session shuffle width
-    # (guide §2.5, synthetic keys with too few distinct values): ~1/e
-    # of tasks empty, others writing several buckets.
-    out.repartition(nb, F.col(key)).write.partitionBy("_bucket").mode(
-        "append"
-    ).parquet(commit_dir)
-    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
+    new_files = table.write_files(out.repartition(nb, F.col(key)), key_col=key)
     applied = {str(epoch): {"partitions": {}, "events": None}} if epoch is not None else None
     if not new_files and applied is None:
         return -1
@@ -544,75 +496,76 @@ def merge_into(
         )
         summary = {"operation": "merge-append" if new_files else "merge-empty"}
     else:
-        with _bucket_aligned_shuffle(spark, nb):
-            # --- plan. The stats job (cheap, column-pruned: key/op/seq/
-            # partition only — no dedup, no arrays): touched buckets,
-            # event counters, per-source-partition high-water marks for
-            # lineage, and per-bucket key bounds for file pruning.
-            grain = [f"pmod(hash({_q(key)}), {nb}) AS _bucket"] + (
-                [_q(lineage)] if lineage else []
+        # --- plan. The stats job (cheap, column-pruned: key/op/seq/
+        # partition only — no dedup, no arrays): touched buckets,
+        # event counters, per-source-partition high-water marks for
+        # lineage, and per-bucket key bounds for file pruning. It
+        # plans at the batch's own session width; its output is a few
+        # rows per bucket.
+        grain = [bucket_expr(key, nb).alias("_bucket")] + (
+            [F.expr(_q(lineage))] if lineage else []
+        )
+        stats = batch.groupBy(*grain).agg(*[
+            F.expr(e) for e in (
+                "count(1) AS n",
+                f"sum(CAST({_q(op_col)} = '{DELETE_OP}' AS BIGINT)) AS n_del",
+                f"max({_q(seq_col)}) AS mx",
+                f"approx_count_distinct({_q(key)}) AS nk",
+                f"min({_q(key)}) AS kmin",
+                f"max({_q(key)}) AS kmax",
             )
-            stats = batch.groupBy(*[F.expr(g) for g in grain]).agg(*[
-                F.expr(e) for e in (
-                    "count(1) AS n",
-                    f"sum(CAST({_q(op_col)} = '{DELETE_OP}' AS BIGINT)) AS n_del",
-                    f"max({_q(seq_col)}) AS mx",
-                    f"approx_count_distinct({_q(key)}) AS nk",
-                    f"min({_q(key)}) AS kmin",
-                    f"max({_q(key)}) AS kmax",
-                )
-            ]).collect()
-            affected = sorted({int(r["_bucket"]) for r in stats})
-            key_bounds: dict[int, tuple] = {}
+        ]).collect()
+        affected = sorted({int(r["_bucket"]) for r in stats})
+        key_bounds: dict[int, tuple] = {}
+        for r in stats:
+            kb = int(r["_bucket"])
+            kmn, kmx = r["kmin"], r["kmax"]
+            cur = key_bounds.get(kb)
+            if kmn is None or kmx is None or (cur is not None and cur[0] is None):
+                key_bounds[kb] = (None, None)
+            elif cur is None:
+                key_bounds[kb] = (kmn, kmx)
+            else:
+                key_bounds[kb] = (min(cur[0], kmn), max(cur[1], kmx))
+        res.events_in = int(sum(r["n"] for r in stats))
+        res.rows_deleted = int(sum(r["n_del"] for r in stats))
+        res.rows_upserted = res.events_in - res.rows_deleted
+        # approx distinct keys, free in the same agg; summed per
+        # stats cell it can double-count a key spanning source
+        # partitions, so it stays a (tight) upper bound — good as
+        # the join threshold, honest as a metric
+        res.keys_touched = min(int(sum(r["nk"] for r in stats)), res.events_in)
+        res.buckets_touched = len(affected)
+        if lineage:
             for r in stats:
-                kb = int(r["_bucket"])
-                kmn, kmx = r["kmin"], r["kmax"]
-                cur = key_bounds.get(kb)
-                if kmn is None or kmx is None or (cur is not None and cur[0] is None):
-                    key_bounds[kb] = (None, None)
-                elif cur is None:
-                    key_bounds[kb] = (kmn, kmx)
-                else:
-                    key_bounds[kb] = (min(cur[0], kmn), max(cur[1], kmx))
-            res.events_in = int(sum(r["n"] for r in stats))
-            res.rows_deleted = int(sum(r["n_del"] for r in stats))
-            res.rows_upserted = res.events_in - res.rows_deleted
-            # approx distinct keys, free in the same agg; summed per
-            # stats cell it can double-count a key spanning source
-            # partitions, so it stays a (tight) upper bound — good as
-            # the join threshold, honest as a metric
-            res.keys_touched = min(int(sum(r["nk"] for r in stats)), res.events_in)
-            res.buckets_touched = len(affected)
-            if lineage:
-                for r in stats:
-                    pid = str(r[lineage])
-                    res.partitions[pid] = max(res.partitions.get(pid, -1), int(r["mx"]))
+                pid = str(r[lineage])
+                res.partitions[pid] = max(res.partitions.get(pid, -1), int(r["mx"]))
 
-            dedup, resolve = plan_merge(
-                merge_mode=snap.merge_mode,
-                conflict=conflict,
-                dedup_how=dedup_how,
-                resolve_strategy=resolve_strategy,
-                already_deduped=already_deduped,
-                events_in=res.events_in,
-                keys_touched=res.keys_touched,
-                # metadata only, paid only where the choice reads it
-                touched_bytes=(
-                    table.bucket_bytes(affected, snap)
-                    if resolve_strategy == "auto"
-                    else None
-                ),
+        dedup, resolve = plan_merge(
+            merge_mode=snap.merge_mode,
+            conflict=conflict,
+            dedup_how=dedup_how,
+            resolve_strategy=resolve_strategy,
+            already_deduped=already_deduped,
+            events_in=res.events_in,
+            keys_touched=res.keys_touched,
+            # metadata only, paid only where the choice reads it
+            touched_bytes=(
+                table.bucket_bytes(affected, snap)
+                if resolve_strategy == "auto"
+                else None
+            ),
+        )
+        deduped = batch if dedup is None else lww_dedup(
+            batch, key=key, seq=seq_col, how=dedup, first_writer_wins=fww
+        )
+        new_files, summary = None, {"operation": "merge-empty"}
+        if affected:
+            summary["operation"] = "merge"
+            new_files, replace, summary["files_kept"] = _rewrite_buckets(
+                spark, table, snap, deduped, res, affected, key_bounds,
+                resolve, conflict, on_rejected, op_col, seq_col,
             )
-            deduped = batch if dedup is None else lww_dedup(
-                batch, key=key, seq=seq_col, how=dedup, first_writer_wins=fww
-            )
-            new_files, summary = None, {"operation": "merge-empty"}
-            if affected:
-                summary["operation"] = "merge"
-                new_files, replace, summary["files_kept"] = _rewrite_buckets(
-                    spark, table, snap, deduped, res, affected, key_bounds,
-                    resolve, conflict, on_rejected, op_col, seq_col,
-                )
     # an empty batch commits too: its epoch is recorded in the manifest
     summary["epoch"] = epoch
     if res.buckets_touched:
@@ -658,11 +611,10 @@ def _append_rows(
     second, grouped query for its offsets — after the write, so the
     lineage offsets stay exact.
 
-    The in-batch dedup runs behind one ``repartition(n_buckets, key)``:
-    partition id == bucket id (the same Murmur3 as ``bucket_expr``), the
-    dedup needs no exchange of its own, and each write task streams one
-    bucket directory — one file per bucket per commit, in the caller's
-    session or a ``foreachBatch`` one alike. A batch taken as it is
+    The in-batch dedup runs behind one ``repartition(n_buckets, key)``
+    (see :meth:`LakeTable.write_files`): the dedup needs no exchange of
+    its own, and the write lands one file per bucket per commit, in the
+    caller's session or a ``foreachBatch`` one alike. A batch taken as it is
     (``dedup_how='none'``, ``already_deduped``) stays exchange-free."""
     from nebula_spark.cdc.dedup import lww_dedup  # lazy: avoids lake<->cdc cycle
 
@@ -691,20 +643,17 @@ def _append_rows(
             key=key, seq=seq_col, how=dedup, first_writer_wins=fww,
         )
     rows = table.bucket_of(_as_table_rows(rows, snap, op_col, seq_col), snap)
-    commit_dir = table.new_commit_dir()
-    rows.write.partitionBy("_bucket").mode("append").parquet(commit_dir)
     # map-only appends (dedup skipped, caller did not pre-dedup) write
     # files that may hold several versions of a key — mark them so the
     # read fold never plain-scans them
-    new_files = LakeTable.list_written_files(
-        commit_dir, key_unique=already_deduped or dedup is not None, key_col=key
+    new_files = table.write_files(
+        rows, key_col=key, key_unique=already_deduped or dedup is not None
     )
     if not new_files:
         # every event writes a row (a delete its tombstone), so no file
         # means an empty batch: nothing to count, and no metrics to read
         # (Spark reports none when its adaptive plan drops the empty
         # input stage)
-        shutil.rmtree(commit_dir, ignore_errors=True)
         return new_files
     m = obs.get
     res.events_in = int(m["n"])
@@ -763,7 +712,7 @@ def _rewrite_buckets(
         # different set.
         live = (
             table.read(
-                spark,
+                bucket_session(spark, pin.n_buckets),
                 buckets=affected,
                 include_internal=True,
                 exclude_paths=pruned,
@@ -801,13 +750,11 @@ def _rewrite_buckets(
             exclude_paths=pruned,
             target_version=pin,
         )
-        commit_dir = table.new_commit_dir()
         # NO repartition before the write: the resolve plans leave data
-        # hash-partitioned by key (or file-partitioned per bucket), and
-        # bucket_expr matches Spark's shuffle hash, so tasks naturally
-        # hold few buckets each. partitionBy splits the dirs; compaction
-        # consolidates stragglers.
-        merged.write.partitionBy("_bucket").mode("append").parquet(commit_dir)
+        # hash-partitioned by key at the table's width (or
+        # file-partitioned per bucket), so tasks hold few buckets each;
+        # compaction consolidates stragglers
+        new_files = table.write_files(merged, key_col=key)
     finally:
         if needs_persist:
             deduped.unpersist()
@@ -828,5 +775,4 @@ def _rewrite_buckets(
                 for b in affected
             },
         }
-    new_files = LakeTable.list_written_files(commit_dir, key_col=key)
     return new_files, replace, sum(len(v) for v in pruned.values())

@@ -16,8 +16,9 @@ Iceberg-shaped, Spark-first:
   it. Readers always see a consistent version; time travel = read an
   older snapshot.
 - **Bucket layout**: data files are hash-bucketed on the merge key
-  (``pmod(hash(key), n_buckets)``, Spark's Murmur3 — the same idea as
-  Iceberg's ``bucket(N, key)`` partition transform). A change batch touching K
+  (:func:`bucket_expr`: Spark's Murmur3 ``hash(key)`` modulo
+  n_buckets — the same idea as Iceberg's ``bucket(N, key)`` partition
+  transform). A change batch touching K
   buckets rewrites only those K buckets (copy-on-write), so MERGE cost
   scales with the touched fraction, not table size. At 100 TB you run
   n_buckets=4096+; tests use 16.
@@ -51,8 +52,11 @@ import json
 import math
 import os
 import re
+import shutil
+import threading
 import time
 import uuid
+import weakref
 from dataclasses import dataclass
 from typing import Iterable
 
@@ -78,6 +82,16 @@ def _tmp_path(path: str) -> str:
     file."""
     d, name = os.path.split(path)
     return os.path.join(d, f".{name}{TMP_MARK}{uuid.uuid4().hex[:12]}")
+
+
+def published_versions(meta: str) -> list[int]:
+    """The versions whose snapshot is published in meta dir ``meta``,
+    ascending (temp files are hidden, so never counted)."""
+    try:
+        names = os.listdir(meta)
+    except FileNotFoundError:
+        return []
+    return sorted(int(f[5:17]) for f in names if f.startswith("snap-"))
 
 
 def segment_width(n_buckets: int) -> int:
@@ -142,17 +156,51 @@ def type_from_ddl(ddl: str) -> T.DataType:
 def bucket_expr(key_col: str, n_buckets: int):
     """Deterministic bucket id for a key, mirroring Iceberg's bucket
     transform. Uses Spark's Murmur3 `hash` — the SAME function
-    HashPartitioning uses — so when a merge's shuffle partition count
-    equals n_buckets, every shuffle output partition holds exactly one
-    bucket and the pre-write repartition exchange disappears. Built as
+    HashPartitioning uses — so a shuffle on the key at width n_buckets
+    puts exactly one bucket in each partition and the write needs no
+    repartition exchange of its own. Every copy-on-write merge plans at
+    that width, at any core count (:func:`bucket_session`). Built as
     SQL text: one ``F.expr`` instead of five Column calls, each a py4j
     round trip."""
     return F.expr(f"pmod(hash({_q(key_col)}), {int(n_buckets)})")
 
 
+_bucket_sessions: "weakref.WeakKeyDictionary[SparkSession, dict[int, SparkSession]]" = (
+    weakref.WeakKeyDictionary()
+)
+_bucket_sessions_lock = threading.Lock()
+
+
+def bucket_session(spark: SparkSession, n_buckets: int) -> SparkSession:
+    """A session that shuffles at a table's width: the table, not the
+    caller's session, decides how rows reach the writers (Iceberg's
+    ``write.distribution-mode=hash``). A plan whose left-most frame was
+    read through it runs every exchange at ``n_buckets`` partitions, so
+    with :func:`bucket_expr` each partition holds one bucket and each
+    write task streams one bucket directory. The width is the table's
+    declared layout (4096+ buckets at 100 TB), not the core count; AQE
+    still coalesces undersized partitions when a small batch meets a
+    wide table.
+
+    A clone of ``spark`` (``cloneSession`` keeps its runtime SQL conf;
+    ``newSession`` would fall back to the builder's), made once per
+    (``spark``, ``n_buckets``) and cached: the caller's conf is copied
+    when the clone is first made, and the width is set then and never
+    changed. ``spark``'s own conf is never written, so writers on one
+    session, from any thread, cannot change each other's width."""
+    with _bucket_sessions_lock:
+        by_width = _bucket_sessions.setdefault(spark, {})
+        s = by_width.get(n_buckets)
+        if s is None:
+            s = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+            s.conf.set("spark.sql.shuffle.partitions", str(int(n_buckets)))
+            by_width[n_buckets] = s
+        return s
+
+
 # ---- driver-side Murmur3 x86_32 (Spark's `hash()`, seed 42) ----
 # A point lookup used to spend a whole Spark job (createDataFrame +
-# collect) just to evaluate pmod(hash(key), n) for a handful of keys —
+# collect) just to evaluate bucket_expr for a handful of keys —
 # job scheduling dominated the serving latency. These mirror Spark's
 # Murmur3_x86_32 bit-for-bit for the key types the engine stores, so
 # bucket assignment is a few microseconds of driver Python and lookup
@@ -517,12 +565,16 @@ class LakeTable:
         """The newest published version. ``HEAD`` is a hint written after
         each publish; a crash between the two (or a slower committer's
         late HEAD write) leaves newer snapshots ahead of it, which this
-        rolls forward over — from ``snap-0`` when no HEAD was written."""
+        rolls forward over — from the lowest published snapshot when
+        HEAD is missing or names an expired one (the only case that
+        lists the meta dir)."""
         try:
             with open(self._meta(HEAD_FILE)) as f:
                 v = int(f.read().strip())
         except FileNotFoundError:
-            v = 0
+            v = None
+        if v is None or not os.path.exists(self._meta(SNAP_FMT % v)):
+            v = (published_versions(self._meta()) or [0])[0]
         while os.path.exists(self._meta(SNAP_FMT % (v + 1))):
             v += 1
         return v
@@ -556,10 +608,10 @@ class LakeTable:
             raise ValueError(f"schema may not use reserved columns {INTERNAL_COLS}")
         schema = T.StructType(list(schema.fields) + INTERNAL_FIELDS)
         t = cls(root)
-        # a meta dir left without snap-0 (a crash before the first
-        # publish) is no table; a table whose snap-0 was expired still
-        # has HEAD, and publishing snap-0 refuses any other
-        if os.path.exists(t._meta(HEAD_FILE)):
+        # a meta dir without a snapshot (a crash before the first
+        # publish) is no table; any published snapshot is one, even
+        # once snap-0 is expired and HEAD lost
+        if cls.exists(root):
             raise FileExistsError(f"a LakeTable exists at {root}")
         # the segments dir is made here, so snap-0's publish makes its
         # name durable before any commit writes into it
@@ -589,12 +641,8 @@ class LakeTable:
 
     @staticmethod
     def exists(root: str) -> bool:
-        """A published ``snap-0`` makes a table; HEAD is only a hint (and
-        the one trace left once snap-0 is expired)."""
-        meta = os.path.join(root, META_DIR)
-        return os.path.exists(os.path.join(meta, SNAP_FMT % 0)) or os.path.exists(
-            os.path.join(meta, HEAD_FILE)
-        )
+        """Any published snapshot makes a table; HEAD is only a hint."""
+        return bool(published_versions(os.path.join(root, META_DIR)))
 
     def _write_snapshot(self, version: int, snap: dict) -> None:
         """Publish snapshot ``version`` (``FileExistsError`` when another
@@ -991,6 +1039,39 @@ class LakeTable:
             },
         )
 
+    def write_files(
+        self,
+        df: DataFrame,
+        *,
+        key_col: str,
+        key_unique: bool = True,
+        max_file_rows: int | None = None,
+    ) -> dict[int, list[tuple]]:
+        """Write ``df`` (carrying ``_bucket``) as one commit's data files:
+        ``partitionBy('_bucket')`` into a fresh :meth:`new_commit_dir`,
+        listed by :meth:`list_written_files` (``key_unique`` and
+        ``key_col`` as there); ``max_file_rows`` rolls a new file every
+        that many rows. An empty write leaves no dir behind.
+
+        The caller lays out the partitions. A ``repartition(n_buckets,
+        key)``, or a resolve whose exchanges ran at the table's width
+        (:func:`bucket_session`), makes partition id == bucket id —
+        HashPartitioning shares ``bucket_expr``'s Murmur3 — so each write
+        task streams exactly one bucket directory: one file per bucket
+        per commit. Hashing the ``_bucket`` VALUE instead would land
+        several buckets in some tasks and leave ~1/e of them empty."""
+        commit_dir = self.new_commit_dir()
+        writer = df.write.partitionBy("_bucket").mode("append")
+        if max_file_rows is not None:
+            writer = writer.option("maxRecordsPerFile", int(max_file_rows))
+        writer.parquet(commit_dir)
+        new_files = LakeTable.list_written_files(
+            commit_dir, key_unique=key_unique, key_col=key_col
+        )
+        if not new_files:
+            shutil.rmtree(commit_dir, ignore_errors=True)
+        return new_files
+
     def new_commit_dir(self) -> str:
         """A unique directory for this commit's data files (immutable once
         written; unreferenced dirs from failed commits are inert)."""
@@ -1140,8 +1221,9 @@ class LakeTable:
         """How many of a bucket's live files sit OUTSIDE the ideal
         key-clustered layout: missing/untyped key bounds,
         non-key-unique (map-only appends), or key-range touching/
-        overlapping another live file. Drives the in-stream compaction
-        trigger in cluster mode — a key-clustered bucket legitimately
+        overlapping another live file. A merge-on-read bucket counting 0
+        reads as a plain scan, with no fold. Drives the in-stream
+        compaction trigger in cluster mode — a key-clustered bucket legitimately
         holds many files (one per rolled key range), so counting ALL
         files would re-fire compaction every batch and churn-rewrite
         the bucket forever; files already in disjoint sorted ranges
@@ -1307,31 +1389,12 @@ class LakeTable:
             out = scan([e for es in selected.values() for e in es])
         else:
             def _plain_ok(es: list[dict]) -> bool:
-                # plain scan when every file is provably key-unique AND
-                # no key can appear in two files: a lone map-only
-                # append still holds multiple versions per key and must
-                # fold; several files may skip the fold only when their
-                # recorded key bounds are pairwise disjoint (what
-                # key-clustered compaction produces — each file owns a
-                # contiguous key range). Equal boundary values mean the
-                # boundary key may sit in both files, so the check is
-                # strict; missing bounds or cross-type bounds are never
-                # assumed disjoint.
-                if not all(e.get("key_unique", True) for e in es):
-                    return False
-                if len(es) == 1:
-                    return True
-                bounds = [(e.get("min_key"), e.get("max_key")) for e in es]
-                if any(mn is None or mx is None for mn, mx in bounds):
-                    return False
-                try:
-                    bounds.sort()
-                    return all(
-                        bounds[i][1] < bounds[i + 1][0]
-                        for i in range(len(bounds) - 1)
-                    )
-                except TypeError:
-                    return False
+                # plain scan when no key can sit in two rows: every file
+                # key-unique with strictly disjoint recorded key bounds
+                # (unclustered_count's layout), or one key-unique file
+                return self.unclustered_count(es) == 0 or (
+                    len(es) == 1 and es[0].get("key_unique", True)
+                )
 
             fold_entries = [
                 e for es in selected.values() if not _plain_ok(es) for e in es

@@ -78,7 +78,10 @@ def run_cluster_level(n_exec: int, cores: int, events: int, batches: int, workdi
             SPARK_EXECUTOR_MEMORY="6g",
             # BOTH levels shuffle into the same partition count, or the
             # comparison confounds parallelism with task sizing (small
-            # tasks drown in per-task RPC at local-cluster latencies)
+            # tasks drown in per-task RPC at local-cluster latencies).
+            # This sizes get_spark's session only; a copy-on-write
+            # merge shuffles at the table's n_buckets at every core
+            # count, and a merge-on-read one repartitions to it
             NEBULA_SHUFFLE_PARTITIONS=os.environ.get(
                 "NEBULA_SHUFFLE_PARTITIONS", "64"
             ),

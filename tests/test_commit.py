@@ -227,6 +227,50 @@ def test_create_over_empty_meta_dir_and_never_over_a_table(tmp_path):
     assert table.snapshot().version == 0
 
 
+def test_expired_table_without_head_is_still_a_table(tmp_path):
+    """Once snap-0 is expired, the published snapshots alone make the
+    table: with HEAD lost it still exists and loads at its newest
+    version, create refuses it, and the next commit lands after it."""
+    table = _table(tmp_path)
+    for i in range(4):
+        _append(table, f"/fake/f{i}.parquet")
+    expire_snapshots(table, keep_last=2)
+    os.remove(table._meta(HEAD_FILE))
+    root = str(tmp_path / "t")
+    assert LakeTable.exists(root)
+    assert LakeTable.load(root).snapshot().version == 4
+    with pytest.raises(FileExistsError):
+        _table(tmp_path)
+    assert _meta_files(table) == ["segments", SNAP_FMT % 3, SNAP_FMT % 4]
+    assert _append(table, "/fake/f4.parquet").version == 5
+    assert _paths(table.snapshot()) == [f"/fake/f{i}.parquet" for i in range(5)]
+
+
+def test_head_naming_an_expired_snapshot_is_skipped(tmp_path):
+    """A HEAD hint that lags behind expired history (a crash before two
+    HEAD writes) rolls forward from the lowest published snapshot."""
+    table = _table(tmp_path)
+    for i in range(4):
+        _append(table, f"/fake/f{i}.parquet")
+    expire_snapshots(table, keep_last=1)
+    with open(table._meta(HEAD_FILE), "w") as f:
+        f.write("1")
+    assert table.snapshot().version == 4
+
+
+def test_expire_keeps_head_snapshot(tmp_path):
+    """keep_last below 1 would delete HEAD's own snapshot: refused
+    before anything is deleted."""
+    table = _table(tmp_path)
+    _append(table, "/fake/f0.parquet")
+    before = _meta_files(table)
+    for keep in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            expire_snapshots(table, keep_last=keep)
+    assert _meta_files(table) == before
+    assert table.snapshot().version == 1
+
+
 def test_segments_dir_fsynced_once_before_snapshot_link(tmp_path, monkeypatch):
     """A commit's new segment files are made durable by one fsync of the
     segments dir, before the snapshot naming them is linked into place;

@@ -1,7 +1,8 @@
 """The environment variables the library reads, pinned: the deployment
-settings in ``session.py`` and the scaling-run shuffle pin in
-``lake/merge.py``. A tuning variable read anywhere else in
-``nebula_spark/`` fails here; pass it as an argument instead."""
+settings in ``session.py``. A tuning variable read anywhere else in
+``nebula_spark/`` fails here; pass it as an argument instead. Likewise
+the library's one runtime conf write, pinned: the width of a fresh
+``bucket_session`` clone, which no caller's session ever sees."""
 
 import ast
 import pathlib
@@ -17,7 +18,6 @@ PINNED = {
     ("session.py", "SPARK_MASTER"),
     ("session.py", "SPARK_DRIVER_MEMORY"),
     ("session.py", "SPARK_EXECUTOR_MEMORY"),
-    ("lake/merge.py", "NEBULA_SHUFFLE_PARTITIONS"),
 }
 
 
@@ -68,3 +68,32 @@ def test_library_environment_reads_are_pinned():
         rel = path.relative_to(root).as_posix()
         found.update((rel, name) for name in _environ_reads(tree))
     assert found == PINNED
+
+
+def _conf_sets(tree: ast.AST):
+    """The innermost enclosing function (``<module>`` at top level) of
+    every ``<x>.conf.set(...)`` call."""
+    parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "set"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+        ):
+            continue
+        p = parent.get(node)
+        while p is not None and not isinstance(p, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            p = parent.get(p)
+        yield "<module>" if p is None else p.name
+
+
+def test_library_conf_writes_are_pinned():
+    root = pathlib.Path(nebula_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(root).as_posix()
+        found += [(rel, fn) for fn in _conf_sets(tree)]
+    assert found == [("lake/table.py", "bucket_session")]

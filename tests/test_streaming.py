@@ -214,30 +214,21 @@ def test_stream_auto_compaction_bounds_file_counts(spark, tmp_path):
     log = gen_binlog(spark, 6000, 100, seed=73)
     write_binlog_chunks(log, binlog_dir, n_chunks=4, files_per_chunk=1)
 
-    table = LakeTable.create(str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=2)
-    # pin a shuffle width ≫ buckets (NEBULA_SHUFFLE_PARTITIONS disables
-    # the merge's bucket-aligned width) so each merge writes several
-    # files per bucket dir — bucket-aligned merges emit ONE file per
-    # bucket and a plain CoW stream would never fragment; the
-    # fragmentation this test exercises still arises from pruned
-    # (generational) merges and MoR appends. AQE's small-output
-    # coalescing would hide it at this toy size.
-    import os as _os
-
-    _os.environ["NEBULA_SHUFFLE_PARTITIONS"] = "16"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        m = run_stream(
-            spark,
-            table,
-            binlog_dir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            max_files_per_trigger=1,
-            auto_compact_files=2,
-        )
-    finally:
-        del _os.environ["NEBULA_SHUFFLE_PARTITIONS"]
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    # merge-on-read: every batch appends one file per touched bucket,
+    # so the stream fragments its buckets by design (a bucket-aligned
+    # CoW merge rewrites each touched bucket to one file)
+    table = LakeTable.create(
+        str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=2,
+        properties={"merge_mode": "mor"},
+    )
+    m = run_stream(
+        spark,
+        table,
+        binlog_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+        auto_compact_files=2,
+    )
     assert m.get("compactions", 0) >= 1
     assert all(len(fs) <= 2 for fs in table.snapshot().files.values())
     oracle = replay_final_state(os.path.join(binlog_dir, "*", "*.parquet"))
@@ -254,31 +245,22 @@ def test_stream_clustered_auto_compaction(spark, tmp_path):
     log = gen_binlog(spark, 6000, 100, seed=74)
     write_binlog_chunks(log, binlog_dir, n_chunks=4, files_per_chunk=1)
 
+    # merge-on-read appends fragment the buckets (see
+    # test_stream_auto_compaction_bounds_file_counts)
     table = LakeTable.create(
-        str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=2
+        str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=2,
+        properties={"merge_mode": "mor"},
     )
-    # pin a shuffle width ≫ buckets so each merge fragments its bucket
-    # dirs (bucket-aligned merges emit one file per bucket and would
-    # never trip the trigger at this toy size) — see the note in
-    # test_stream_auto_compaction_bounds_file_counts
-    import os as _os
-
-    _os.environ["NEBULA_SHUFFLE_PARTITIONS"] = "16"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        m = run_stream(
-            spark,
-            table,
-            binlog_dir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            max_files_per_trigger=1,
-            auto_compact_files=2,
-            compact_cluster_by_key=True,
-            compact_max_file_rows=20,
-        )
-    finally:
-        del _os.environ["NEBULA_SHUFFLE_PARTITIONS"]
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    m = run_stream(
+        spark,
+        table,
+        binlog_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+        auto_compact_files=2,
+        compact_cluster_by_key=True,
+        compact_max_file_rows=20,
+    )
     assert m.get("compactions", 0) >= 1
     snap = table.snapshot()
     # a clustered bucket may hold MANY files, but the loose count is
