@@ -17,14 +17,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
+from nebula_spark.cdc.dlq import REASON_CONFLICT, REASON_MALFORMED, quarantine
 from nebula_spark.cdc.filters import EventFilter
 from nebula_spark.cdc.transforms import Transform
 from nebula_spark.evolution import evolve_schema
+from nebula_spark.evolution.schema_evolution import RENAME_FIELD
 from nebula_spark.functions.dedupe import _q
 from nebula_spark.lake.merge import MergeResult, merge_into
-from nebula_spark.lake.table import LakeTable
+from nebula_spark.lake.table import INTERNAL_COLS, INTERNAL_FIELDS, LakeTable
 
 # columns that belong to the change-envelope, not the table payload
 ENVELOPE_COLS = ("op", "op_sequence", "ts", "txn_id", "partition_id", "schema_version")
@@ -33,8 +35,6 @@ ENVELOPE_COLS = ("op", "op_sequence", "ts", "txn_id", "partition_id", "schema_ve
 @dataclass
 class ApplyResult:
     merge: MergeResult
-    events_in: int = 0
-    events_filtered: int = 0
     events_dlq: int = 0
     schema_changes: int = 0
 
@@ -62,7 +62,6 @@ def apply_changes(
     conflict: str = "last_write_wins",
     dlq_table: LakeTable | None = None,
     dlq_ns: str = "",
-    count_inputs: bool = False,
 ) -> ApplyResult:
     """Apply one change batch to the lake table, exactly-once.
 
@@ -71,9 +70,6 @@ def apply_changes(
     that evolves the schema pins ``Snapshot.evolve``'s next schema, so
     the merge reads and writes through it and its one commit carries
     the schema, renames, files and epoch together.
-
-    ``count_inputs`` adds two cheap aggregate passes for the filtered/
-    input counters (off by default — metrics come from the merge).
 
     ``dlq_ns``: namespace prefix for this call's DLQ manifest epochs and
     event keys. REQUIRED when several targets share one DLQ table under
@@ -96,15 +92,10 @@ def apply_changes(
     # before the data path (reference reloads schemas on QueryEvent,
     # pkg/cdc/mysql.go:701-723)
     df = batch.filter("op <> 'DDL'") if "op" in batch.columns else batch
-    if count_inputs:
-        res.events_in = df.count()
     if event_filter is not None:
         df = event_filter.apply(df)
     for t in transforms or ():
         df = t(df)
-    if count_inputs:
-        kept = df.count()
-        res.events_filtered = res.events_in - kept
 
     # malformed events → dead-letter table instead of poisoning the merge
     # (reference DLQ: pkg/cdc/stream.go:857-959); SQL text over one
@@ -117,28 +108,13 @@ def apply_changes(
             " OR (op <> 'DELETE' AND tokens IS NULL)"
         )
     if dlq_table is not None:
-        from nebula_spark.lake.merge import append_into
-
-        # key carries the ':malformed' reason stamp so reprocess_dlq can
-        # select this class by INCLUSION like the other two (the keys
-        # used to be bare epoch:op_sequence, reachable only by exclusion)
-        dlq_rows = df.filter(bad).withColumn(
-            "event_key",
-            F.concat_ws(
-                ":",
-                F.lit(f"{dlq_ns}{epoch}"),
-                F.col("op_sequence"),
-                F.lit("malformed"),
-            ),
-        )
-        append_into(
-            spark, dlq_table, dlq_rows, epoch=f"{dlq_ns}{epoch}", summary_op="dlq"
+        quarantine(
+            spark, dlq_table, df.filter(bad), epoch=epoch, reason=REASON_MALFORMED,
+            ns=dlq_ns,
         )
     df = df.filter(f"NOT ({bad})")
 
     # schema evolution: batch payload vs table user schema (merge-on-write)
-    from nebula_spark.lake.table import INTERNAL_COLS, INTERNAL_FIELDS
-
     bad_cols = [c for c in schema.fieldNames() if c in INTERNAL_COLS]
     if bad_cols:
         raise ValueError(f"batch uses reserved columns {bad_cols}")
@@ -149,8 +125,6 @@ def apply_changes(
         renames=renames,
     )
     if changes:
-        from nebula_spark.evolution.schema_evolution import RENAME_FIELD
-
         applied_renames = {
             c.field: c.to_type for c in changes if c.kind == RENAME_FIELD
         }
@@ -163,22 +137,11 @@ def apply_changes(
 
     def _route_rejected(rej_df: DataFrame) -> None:
         # conflict='reject': surfaced events go to the dead-letter
-        # table with a reason-stamped key (ingest QA reads them there).
-        # Runs BEFORE the merge commit (see merge_into's on_rejected
-        # contract) so a crash can never apply the epoch yet lose its
-        # conflict records; the f'c{epoch}' manifest key keeps the
-        # append idempotent across retries (and distinct from the
-        # malformed-event append above, which recorded `epoch`).
-        from nebula_spark.lake.merge import append_into
-
-        rej = rej_df.withColumn(
-            "event_key",
-            F.concat_ws(
-                ":", F.lit(f"{dlq_ns}{epoch}"), F.col("op_sequence"), F.lit("conflict")
-            ),
-        )
-        append_into(
-            spark, dlq_table, rej, epoch=f"{dlq_ns}c{epoch}", summary_op="dlq-conflict"
+        # table (ingest QA reads them there). Runs BEFORE the merge
+        # commit (see merge_into's on_rejected contract) so a crash can
+        # never apply the epoch yet lose its conflict records.
+        quarantine(
+            spark, dlq_table, rej_df, epoch=epoch, reason=REASON_CONFLICT, ns=dlq_ns
         )
 
     res.merge = merge_into(

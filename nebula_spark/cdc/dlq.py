@@ -1,14 +1,17 @@
-"""Dead-letter reprocessing — the operational return path for the
-retry-then-dead-letter loop.
+"""The dead-letter table — the reference's retry-then-dead-letter loop
+(pkg/cdc/stream.go:694-738, 857-959) at micro-batch granularity: the
+reference dead-letters with the intent that an operator fixes the cause
+and replays.
 
-The ingest side quarantines three classes of events into the DLQ table
-(reason-stamped ``event_key``): malformed rows, conflict-rejected rows,
-and whole poison batches that exhausted their retries
-(/root/reference/pkg/cdc/stream.go:694-738, 857-959 — the reference
-dead-letters with the intent that an operator fixes the cause and
-replays). ``reprocess_dlq`` is that replay: select live DLQ events by
-reason, re-apply them to the target table through the normal
-apply_changes path, then tombstone them in the DLQ — all exactly-once.
+``quarantine`` is the one writer of a DLQ record, for each of the four
+reason classes: malformed rows, conflict-rejected rows, whole poison
+batches that exhausted their retries, and unrouted events of a
+multi-table stream. A record is the event row plus its ``event_key``,
+``<epoch>:<op_sequence>:<reason>``, the DLQ's merge key.
+
+``reprocess_dlq`` is the replay: select live DLQ events by reason,
+re-apply them to the target table through the normal apply_changes
+path, then tombstone them in the DLQ — all exactly-once.
 
 Exactly-once bookkeeping rides both tables' commit manifests, keyed by
 the DLQ snapshot version the batch was read from:
@@ -25,13 +28,48 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from nebula_spark.cdc.apply import ApplyResult, apply_changes
+from nebula_spark.lake.merge import append_into, merge_into
 from nebula_spark.lake.table import LakeTable
 
-# quarantine reason classes (substrings of event_key)
+# quarantine reason classes: the last field of event_key starts with one
 REASON_FAILED = "failed-"      # poison batch, retries exhausted
 REASON_CONFLICT = "conflict"   # conflict='reject' surfaced events
 REASON_MALFORMED = "malformed"  # null key / unknown op / null payload
+REASON_UNROUTED = "unrouted"   # multi-table event matching no route
+
+# reason class -> (tag of its DLQ manifest epoch, commit summary op).
+# The tag keeps each class's append idempotent per batch on its own: a
+# batch's malformed rows and its conflict rows are two appends.
+_RECORD = {
+    REASON_MALFORMED: ("", "dlq"),
+    REASON_CONFLICT: ("c", "dlq-conflict"),
+    REASON_FAILED: ("f", "dlq-failed"),
+    REASON_UNROUTED: ("u", "dlq-unrouted"),
+}
+
+
+def quarantine(
+    spark: SparkSession,
+    dlq_table: LakeTable,
+    rows: DataFrame,
+    *,
+    epoch,
+    reason: str,
+    ns: str = "",
+) -> int:
+    """Append ``rows`` to the DLQ keyed ``<ns><epoch>:<op_sequence>:<reason>``,
+    exactly-once per batch: the append records ``<ns><tag><epoch>`` on
+    the DLQ manifest, the tag set by the reason class. ``ns`` separates
+    the targets that share one DLQ under one epoch sequence (see
+    ``apply_changes``' ``dlq_ns``). Returns ``append_into``'s version."""
+    tag, summary_op = next(v for c, v in _RECORD.items() if reason.startswith(c))
+    keyed = rows.withColumn(
+        "event_key",
+        F.concat_ws(":", F.lit(f"{ns}{epoch}"), F.col("op_sequence"), F.lit(reason)),
+    )
+    return append_into(
+        spark, dlq_table, keyed, epoch=f"{ns}{tag}{epoch}", summary_op=summary_op
+    )
 
 
 def reprocess_dlq(
@@ -42,11 +80,15 @@ def reprocess_dlq(
     reasons: tuple[str, ...] = (REASON_FAILED,),
     **apply_kwargs,
 ) -> dict:
-    """Re-apply quarantined events matching any of ``reasons`` to
-    ``target`` and tombstone them in the DLQ. Returns counts + the
-    epochs used. ``apply_kwargs`` pass through to apply_changes (e.g. a
-    corrected event_filter/transforms — the reason the batch poisoned
-    in the first place is usually fixed by one of these)."""
+    """Re-apply quarantined events whose reason starts with any of
+    ``reasons`` to ``target`` and tombstone them in the DLQ. Returns
+    counts + the epochs used. ``apply_kwargs`` pass through to
+    apply_changes (e.g. a corrected event_filter/transforms — the reason
+    the batch poisoned in the first place is usually fixed by one of
+    these)."""
+    # lazy: apply_changes quarantines through this module
+    from nebula_spark.cdc.apply import apply_changes
+
     if apply_kwargs.get("conflict") == "reject":
         raise ValueError(
             "reprocessing with conflict='reject' would re-reject the very "
@@ -54,9 +96,12 @@ def reprocess_dlq(
             "be lost; replay with last_write_wins/first_write_wins/merge"
         )
     v = dlq_table.snapshot().version
+    # the reason is the key's last field: a route or epoch that happens
+    # to contain a reason's name selects nothing
+    reason = F.substring_index("event_key", ":", -1)
     cond = None
     for r in reasons:
-        c = F.col("event_key").contains(r)
+        c = reason.startswith(r)
         cond = c if cond is None else (cond | c)
     rows = dlq_table.read(spark).filter(cond)
     n = rows.count()
@@ -70,15 +115,13 @@ def reprocess_dlq(
     # dropped while their originals get tombstoned below. (A later
     # REASON_MALFORMED replay picks them up again — intended: they stay
     # quarantined-and-replayable until a corrective transform fixes them.)
-    res: ApplyResult = apply_changes(
+    res = apply_changes(
         spark, target, batch, epoch=f"rp{v}", dlq_table=dlq_table, **apply_kwargs
     )
 
     # tombstone the replayed events in the DLQ (op_sequence 0 beats the
     # append's _seq=-1); event_key is the DLQ merge key, so this is a
     # plain keyed DELETE batch through the normal merge
-    from nebula_spark.lake.merge import merge_into
-
     tomb = rows.select(
         F.col("event_key"),
         F.lit("DELETE").alias("op"),

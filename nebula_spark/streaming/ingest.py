@@ -20,15 +20,17 @@ from the first unconsumed file; already-applied epochs are no-ops.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, functions as F
 
-from nebula_spark.cdc.apply import apply_changes
+from nebula_spark.cdc.apply import ENVELOPE_COLS, apply_changes
 from nebula_spark.cdc.binlog import BINLOG_SCHEMA, MULTI_BINLOG_SCHEMA
+from nebula_spark.cdc.dlq import REASON_FAILED, REASON_UNROUTED, quarantine
 from nebula_spark.cdc.filters import EventFilter
 from nebula_spark.cdc.transforms import Transform
 from nebula_spark.lake.table import LakeTable
+from nebula_spark.metrics import IngestMetrics
 
 
 class _TriggerResize(Exception):
@@ -79,6 +81,16 @@ class _Trigger:
             )
             raise _TriggerResize
 
+    def redelivered(self, batch_id: int) -> bool:
+        """True, once, for the batch a resize restart redelivers: its
+        work was counted when it first committed, and counting it again
+        would overstate the batches by one per resize. (A genuine
+        crash-redelivery still counts.)"""
+        if self.resized_batch != batch_id:
+            return False
+        self.resized_batch = None
+        return True
+
     def run_available_now(self, build_writer) -> None:
         """Drain the backlog, restarting after each resize."""
         while True:
@@ -97,6 +109,23 @@ class _Trigger:
         return {"trigger_resizes": self.resizes, "final_trigger": self.cur}
 
 
+def _retry(fn, retry_max: int, retry_backoff_s: float, m: IngestMetrics):
+    """``fn()``, retried ``retry_max`` times after a failure, each
+    retry counted in ``m.retries``; the wait starts at
+    ``retry_backoff_s`` and doubles per retry. The last failure
+    propagates."""
+    attempt = 0
+    while True:
+        try:
+            return fn()
+        except Exception:
+            attempt += 1
+            if attempt > retry_max:
+                raise
+            m.retries += 1
+            time.sleep(retry_backoff_s * 2 ** (attempt - 1))
+
+
 def run_stream(
     spark: SparkSession,
     table: LakeTable,
@@ -112,7 +141,6 @@ def run_stream(
     dlq_table: LakeTable | None = None,
     available_now: bool = True,
     schema=None,
-    metrics_path: str | None = None,
     retry_max: int = 3,
     retry_backoff_s: float = 1.0,
     auto_compact_files: int | None = None,
@@ -123,8 +151,9 @@ def run_stream(
     adaptive_max_trigger: int = 64,
 ) -> dict:
     """Run the ingest stream until the backlog is drained
-    (``available_now``) or indefinitely. Returns throughput metrics
-    built from the streaming progress + the table manifest.
+    (``available_now``) or indefinitely. Returns the stream's
+    ``IngestMetrics`` counters, flat, with its wall time and the final
+    snapshot's version and lineage offsets.
 
     ``adaptive_target_batch_s`` turns on adaptive trigger sizing — the
     reference's backpressure controller (buffer-utilization thresholds,
@@ -168,82 +197,58 @@ def run_stream(
     semantics under first-write-wins are unchanged (FWW tombstones
     beat any later seq and must persist — compaction keeps them).
 
-    A failing micro-batch is retried ``retry_max`` times with
-    exponential backoff (``retry_backoff_s * 2^attempt``); after the
-    last attempt its events are quarantined to the DLQ table (when one
-    is configured) and the stream continues — the reference's
-    retry-then-dead-letter loop (pkg/cdc/stream.go:694-738) at
-    micro-batch granularity. Without a DLQ the final failure propagates
-    (fail-stop)."""
-    from nebula_spark.metrics import IngestMetrics
-
-    ingest_metrics = IngestMetrics()
-    metrics = {"batches": 0, "skipped": 0, "events": 0, "retries": 0, "batches_dlq": 0}
+    A failing micro-batch is retried ``retry_max`` times with exponential
+    backoff from ``retry_backoff_s``; after the last attempt its events
+    are quarantined to the DLQ table (when one is configured), the
+    target records the batch's epoch, and the stream continues — the
+    reference's retry-then-dead-letter loop (pkg/cdc/stream.go:694-738)
+    at micro-batch granularity. Without a DLQ the final failure
+    propagates (fail-stop)."""
+    metrics = IngestMetrics()
     trigger = _Trigger(
         max_files_per_trigger, adaptive_target_batch_s, adaptive_max_trigger,
         available_now,
     )
 
-    def apply_once(batch_df, batch_id: int):
-        return apply_changes(
-            spark,
-            table,
-            batch_df,
-            epoch=batch_id,
-            event_filter=event_filter,
-            evolution_policy=evolution_policy,
-            renames=renames,
-            conflict=conflict,
-            dedup_how=dedup_how,
-            dlq_table=dlq_table,
-        )
-
     def apply_batch(batch_df, batch_id: int):
         t_batch = time.time()
-        attempt = 0
-        while True:
-            try:
-                res = apply_once(batch_df, batch_id)
-                break
-            except Exception as e:
-                attempt += 1
-                if attempt > retry_max:
-                    if dlq_table is None:
-                        raise
-                    # quarantine the whole batch; idempotent per epoch
-                    from pyspark.sql import functions as F
-
-                    from nebula_spark.lake.merge import append_into
-
-                    bad = batch_df.withColumn(
-                        "event_key",
-                        F.concat_ws(
-                            ":",
-                            F.lit(str(batch_id)),
-                            F.col("op_sequence"),
-                            F.lit(f"failed-{type(e).__name__}"),
-                        ),
-                    )
-                    append_into(
-                        spark, dlq_table, bad, epoch=f"f{batch_id}", summary_op="dlq-failed"
-                    )
-                    metrics["batches_dlq"] += 1
-                    return
-                metrics["retries"] += 1
-                time.sleep(retry_backoff_s * (2 ** (attempt - 1)))
-        if res.merge.skipped and trigger.resized_batch == batch_id:
-            # redelivery caused by our own resize restart: the work was
-            # already counted when this batch originally committed —
-            # recounting would overstate batches/skipped by one per
-            # resize. (A genuine crash-redelivery skip still counts.)
-            trigger.resized_batch = None
+        try:
+            res = _retry(
+                lambda: apply_changes(
+                    spark,
+                    table,
+                    batch_df,
+                    epoch=batch_id,
+                    event_filter=event_filter,
+                    evolution_policy=evolution_policy,
+                    renames=renames,
+                    conflict=conflict,
+                    dedup_how=dedup_how,
+                    dlq_table=dlq_table,
+                ),
+                retry_max, retry_backoff_s, metrics,
+            )
+        except Exception as e:
+            if dlq_table is None:
+                raise
+            quarantine(
+                spark, dlq_table, batch_df, epoch=batch_id,
+                reason=f"{REASON_FAILED}{type(e).__name__}",
+            )
+            # the target records the epoch too (metadata only): the
+            # numeric epoch fold stops at a gap, and a redelivery now
+            # skips. No partitions: the low-water mark stays below the
+            # quarantined events.
+            table.commit(
+                table.snapshot(),
+                applied_update={str(batch_id): {"partitions": {}, "events": 0}},
+                summary={"operation": "quarantine", "epoch": batch_id},
+            )
+            metrics.batches_dlq += 1
             return
-        ingest_metrics.record(res)
-        metrics["batches"] += 1
-        if res.merge.skipped:
-            metrics["skipped"] += 1
-        else:
-            metrics["events"] += res.merge.events_in
+        if res.merge.skipped and trigger.redelivered(batch_id):
+            return
+        metrics.record(res)
         if auto_compact_files and not res.merge.skipped:
             from nebula_spark.lake.maintenance import compact
 
@@ -251,10 +256,8 @@ def run_stream(
             # layout — a clustered bucket holds many disjoint files by
             # design, and recounting them would re-fire the compaction
             # every batch (see LakeTable.unclustered_count)
-            from nebula_spark.lake.table import LakeTable as _LT
-
             measure = (
-                _LT.unclustered_count if compact_cluster_by_key else len
+                LakeTable.unclustered_count if compact_cluster_by_key else len
             )
             # only buckets the batch just touched can have grown — scan
             # those in the batch's own commit, not the whole table
@@ -285,9 +288,7 @@ def run_stream(
                     cluster_by_key=compact_cluster_by_key,
                     max_file_rows=compact_max_file_rows,
                 )
-                metrics["compactions"] = metrics.get("compactions", 0) + 1
-        if metrics_path:
-            ingest_metrics.dump(metrics_path, table)
+                metrics.compactions += 1
         if not res.merge.skipped:
             trigger.after_batch(batch_id, time.time() - t_batch)
 
@@ -303,13 +304,15 @@ def run_stream(
     trigger.run_available_now(build_writer)
     dt = time.time() - t0
     snap = table.snapshot()
+    counts = asdict(metrics)
+    if not metrics.compactions:
+        del counts["compactions"]  # reported only once one ran
     return {
-        **metrics,
+        **counts,
         "seconds": round(dt, 2),
-        "events_per_sec": round(metrics["events"] / dt, 1) if dt > 0 else None,
+        "events_per_sec": round(metrics.events / dt, 1) if dt > 0 else None,
         "snapshot_version": snap.version,
         "lineage_offsets": snap.partition_offsets(),
-        "detail": ingest_metrics.snapshot(),
         **trigger.report(),
     }
 
@@ -384,115 +387,90 @@ def run_multi_stream(
     (reason-stamped ``unrouted``) when one is configured, else are
     dropped and counted.
 
+    A failing fan-out is retried like ``run_stream``'s micro-batch;
+    after the last retry the failure propagates.
+
     ``adaptive_target_batch_s``: same adaptive trigger sizing as
     run_stream — the decision is made after EVERY route's table commit
     landed, so the restart redelivers a batch in which each per-table
     epoch manifest-skips (exactly-once per table preserved)."""
-    from pyspark.sql import functions as F
-
     routes = {
         name: r if isinstance(r, TableRoute) else TableRoute(table=r)
         for name, r in routes.items()
     }
-    metrics: dict = {
-        "batches": 0,
-        "retries": 0,
-        "events_unrouted": 0,
-        "tables": {name: {"batches": 0, "skipped": 0, "events": 0} for name in routes},
-    }
+    # the fan-out's batches and retries; per-table counts in ``tables``
+    fanout = IngestMetrics()
+    tables = {name: IngestMetrics() for name in routes}
+    unrouted = 0
     trigger = _Trigger(
         max_files_per_trigger, adaptive_target_batch_s, adaptive_max_trigger,
         available_now,
     )
 
+    def fan_out(batch_df, batch_id: int, recount: bool) -> bool:
+        """Apply every route's share of the batch; True when any table
+        applied (rather than manifest-skipped) it."""
+        nonlocal unrouted
+        applied_any = False
+        # NULL-safe: ~isin(NULL) is NULL and would silently drop a
+        # null-routed event from BOTH sides
+        unknown = batch_df.filter(
+            F.col(table_col).isNull() | ~F.col(table_col).isin(list(routes))
+        )
+        n_unknown = unknown.count()
+        if n_unknown:
+            if recount:
+                unrouted += n_unknown
+            if dlq_table is not None:
+                quarantine(
+                    spark, dlq_table, unknown, epoch=batch_id, reason=REASON_UNROUTED
+                )
+        for name, route in routes.items():
+            sub = batch_df.filter(F.col(table_col) == name).drop(table_col)
+            if route.columns is not None:
+                keep = [
+                    c for c in sub.columns if c in route.columns or c in ENVELOPE_COLS
+                ]
+                sub = sub.select(*keep)
+            res = apply_changes(
+                spark,
+                route.table,
+                sub,
+                epoch=batch_id,
+                event_filter=route.event_filter,
+                transforms=route.transforms,
+                evolution_policy=route.evolution_policy,
+                renames=route.renames,
+                conflict=route.conflict,
+                dlq_table=dlq_table,
+                # namespace the shared DLQ's epochs per route —
+                # otherwise the first route claims epoch batch_id on the
+                # DLQ manifest and every later route's quarantined rows
+                # for this micro-batch skip as already-applied (silent
+                # loss in the safety path)
+                dlq_ns=f"{name}:",
+            )
+            if recount:
+                tables[name].record(res)
+            applied_any |= not res.merge.skipped
+        return applied_any
+
     def apply_batch(batch_df, batch_id: int):
         t_batch = time.time()
-        applied_any = False
-        attempt = 0
         # redelivery caused by our own resize restart: every route
         # manifest-skips; replay the (idempotent) fan-out but don't
-        # recount — metrics would overstate by one per route per resize
-        recount = trigger.resized_batch != batch_id
-        while True:
-            batch_df.persist()
-            try:
-                known = list(routes)
-                # NULL-safe: ~isin(NULL) is NULL and would silently
-                # drop a null-routed event from BOTH sides
-                unknown = batch_df.filter(
-                    F.col(table_col).isNull() | ~F.col(table_col).isin(known)
-                )
-                n_unknown = unknown.count()
-                if n_unknown:
-                    if recount:
-                        metrics["events_unrouted"] += n_unknown
-                    if dlq_table is not None:
-                        from nebula_spark.lake.merge import append_into
-
-                        bad = unknown.withColumn(
-                            "event_key",
-                            F.concat_ws(
-                                ":",
-                                F.lit(str(batch_id)),
-                                F.col("op_sequence"),
-                                F.lit("unrouted"),
-                            ),
-                        )
-                        append_into(
-                            spark, dlq_table, bad, epoch=f"u{batch_id}",
-                            summary_op="dlq-unrouted",
-                        )
-                for name, route in routes.items():
-                    sub = batch_df.filter(F.col(table_col) == name).drop(table_col)
-                    if route.columns is not None:
-                        from nebula_spark.cdc.apply import ENVELOPE_COLS
-
-                        keep = [
-                            c
-                            for c in sub.columns
-                            if c in route.columns or c in ENVELOPE_COLS
-                        ]
-                        sub = sub.select(*keep)
-                    res = apply_changes(
-                        spark,
-                        route.table,
-                        sub,
-                        epoch=batch_id,
-                        event_filter=route.event_filter,
-                        transforms=route.transforms,
-                        evolution_policy=route.evolution_policy,
-                        renames=route.renames,
-                        conflict=route.conflict,
-                        dlq_table=dlq_table,
-                        # namespace the shared DLQ's epochs per route —
-                        # otherwise the first route claims epoch batch_id
-                        # on the DLQ manifest and every later route's
-                        # quarantined rows for this micro-batch skip as
-                        # already-applied (silent loss in the safety path)
-                        dlq_ns=f"{name}:",
-                    )
-                    m = metrics["tables"][name]
-                    if recount:
-                        m["batches"] += 1
-                        if res.merge.skipped:
-                            m["skipped"] += 1
-                        else:
-                            m["events"] += res.merge.events_in
-                    if not res.merge.skipped:
-                        applied_any = True
-                if recount:
-                    metrics["batches"] += 1
-                else:
-                    trigger.resized_batch = None
-                break
-            except Exception:
-                attempt += 1
-                if attempt > retry_max:
-                    raise
-                metrics["retries"] += 1
-                time.sleep(retry_backoff_s * (2 ** (attempt - 1)))
-            finally:
-                batch_df.unpersist()
+        # recount
+        recount = not trigger.redelivered(batch_id)
+        batch_df.persist()
+        try:
+            applied_any = _retry(
+                lambda: fan_out(batch_df, batch_id, recount),
+                retry_max, retry_backoff_s, fanout,
+            )
+        finally:
+            batch_df.unpersist()
+        if recount:
+            fanout.batches += 1
         if applied_any:
             # after EVERY route committed: a resize raise makes the
             # restart redeliver this batch as N per-table manifest skips
@@ -509,10 +487,13 @@ def run_multi_stream(
         return {"query_id": str(build_writer(trigger.cur).start().id)}
     trigger.run_available_now(build_writer)
     dt = time.time() - t0
-    total_events = sum(m["events"] for m in metrics["tables"].values())
+    total_events = sum(m.events for m in tables.values())
     snaps = {name: r.table.snapshot() for name, r in routes.items()}
     return {
-        **metrics,
+        "batches": fanout.batches,
+        "retries": fanout.retries,
+        "events_unrouted": unrouted,
+        "tables": {name: asdict(m) for name, m in tables.items()},
         **trigger.report(),
         "seconds": round(dt, 2),
         "events": total_events,

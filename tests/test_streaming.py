@@ -203,6 +203,17 @@ def test_stream_quarantines_poison_batch(spark, tmp_path):
     assert table.read(spark).count() == 0  # nothing applied
     quarantined = dlq.read(spark).filter(F.col("event_key").contains("failed-"))
     assert quarantined.count() == 1000
+    # the target records every quarantined epoch: a redelivery skips the
+    # batch, and the numeric epoch fold has no gap to stop at
+    ids = {
+        int(r[0])
+        for r in quarantined.select(F.substring_index("event_key", ":", 1))
+        .distinct()
+        .collect()
+    }
+    assert len(ids) == out["batches_dlq"]
+    snap = table.snapshot()
+    assert all(snap.epoch_applied(i) for i in ids)
 
 
 def test_stream_auto_compaction_bounds_file_counts(spark, tmp_path):
@@ -411,6 +422,38 @@ def test_dlq_reprocess_malformed_by_inclusion(spark, tmp_path):
     assert reprocess_dlq(spark, dlq, table, reasons=(REASON_MALFORMED,))[
         "reprocessed"
     ] == 0
+
+
+def test_dlq_reprocess_selects_by_reason_field(spark, tmp_path):
+    """reprocess_dlq matches the reason, the key's last field, not any
+    part of the key: a malformed row of the route ``conflict_feed`` is
+    no conflict row, so a conflict replay applies only the conflict row
+    and the malformed one stays live in the DLQ."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    from nebula_spark.cdc.dlq import REASON_CONFLICT, reprocess_dlq
+    from nebula_spark.lake.merge import append_into
+
+    table = LakeTable.create(str(tmp_path / "t"), SEQUENCE_SCHEMA, "doc_id", n_buckets=2)
+    dlq_schema = T.StructType(
+        list(BINLOG_SCHEMA.fields) + [T.StructField("event_key", T.StringType(), False)]
+    )
+    dlq = LakeTable.create(str(tmp_path / "dlq"), dlq_schema, "event_key", n_buckets=2)
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (17, "INSERT", "a", [1, 2], 2, "web", ts, None, 0, 1, "conflict_feed:3:17:malformed"),
+        (18, "INSERT", "b", [3], 1, "web", ts, None, 0, 1, "orders:3:18:conflict"),
+    ]
+    append_into(spark, dlq, spark.createDataFrame(rows, dlq_schema), epoch="seeded")
+
+    out = reprocess_dlq(spark, dlq, table, reasons=(REASON_CONFLICT,))
+    assert out["reprocessed"] == 1
+    assert [r["doc_id"] for r in table.read(spark).collect()] == ["b"]
+    assert [r["event_key"] for r in dlq.read(spark).collect()] == [
+        "conflict_feed:3:17:malformed"
+    ]
 
 
 def test_adaptive_trigger_shrinks_and_grows(spark, tmp_path):
